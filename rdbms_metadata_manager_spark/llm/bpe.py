@@ -30,10 +30,9 @@ merges broadcast); the corpus agg is computed once.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-from ..memo import register_memo
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..queries.base import load
 
 TOP_MERGES = 20
@@ -112,34 +111,29 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("merge_rank")
 
 
-_TRAIN_CACHE: dict[tuple[str, str], tuple[list[tuple], DataFrame]] = register_memo({})
-
-
 def _trained(spark: SparkSession, sf_dir: str) -> tuple[list[tuple], DataFrame]:
     """(merge table, final re-segmented dictionary) — the training
-    run is memoized per (corpus, Spark app) so the merge-table face
+    run is memoized per (session, corpus) so the merge-table face
     and the encoded-vocabulary face share one loop."""
-    key = (sf_dir, spark.sparkContext.applicationId)
-    cached = _TRAIN_CACHE.get(key)
-    if cached is not None:
-        return cached
-    wc = (
-        load(spark, sf_dir, "documents")
-        .select(F.explode(F.split(F.col("text"), " ")).alias("w"))
-        .filter(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            "n",
-            F.expr("transform(sequence(1, length(w)), i -> substr(w, i, 1))").alias(
-                "arr"
-            ),
+
+    def build():
+        wc = (
+            load(spark, sf_dir, "documents")
+            .select(F.explode(F.split(F.col("text"), " ")).alias("w"))
+            .filter(F.col("w") != "")
+            .groupBy("w")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .select(
+                "n",
+                F.expr("transform(sequence(1, length(w)), i -> substr(w, i, 1))").alias(
+                    "arr"
+                ),
+            )
+            .localCheckpoint(eager=True)
         )
-        .localCheckpoint(eager=True)
-    )
-    out = _train_merges(wc)
-    _TRAIN_CACHE[key] = out
-    return out
+        return _train_merges(wc)
+
+    return memo.shared(spark, sf_dir, "bpe_trained", build)
 
 
 def _train_merges(wc: DataFrame) -> tuple[list[tuple], DataFrame]:

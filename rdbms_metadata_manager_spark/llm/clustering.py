@@ -21,10 +21,9 @@ graph diameter, and near-dup graphs are overwhelmingly tiny cliques
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-from ..memo import register_memo
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..queries.base import load
 from .dedup import _JACCARD_SQL, dedup_ngram_jaccard
 from .sampling import _split_bucket
@@ -211,33 +210,28 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CC_CACHE: dict[tuple[str, str], DataFrame] = register_memo({})
-
-
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clusters over the exact-Jaccard pair list: each doc in
     a pair gets its component's minimum doc_id as cluster keeper.
 
-    Materialized once per (corpus, Spark app), like the pair list it
+    Materialized once per (session, corpus), like the pair list it
     rides: connected_components is an ITERATIVE kernel (O(log n)
     star-contraction rounds, several jobs), and five downstream
     queries (keep_best, survivorship, size histogram, safe split,
     threshold composition) would otherwise re-run the whole fixpoint
     per call (r7 tide audit: the re-derivation was most of
     dedup_keep_best's per-call wall)."""
-    key = (sf_dir, spark.sparkContext.applicationId)
-    cached = _CC_CACHE.get(key)
-    if cached is not None:
-        return cached
-    pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    out = (
-        connected_components(pairs)
+    return memo.shared(
+        spark,
+        sf_dir,
+        "dedup_clusters",
+        lambda: connected_components(
+            dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
+        )
         .select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
         .orderBy("doc_id")
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=True),
     )
-    _CC_CACHE[key] = out
-    return out
 
 
 _CLUSTERS_SQL = f"""

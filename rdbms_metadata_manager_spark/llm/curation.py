@@ -48,10 +48,9 @@ reference has no counterpart for:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
-
-from ..memo import register_memo
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..queries.base import load_spread
 
 CHUNK_WORDS = 16
@@ -398,30 +397,21 @@ RULE_KEEP_PRED = (
 )
 
 
-_QC_CACHE: dict[tuple[str, str], DataFrame] = register_memo({})
-
-
 def quality_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classifier-inference stage of the curation pipeline: the
     weighted-feature score (vs quality_filter_gate's first-fail rule
     CASCADE — both shapes exist in real pipelines; Gopher uses rules,
     C4/fastText-style filters use a trained scorer). Integer fixed-
     point end to end, one corpus scan + the per-doc top-word rollup.
-    Materialized once per (corpus, Spark app): keep_best and the
+    Materialized once per (session, corpus): keep_best and the
     survivorship audit re-read the ≤|docs|-row score relation instead
     of re-running the full-text feature scan per call."""
-    key = (sf_dir, spark.sparkContext.applicationId)
-    cached = _QC_CACHE.get(key)
-    if cached is not None:
-        return cached
-    out = (
-        _doc_features(load_spread(spark, sf_dir, "documents", "doc_id"))
-        .withColumn(
-            "score",
-            F.expr(
-                CLF_SCORE_EXPR
-            ),
-        )
+    return memo.shared(
+        spark,
+        sf_dir,
+        "quality_classifier_scores",
+        lambda: _doc_features(load_spread(spark, sf_dir, "documents", "doc_id"))
+        .withColumn("score", F.expr(CLF_SCORE_EXPR))
         .select(
             "doc_id",
             "n_words",
@@ -431,10 +421,8 @@ def quality_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("score") >= 0).alias("accepted"),
         )
         .orderBy("doc_id")
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=True),
     )
-    _QC_CACHE[key] = out
-    return out
 
 
 _QC_SQL = f"""

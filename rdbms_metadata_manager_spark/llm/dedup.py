@@ -23,10 +23,9 @@ Scale design (the 100 TB story):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-from ..memo import register_memo
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..queries.base import load, load_spread
 from .hashing import (
     CONTROL_PAIR_JOIN,
@@ -87,9 +86,6 @@ ORDER BY keeper_doc_id
 """
 
 
-_SHINGLED_CACHE: dict[tuple[str, str], DataFrame] = register_memo({})
-
-
 def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """doc → distinct 32-bit shingle-hash array. Strings die inside
     this projection: everything downstream (signatures, joins,
@@ -100,16 +96,16 @@ def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Single-row-group parquet → one input split; load_spread fans the
     CPU-bound shingling across all cores. Materialized once per
-    (corpus, Spark app): the md5-heavy shingling feeds the capped
+    (session, corpus): the md5-heavy shingling feeds the capped
     pair index, MinHash, and the prefix-filter join."""
-    key = (sf_dir, spark.sparkContext.applicationId)
-    cached = _SHINGLED_CACHE.get(key)
-    if cached is not None:
-        return cached
-    docs = load_spread(spark, sf_dir, "documents", "doc_id")
-    out = shingle_hashes(docs).localCheckpoint(eager=True)
-    _SHINGLED_CACHE[key] = out
-    return out
+    return memo.shared(
+        spark,
+        sf_dir,
+        "shingled",
+        lambda: shingle_hashes(
+            load_spread(spark, sf_dir, "documents", "doc_id")
+        ).localCheckpoint(eager=True),
+    )
 
 
 def shingle_hashes(docs: DataFrame) -> DataFrame:
@@ -185,15 +181,12 @@ WHERE len(string_split(text, ' ')) >= 3
 """
 
 
-_PAIR_COUNTS_CACHE: dict[tuple[str, str], DataFrame] = register_memo({})
-
-
 def _capped_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The df-capped inverted-index pair pipeline SHARED by
     ``dedup_ngram_jaccard`` (symmetric metric) and
     ``dedup_containment`` (asymmetric) — one definition so the cap
     semantics, the hapax drop, and the join strategy can never drift
-    apart; materialized once per (corpus, Spark app), so the second
+    apart; materialized once per (session, corpus), so the second
     metric reads the ~10⁵-row candidate relation instead of re-running
     the posting-list self-join. Returns (doc_a, doc_b, n_common,
     n_a, n_b).
@@ -212,28 +205,25 @@ def _capped_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
       and keeps the join output co-partitioned for the pair groupBy."""
     from pyspark.sql import Window
 
-    key = (sf_dir, spark.sparkContext.applicationId)
-    cached = _PAIR_COUNTS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    sh = _shingled(spark, sf_dir)
-    ex_all = sh.select("doc_id", F.explode("hashes").alias("shingle"))
-    ex = ex_all.withColumn(
-        "_df", F.count("*").over(Window.partitionBy("shingle"))
-    ).filter(F.col("_df") <= MAX_SHINGLE_DF)
-    sizes = ex.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
-    exj = ex.filter(F.col("_df") >= 2).select("doc_id", "shingle")
-    a, b = exj.alias("a"), exj.hint("shuffle_merge").alias("b")
-    common = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("n_b"))
-    out = common.join(sa, "doc_a").join(sb, "doc_b").localCheckpoint(eager=True)
-    _PAIR_COUNTS_CACHE[key] = out
-    return out
+    def build():
+        sh = _shingled(spark, sf_dir)
+        ex_all = sh.select("doc_id", F.explode("hashes").alias("shingle"))
+        ex = ex_all.withColumn(
+            "_df", F.count("*").over(Window.partitionBy("shingle"))
+        ).filter(F.col("_df") <= MAX_SHINGLE_DF)
+        sizes = ex.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
+        exj = ex.filter(F.col("_df") >= 2).select("doc_id", "shingle")
+        a, b = exj.alias("a"), exj.hint("shuffle_merge").alias("b")
+        common = (
+            a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+            .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+            .agg(F.count("*").alias("n_common"))
+        )
+        sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("n_a"))
+        sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("n_b"))
+        return common.join(sa, "doc_a").join(sb, "doc_b").localCheckpoint(eager=True)
+
+    return memo.shared(spark, sf_dir, "capped_pair_counts", build)
 
 
 # The matching oracle CTE chain (ends with common/sizes exposed);
@@ -252,9 +242,6 @@ common AS (
 )"""
 
 
-_JACCARD_CACHE: dict[tuple[str, str], DataFrame] = register_memo({})
-
-
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-word-shingle Jaccard ≥ 0.5 pairs via inverted-index join,
     computed over each document's RARE shingles only: shingles whose
@@ -270,24 +257,21 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles — which is noise, not duplication signal, at scale.
     Pipeline shared with dedup_containment (_capped_pair_counts).
 
-    The pair list is materialized once per (corpus, Spark app) — it
+    The pair list is materialized once per (session, corpus) — it
     feeds both connected-components variants and the cross-modal
     audit, which would otherwise each re-run the inverted-index join
     (the "near-dup pairs are a cached table" layout at scale)."""
-    key = (sf_dir, spark.sparkContext.applicationId)
-    cached = _JACCARD_CACHE.get(key)
-    if cached is not None:
-        return cached
-    out = (
-        _capped_pair_counts(spark, sf_dir)
+    return memo.shared(
+        spark,
+        sf_dir,
+        "ngram_jaccard",
+        lambda: _capped_pair_counts(spark, sf_dir)
         .withColumn("jaccard", F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")))
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("doc_a", "doc_b", "jaccard")
         .orderBy("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=True),
     )
-    _JACCARD_CACHE[key] = out
-    return out
 
 
 _JACCARD_SQL = f"""
@@ -302,45 +286,37 @@ ORDER BY doc_a, doc_b
 """
 
 
-_MINHASH_CACHE: dict[tuple[str, str], DataFrame] = register_memo({})
-
-
 COS2_THRESHOLD_PM = 500  # cos² ≥ 0.5  ⇔  cos ≥ ~0.707
-
-_TF_SHINGLE_CACHE: dict[tuple[str, str], DataFrame] = register_memo({})
 
 
 def _capped_tf_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, sh, tf, _df) over NON-distinct 3-word shingle hashes,
     df-capped — the weighted twin of ``_shingled`` (which is a
-    distinct SET). Materialized once per (corpus, Spark app): the
+    distinct SET). Materialized once per (session, corpus): the
     md5-heavy shingling is the dominant cost of the weighted-cosine
     metric."""
     from pyspark.sql import Window
 
-    key = (sf_dir, spark.sparkContext.applicationId)
-    cached = _TF_SHINGLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    docs = load_spread(spark, sf_dir, "documents", "doc_id")
-    words = F.split(F.col("text"), " ")
-    tf = (
-        docs.select(
-            "doc_id",
-            F.explode(
-                F.transform(word_shingles(words, distinct=False), h32)
-            ).alias("sh"),
+    def build():
+        docs = load_spread(spark, sf_dir, "documents", "doc_id")
+        words = F.split(F.col("text"), " ")
+        tf = (
+            docs.select(
+                "doc_id",
+                F.explode(
+                    F.transform(word_shingles(words, distinct=False), h32)
+                ).alias("sh"),
+            )
+            .groupBy("doc_id", "sh")
+            .agg(F.count(F.lit(1)).alias("tf"))
         )
-        .groupBy("doc_id", "sh")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    out = (
-        tf.withColumn("_df", F.count("*").over(Window.partitionBy("sh")))
-        .filter(F.col("_df") <= MAX_SHINGLE_DF)
-        .localCheckpoint(eager=True)
-    )
-    _TF_SHINGLE_CACHE[key] = out
-    return out
+        return (
+            tf.withColumn("_df", F.count("*").over(Window.partitionBy("sh")))
+            .filter(F.col("_df") <= MAX_SHINGLE_DF)
+            .localCheckpoint(eager=True)
+        )
+
+    return memo.shared(spark, sf_dir, "capped_tf_shingles", build)
 
 
 def dedup_tf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -550,9 +526,6 @@ FROM pairs
 """
 
 
-_MINHASH_STATS_CACHE: dict[tuple[str, str], DataFrame] = register_memo({})
-
-
 def _minhash_candidate_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH candidate pairs with BOTH the sketch-side and truth-side
     per-pair stats: ``doc_a, doc_b, n_sig_match`` (matching signature
@@ -563,15 +536,17 @@ def _minhash_candidate_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     MINHASH_PRIME`` (one md5 per shingle, not one per (i, shingle) —
     see the constants block above), reproducible in SQL.
 
-    Materialized once per (corpus, Spark app): the verified pair
+    Materialized once per (session, corpus): the verified pair
     list (dedup_minhash_lsh) and the estimator-calibration report
     both derive from this table with nothing heavier than a filter —
     the "candidate stats are a cached table" layout a production
     dedup service would keep anyway for QA dashboards."""
-    key = (sf_dir, spark.sparkContext.applicationId)
-    cached = _MINHASH_STATS_CACHE.get(key)
-    if cached is not None:
-        return cached
+    return memo.shared(
+        spark, sf_dir, "minhash_candidate_stats", lambda: _candidate_stats(spark, sf_dir)
+    )
+
+
+def _candidate_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = _shingled(spark, sf_dir)
     sig = minhash_sigs(sh)
     bands = minhash_band_keys(sig)
@@ -596,7 +571,7 @@ def _minhash_candidate_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("sig_a")[i] == F.col("sig_b")[i], 1).otherwise(0)
         for i in range(MINHASH_K)
     ).cast("bigint")
-    out = (
+    return (
         candidates.join(sig_a, "doc_a")
         .join(sig_b, "doc_b")
         .join(sh_a, "doc_a")
@@ -612,8 +587,6 @@ def _minhash_candidate_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    _MINHASH_STATS_CACHE[key] = out
-    return out
 
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -626,25 +599,22 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     per band family — parameters chosen for the near-identical
     planted dups at J≈0.99 where recall ≈ 1).
 
-    Materialized once per (corpus, Spark app): the recall-QA report
+    Materialized once per (session, corpus): the recall-QA report
     and the cross-source matrix both start from this pair list."""
-    key = (sf_dir, spark.sparkContext.applicationId)
-    cached = _MINHASH_CACHE.get(key)
-    if cached is not None:
-        return cached
-    stats = _minhash_candidate_stats(spark, sf_dir)
-    out = (
-        stats.withColumn(
+    return memo.shared(
+        spark,
+        sf_dir,
+        "minhash_lsh",
+        lambda: _minhash_candidate_stats(spark, sf_dir)
+        .withColumn(
             "jaccard",
             F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
         )
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("doc_a", "doc_b", "jaccard")
         .orderBy("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=True),
     )
-    _MINHASH_CACHE[key] = out
-    return out
 
 
 def minhash_estimate_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:

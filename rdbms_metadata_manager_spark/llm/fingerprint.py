@@ -41,10 +41,9 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-
-from ..memo import register_memo
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..queries.base import load_spread
 
 K = 8  # k-gram length (chars)
@@ -84,24 +83,20 @@ def _fingerprints(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", winnow_udf(F.col("text")).alias("fps"))
 
 
-# Materialized once per (corpus, Spark app): the summary query and
+# Materialized once per (session, corpus): the summary query and
 # the overlap join both need the Arrow winnow kernel's output, and
 # the overlap SELF-join previously re-ran the kernel on both sides
 # (fresh lineage was required to dodge the shared-lambda self-join
 # trap — a checkpoint sidesteps it by materializing instead).
-_FP_CACHE: dict[tuple[str, str], DataFrame] = register_memo({})
-
-
 def _fingerprints_for(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (sf_dir, spark.sparkContext.applicationId)
-    cached = _FP_CACHE.get(key)
-    if cached is not None:
-        return cached
-    out = _fingerprints(load_spread(spark, sf_dir, "documents", "doc_id")).localCheckpoint(
-        eager=True
+    return memo.shared(
+        spark,
+        sf_dir,
+        "fingerprints",
+        lambda: _fingerprints(
+            load_spread(spark, sf_dir, "documents", "doc_id")
+        ).localCheckpoint(eager=True),
     )
-    _FP_CACHE[key] = out
-    return out
 
 
 def text_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:

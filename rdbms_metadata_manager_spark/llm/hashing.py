@@ -91,9 +91,11 @@ def md5_control_pairs(df, id_col: str):
     # shuffle outright — an adjacent-rank join IS lead()). Pair set is
     # identical: row at odd rank r pairs with rank r+1 in its bucket
     # iff that row exists; a NULL _h_next marks the dropped odd tail
-    # (lead never crosses the partition = bucket boundary).
+    # (lead never crosses the partition = bucket boundary). A NULL id
+    # hashes to a NULL bucket, which the oracle's equi-join on _bkt
+    # never matches, so those rows are dropped before the window.
     w = Window.partitionBy("_bkt").orderBy(F.col("_h"), F.col(id_col))
-    ranked = df.withColumn(
+    ranked = df.filter(F.col(id_col).isNotNull()).withColumn(
         "_h", F.md5(F.concat(F.lit("ctl:"), F.col(id_col)))
     ).withColumn(
         "_bkt",

@@ -22,8 +22,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from ..memo import register_memo
+from .. import memo
+from ..catalog.fixtures import _local_df
 from ..queries.base import load_spread
 from .similarity import DIM, _as_double, _cosine, _cosine_sql, _dot
 
@@ -43,48 +45,30 @@ def _centroid_arrays(emb: DataFrame) -> DataFrame:
     ).select(F.col("label").alias("c_label"), "centroid")
 
 
-# Label-centroid memo, keyed by the corpus dir + Spark app — the same
-# "train the quantizer once, probe it from every consumer" lifecycle
-# as kmeans._CENTROID_CACHE (≤|labels| rows of DIM doubles; the 6-dp
-# rounding already pins the values cross-engine, and collected Python
-# floats ARE the IEEE doubles Spark computed, so a memo hit changes
-# nothing downstream). Three query paths (similarity_ivf_search,
-# ivf_cell_stats, ivf_nprobe_recall_curve) each re-ran the full
-# posexplode centroid pass per cycle before this.
-_IVF_CENTROID_CACHE: dict[tuple[str, str], list[tuple[int, list[float]]]] = (
-    register_memo({})
-)
-
-
-def _centroid_rows(
-    spark: SparkSession, sf_dir: str, emb: DataFrame
-) -> list[tuple[int, list[float]]]:
-    key = (sf_dir, spark.sparkContext.applicationId)
-    rows = _IVF_CENTROID_CACHE.get(key)
-    if rows is None:
-        rows = sorted(
+# Label-centroid memo — the same "train the quantizer once, probe it
+# from every consumer" lifecycle as kmeans.shared_centroids (≤|labels|
+# rows of DIM doubles; the 6-dp rounding already pins the values
+# cross-engine, and collected Python floats ARE the IEEE doubles Spark
+# computed, so a memo hit changes nothing downstream). Three query
+# paths (similarity_ivf_search, ivf_cell_stats,
+# ivf_nprobe_recall_curve) each re-ran the full posexplode centroid
+# pass per cycle before this.
+def _centroids(spark: SparkSession, sf_dir: str, emb: DataFrame) -> DataFrame:
+    """The memoized label centroids as the tiny (c_label, centroid)
+    relation; an empty corpus leaves no rows to rebuild from, so it
+    falls back to the (empty) rollup itself."""
+    rows = memo.shared(
+        spark,
+        sf_dir,
+        "ivf_label_centroids",
+        lambda: sorted(
             (int(r["c_label"]), [float(x) for x in r["centroid"]])
             for r in _centroid_arrays(emb).collect()
-        )
-        _IVF_CENTROID_CACHE[key] = rows
-    return rows
-
-
-def _centroids_df(
-    spark: SparkSession, rows: list[tuple[int, list[float]]]
-) -> DataFrame:
-    """The memoized rows back as the tiny (c_label, centroid)
-    relation (object dtype: the non-Arrow createDataFrame verifier
-    rejects numpy scalars — the round-2 fixtures class)."""
-    import pandas as pd
-
-    pdf = pd.DataFrame(
-        {
-            "c_label": pd.Series([lbl for lbl, _ in rows], dtype=object),
-            "centroid": pd.Series([c for _, c in rows], dtype=object),
-        }
+        ),
     )
-    return spark.createDataFrame(pdf, "c_label int, centroid array<double>")
+    if not rows:
+        return _centroid_arrays(emb).localCheckpoint(eager=False)
+    return _local_df(spark, rows, StructType.fromDDL("c_label int, centroid array<double>"))
 
 
 def _assignments(emb: DataFrame, centroids: DataFrame) -> DataFrame:
@@ -112,17 +96,10 @@ def similarity_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_spread(spark, sf_dir, "embeddings", "vec_id").select(
         "vec_id", "label", _as_double("embedding").alias("v")
     )
-    # memoized label centroids (train once per corpus+app): corpus
-    # assignment is the literal-argmax projection — no centroid pass,
-    # no broadcast-join blowup, no window exchange per cycle; only
-    # q_cells still reads the ≤|labels|-row relation (rebuilt from the
-    # collected rows, not recomputed).
-    rows = _centroid_rows(spark, sf_dir, emb)
-    centroids = (
-        _centroids_df(spark, rows)
-        if rows
-        else _centroid_arrays(emb).localCheckpoint(eager=False)
-    )
+    # memoized label centroids: corpus assignment and q_cells both
+    # read the ≤|labels|-row relation rebuilt from the collected rows,
+    # so no cycle re-runs the centroid pass.
+    centroids = _centroids(spark, sf_dir, emb)
     assigned = _assignments(emb, centroids)
 
     # Query vector read via a vec_id-pushdown scan — `v` passes through
@@ -192,11 +169,7 @@ def ivf_cell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_spread(spark, sf_dir, "embeddings", "vec_id").select(
         "vec_id", "label", _as_double("embedding").alias("v")
     )
-    rows = _centroid_rows(spark, sf_dir, emb)
-    assigned = _assignments(
-        emb,
-        _centroids_df(spark, rows) if rows else _centroid_arrays(emb),
-    )
+    assigned = _assignments(emb, _centroids(spark, sf_dir, emb))
     return (
         assigned.groupBy("cell")
         .agg(F.count("*").alias("n_vectors"))
@@ -223,12 +196,13 @@ def ivf_kmeans_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     with (L2), then ranks candidates by exact ordered-fold cosine.
     At 100 TB the cluster id is the write-time partition key, so the
     probe reads nprobe/K of the corpus."""
-    from .kmeans import _dist2, trained_assignments
+    from .kmeans import _assign, _dist2, shared_centroids
 
     emb = load_spread(spark, sf_dir, "embeddings", "vec_id").select(
         "vec_id", _as_double("embedding").alias("v")
     )
-    centroids, assigned = trained_assignments(emb, cache_key=sf_dir)
+    centroids = shared_centroids(spark, sf_dir, emb)
+    assigned = _assign(emb, centroids).localCheckpoint(eager=True)
 
     qv = assigned.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
     q_cells = (
@@ -312,12 +286,7 @@ def ivf_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the corpus is scanned once by construction (2 full passes
     # total: centroid training + assignment — the floor for an IVF
     # audit that must both train and assign).
-    rows = _centroid_rows(spark, sf_dir, emb)
-    centroids = (
-        _centroids_df(spark, rows)
-        if rows
-        else _centroid_arrays(emb).localCheckpoint(eager=False)
-    )
+    centroids = _centroids(spark, sf_dir, emb)
     qs = (
         load_spread(spark, sf_dir, "embeddings", "vec_id")
         .filter(F.col("vec_id") < RECALL_Q)

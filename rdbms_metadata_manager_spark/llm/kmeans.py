@@ -18,10 +18,11 @@ iterations are driver-controlled with checkpointed lineage.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
-
-from ..memo import register_memo
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from .. import memo
+from ..catalog.fixtures import _local_df
 from ..queries.base import load_spread
 from .similarity import DIM, _as_double
 
@@ -73,72 +74,46 @@ def _update(assigned: DataFrame) -> DataFrame:
     ).select(F.col("cluster").alias("cid"), "centroid")
 
 
-# Trained-centroid memo, keyed by the corpus directory. Training is a
-# pure deterministic function of the embeddings table, and the result
-# is K×DIM doubles — exactly the "build the coarse quantizer once,
-# probe it from every consumer" lifecycle a production IVF index has.
-# Collected doubles round-trip bit-exactly (Python float IS the IEEE
-# double Spark computed), so a memo hit changes nothing downstream.
-_CENTROID_CACHE: dict[str, list[tuple[int, list[float]]]] = register_memo({})
+def train_centroids(emb: DataFrame) -> DataFrame:
+    """The deterministic-Lloyd training prologue (seeds = vec_id < K,
+    ITERATIONS update steps, centroids checkpointed per level): the
+    single source of truth for every operator built on the trained
+    quantizer — kmeans_clusters, semdedup, ivf_kmeans_search, IVFPQ."""
+    centroids = (
+        emb.filter(F.col("vec_id") < K)
+        .select(F.col("vec_id").cast("int").alias("cid"), F.col("v").alias("centroid"))
+        .localCheckpoint(eager=True)
+    )
+    for _ in range(ITERATIONS):
+        centroids = _update(_assign(emb, centroids)).localCheckpoint(eager=True)
+    return centroids
 
 
-def trained_assignments(
-    emb: DataFrame, checkpoint_assigned: bool = True, cache_key: str | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """The SHARED deterministic-Lloyd training prologue (seeds =
-    vec_id < K, ITERATIONS update steps, centroids checkpointed per
-    level): single source of truth for every operator built on the
-    trained quantizer — kmeans_clusters, semdedup, ivf_kmeans_search.
-    Returns (centroids, assigned); pass ``checkpoint_assigned=True``
-    when the final assignment feeds multiple downstream consumers
-    (self-joins / probes) so they share one computed plan. With a
-    ``cache_key`` (the corpus dir), the trained centroids are memoized
-    process-wide and later consumers skip straight to assignment."""
-    centroids = None
-    memo_rows = None
-    if cache_key is not None and cache_key in _CENTROID_CACHE:
-        memo_rows = _CENTROID_CACHE[cache_key]
-    if memo_rows is not None:
-        import pandas as pd
-
-        rows = memo_rows
-        # object dtype: pandas would otherwise freeze cid as numpy
-        # int64, which the NON-Arrow createDataFrame verifier rejects
-        # (the round-2 fixtures failure class; catalog/fixtures.py)
-        pdf = pd.DataFrame(
-            {
-                "cid": pd.Series([c for c, _ in rows], dtype=object),
-                "centroid": pd.Series([v for _, v in rows], dtype=object),
-            }
-        )
-        centroids = emb.sparkSession.createDataFrame(
-            pdf, "cid int, centroid array<double>"
-        )
-    if centroids is None:
-        centroids = (
-            emb.filter(F.col("vec_id") < K)
-            .select(F.col("vec_id").cast("int").alias("cid"), F.col("v").alias("centroid"))
-            .localCheckpoint(eager=True)
-        )
-        for _ in range(ITERATIONS):
-            centroids = _update(_assign(emb, centroids)).localCheckpoint(eager=True)
-        if cache_key is not None:
-            memo_rows = [
-                (int(r["cid"]), [float(x) for x in r["centroid"]])
-                for r in centroids.collect()
-            ]
-            _CENTROID_CACHE[cache_key] = memo_rows
-    assigned = _assign(emb, centroids)
-    if checkpoint_assigned:
-        assigned = assigned.localCheckpoint(eager=True)
-    return centroids, assigned
+def shared_centroids(spark: SparkSession, sf_dir: str, emb: DataFrame) -> DataFrame:
+    """``train_centroids`` trained once per session and corpus — the
+    "build the coarse quantizer once, probe it from every consumer"
+    lifecycle a production IVF index has. The memo holds the K×DIM
+    collected doubles, which round-trip bit-exactly (Python float IS
+    the IEEE double Spark computed), so every consumer reads the same
+    tiny local relation."""
+    rows = memo.shared(
+        spark,
+        sf_dir,
+        "kmeans_centroids",
+        lambda: [
+            (int(r["cid"]), [float(x) for x in r["centroid"]])
+            for r in train_centroids(emb).collect()
+        ],
+    )
+    return _local_df(spark, rows, StructType.fromDDL("cid int, centroid array<double>"))
 
 
 def sql_training_prologue() -> str:
-    """The c0 → a3 CTE chain mirroring ``trained_assignments`` —
-    spliced into every oracle that trains the quantizer. Must follow
-    a CTE ``e(vec_id, v)``; exposes ``a3(vec_id, v, cluster)``,
-    ``a3_scored(vec_id, v, cid, d2)`` and ``c2(cid, centroid)``."""
+    """The c0 → a3 CTE chain mirroring ``train_centroids`` plus the
+    final ``_assign`` — spliced into every oracle that trains the
+    quantizer. Must follow a CTE ``e(vec_id, v)``; exposes
+    ``a3(vec_id, v, cluster)``, ``a3_scored(vec_id, v, cid, d2)`` and
+    ``c2(cid, centroid)``."""
     return f"""c0 AS (SELECT CAST(vec_id AS INT) AS cid, v AS centroid FROM e WHERE vec_id < {K}),
 {_sql_assign('c0', 'a1')},
 {_sql_update('a1', 'c1')},
@@ -152,7 +127,8 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_spread(spark, sf_dir, "embeddings", "vec_id").select(
         "vec_id", _as_double("embedding").alias("v")
     )
-    centroids, final = trained_assignments(emb, checkpoint_assigned=False, cache_key=sf_dir)
+    centroids = shared_centroids(spark, sf_dir, emb)
+    final = _assign(emb, centroids)
     norms = centroids.select(
         "cid",
         F.round(
@@ -235,7 +211,7 @@ def kmeans_silhouette_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_spread(spark, sf_dir, "embeddings", "vec_id").select(
         "vec_id", _as_double("embedding").alias("v")
     )
-    centroids, _ = trained_assignments(emb, checkpoint_assigned=False, cache_key=sf_dir)
+    centroids = shared_centroids(spark, sf_dir, emb)
     scored = emb.join(F.broadcast(centroids)).withColumn(
         "d2", _dist2(F.col("v"), F.col("centroid"))
     )

@@ -46,10 +46,11 @@ top-k plans as TakeOrderedAndProject.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
-
-from ..memo import register_memo
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from .. import memo
+from ..catalog.fixtures import _local_df
 from ..queries.base import load_spread
 from .similarity import DIM, _as_double, _cosine, _cosine_sql
 
@@ -129,29 +130,7 @@ def _pq_update(assigned: DataFrame) -> DataFrame:
     )
 
 
-# Trained-codebook memo keyed by corpus dir — the same "train the
-# quantizer once, probe it from every consumer" lifecycle as
-# kmeans._CENTROID_CACHE (128 rows of 8 doubles; collected Python
-# floats ARE the IEEE doubles Spark computed, so a memo hit changes
-# nothing downstream). Rebuilt via object-dtype pandas so the
-# non-Arrow createDataFrame verifier accepts it (round-2 failure
-# class; catalog/fixtures.py).
-_CODEBOOK_CACHE: dict[str, list[tuple[int, int, list[float]]]] = register_memo({})
-
-
-def _train_codebook(sv: DataFrame, cache_key: str | None = None) -> DataFrame:
-    if cache_key is not None and cache_key in _CODEBOOK_CACHE:
-        import pandas as pd
-
-        rows = _CODEBOOK_CACHE[cache_key]
-        pdf = pd.DataFrame(
-            {
-                "sub": pd.Series([s for s, _, _ in rows], dtype=object),
-                "cid": pd.Series([c for _, c, _ in rows], dtype=object),
-                "centroid": pd.Series([v for _, _, v in rows], dtype=object),
-            }
-        )
-        return sv.sparkSession.createDataFrame(pdf, "sub int, cid int, centroid array<double>")
+def _train_codebook(sv: DataFrame) -> DataFrame:
     codebook = (
         sv.filter(F.col("vec_id") < K_PQ)
         .select("sub", F.col("vec_id").cast("int").alias("cid"), F.col("sv").alias("centroid"))
@@ -159,25 +138,39 @@ def _train_codebook(sv: DataFrame, cache_key: str | None = None) -> DataFrame:
     )
     for _ in range(PQ_ITER):
         codebook = _pq_update(_pq_assign(sv, codebook)).localCheckpoint(eager=True)
-    if cache_key is not None:
-        _CODEBOOK_CACHE[cache_key] = [
-            (int(r["sub"]), int(r["cid"]), [float(x) for x in r["centroid"]])
-            for r in codebook.collect()
-        ]
     return codebook
+
+
+def _shared_codebook(
+    spark: SparkSession, sf_dir: str, name: str, sv: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """(sv, codebook) with the codebook trained once per session and
+    corpus — the same "train the quantizer once, probe it from every
+    consumer" lifecycle as kmeans.shared_centroids (128 rows of 8
+    doubles; collected Python floats ARE the IEEE doubles Spark
+    computed, so a memo hit changes nothing downstream). The subvector
+    checkpoint only pays for itself while TRAINING re-reads ``sv`` per
+    Lloyd round, so only a miss takes it; on a hit the remaining
+    consumers (encode + LUT) are cheap projections."""
+
+    def build():
+        nonlocal sv
+        sv = sv.localCheckpoint(eager=True)
+        return [
+            (int(r["sub"]), int(r["cid"]), [float(x) for x in r["centroid"]])
+            for r in _train_codebook(sv).collect()
+        ]
+
+    rows = memo.shared(spark, sf_dir, name, build)
+    schema = StructType.fromDDL("sub int, cid int, centroid array<double>")
+    return sv, _local_df(spark, rows, schema)
 
 
 def pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_spread(spark, sf_dir, "embeddings", "vec_id").select(
         "vec_id", _as_double("embedding").alias("v")
     )
-    # the subvector checkpoint only pays for itself while TRAINING
-    # re-reads it per Lloyd round; on a codebook-memo hit the two
-    # remaining consumers (encode + LUT) are cheap projections
-    sv = _subvectors(emb)
-    if sf_dir not in _CODEBOOK_CACHE:
-        sv = sv.localCheckpoint(eager=True)
-    codebook = _train_codebook(sv, cache_key=sf_dir)
+    sv, codebook = _shared_codebook(spark, sf_dir, "pq_codebook", _subvectors(emb))
     codes = _pq_assign(sv, codebook).select("vec_id", "sub", "code")
     lut = (
         sv.filter(F.col("vec_id") == 0)
@@ -308,16 +301,15 @@ def ivfpq_residual_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the oracle replays BOTH trainings — the kmeans prologue CTEs
     feed residual CTEs that feed the unrolled PQ rounds.
     """
-    from .kmeans import _dist2, trained_assignments
+    from .kmeans import _assign, _dist2, shared_centroids
 
     emb = load_spread(spark, sf_dir, "embeddings", "vec_id").select(
         "vec_id", _as_double("embedding").alias("v")
     )
-    # assigned has exactly ONE consumer below (resid) — skip the eager
-    # per-build checkpoint the default posture pays (guide §1.2)
-    centroids, assigned = trained_assignments(
-        emb, checkpoint_assigned=False, cache_key=sf_dir
-    )
+    # assigned has exactly ONE consumer below (resid), so it is not
+    # checkpointed (guide §1.2)
+    centroids = shared_centroids(spark, sf_dir, emb)
+    assigned = _assign(emb, centroids)
     resid = (
         assigned.join(F.broadcast(centroids), assigned.cluster == centroids.cid)
         .select(
@@ -328,11 +320,9 @@ def ivfpq_residual_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # cluster rides the subvector explode so the encoder never joins
     # the corpus-sized assignment relation back on vec_id (guide §2.4)
-    rsv = _subvectors(resid, extra=("cluster",))
-    cached = f"{sf_dir}#residual" in _CODEBOOK_CACHE
-    if not cached:
-        rsv = rsv.localCheckpoint(eager=True)
-    codebook = _train_codebook(rsv, cache_key=f"{sf_dir}#residual")
+    rsv, codebook = _shared_codebook(
+        spark, sf_dir, "pq_residual_codebook", _subvectors(resid, extra=("cluster",))
+    )
     codes = _pq_assign(rsv, codebook, extra=("cluster",)).select(
         "vec_id", "cluster", "sub", "code"
     )

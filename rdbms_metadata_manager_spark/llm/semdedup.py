@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..queries.base import load, load_spread
-from .kmeans import sql_training_prologue, trained_assignments
+from .kmeans import _assign, shared_centroids, sql_training_prologue
 from .similarity import DIM, _as_double, _cosine, _cosine_sql
 
 SEMDEDUP_COSINE = 0.4
@@ -41,7 +41,7 @@ def semdedup_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_spread(spark, sf_dir, "embeddings", "vec_id").select(
         "vec_id", _as_double("embedding").alias("v")
     )
-    _, assigned = trained_assignments(emb, cache_key=sf_dir)
+    assigned = _assign(emb, shared_centroids(spark, sf_dir, emb)).localCheckpoint(eager=True)
 
     # Within-cluster pairwise cosine, two-stage: stage 1 PREFILTERS
     # with an ε margin, stage 2 re-checks survivors (a few hundred)
@@ -158,7 +158,8 @@ def d4_prototype_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", _as_double("embedding").alias("v")
     )
     # single consumer of `assigned` → no eager checkpoint needed
-    centroids, assigned = trained_assignments(emb, checkpoint_assigned=False, cache_key=sf_dir)
+    centroids = shared_centroids(spark, sf_dir, emb)
+    assigned = _assign(emb, centroids)
     scored = (
         assigned.join(F.broadcast(centroids), assigned["cluster"] == centroids["cid"])
         .withColumn("d2", _dist2(F.col("v"), F.col("centroid")))

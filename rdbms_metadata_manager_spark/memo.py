@@ -1,52 +1,74 @@
-"""Central registry for the per-app memo caches (ADVICE r7 #1).
+"""One memo for the relations and models a session reuses across queries.
 
-Several kernels memoize an eagerly-checkpointed DataFrame (or a small
-collected model such as k-means centroids / PQ codebooks) keyed by
-``(sf_dir, spark.sparkContext.applicationId)``.  The contract those
-caches assume is documented here once, next to the eviction hook:
+Many kernels start from the same expensive input: a shingled corpus,
+a co-purchase edge list, trained k-means centroids or PQ codebooks.
+:func:`shared` builds each of them once per session and hands the same
+value to every later caller:
 
-**Immutable-corpus contract.**  A memo key identifies a corpus by its
-*path*.  The engine assumes parquet inputs are immutable for the
-lifetime of a Spark application — the normal posture for an analytics
-store (new data arrives as new paths/partitions, not in-place
-rewrites).  If a caller rewrites a corpus in place at the same path
-within one application, it MUST call :func:`clear_memos` first, or the
-memoized relations will silently serve the pre-rewrite data.
+    return memo.shared(spark, sf_dir, "copurchase_edges", build)
 
-**Storage bound.**  Each memoized DataFrame is at most corpus-sized at
-the working scale factor (most are far smaller: score relations, edge
-lists, ≤K-row models).  ``localCheckpoint`` blocks are owned by the
-RDD; dropping the cache reference makes the RDD unreachable so Spark's
-ContextCleaner reclaims the blocks.  :func:`clear_memos` additionally
-calls ``unpersist()`` best-effort for anything that exposes it, then
-drops every reference, so a long-lived session working through many
-corpora can bound executor storage explicitly.
+**Key.**  ``(id(spark), applicationId, sf_dir, name)``.  The session
+object is part of the key because sibling sessions from
+``spark.newSession()`` share an applicationId but not their confs
+(e.g. ``nanosAsLong``), so they must not be served each other's
+entries; the applicationId alongside it keeps a session of a later
+application, whose ``id()`` may repeat an old one's, from hitting an
+old entry.  Within one application an ``id()`` can only repeat while
+the old session is unreachable, and a DataFrame value keeps its
+session reachable, so a reused ``id()`` can meet only collected model
+rows — which depend on the corpus, not the session.
 
-Modules opt in by wrapping their cache dict::
+**Values.**  Whatever ``build()`` returns, stored on a miss and
+returned unchanged on every hit: an eagerly ``localCheckpoint``-ed
+DataFrame (the build owns its checkpoint), a lazy analyzed DataFrame
+(``queries.base.load``), collected model rows (centroids, codebooks),
+or a tuple of these.  Presence of the key is the hit test, so a stored
+empty list is a hit too.
 
-    from ..memo import register_memo
-    _QC_CACHE: dict = register_memo({})
+**Immutable-corpus contract.**  A key identifies a corpus by its
+*path*.  Parquet inputs are assumed immutable for the lifetime of a
+Spark application — the normal posture for an analytics store (new
+data arrives as new paths/partitions, not in-place rewrites).  A caller
+that rewrites a corpus in place at the same path within one application
+MUST call :func:`clear_memos` first, or the memoized relations will
+silently serve the pre-rewrite data.
 
-and never need to change anything else — ``register_memo`` returns the
-same dict it was given.
+**Storage bound.**  Each entry is at most corpus-sized at the working
+scale factor (most are far smaller: score relations, edge lists, ≤K-row
+models).  ``localCheckpoint`` blocks are owned by the RDD; dropping the
+reference makes the RDD unreachable so Spark's ContextCleaner reclaims
+the blocks.  :func:`clear_memos` additionally calls ``unpersist()``
+best-effort for anything that exposes it, then drops every reference,
+so a long-lived session working through many corpora can bound
+executor storage explicitly.
 """
 
 from __future__ import annotations
 
-from typing import Any
+from typing import Any, Callable, TypeVar
 
-_REGISTRY: list[dict[Any, Any]] = []
+from pyspark.sql import SparkSession
+
+T = TypeVar("T")
+
+_MEMO: dict[tuple[int, str, str, str], Any] = {}
+# The memo dicts whose summed len is the live entry count (the
+# benchmark harness, perfbench/workloads.py, reads it); there is one.
+_REGISTRY: list[dict[Any, Any]] = [_MEMO]
 
 
-def register_memo(cache: dict) -> dict:
-    """Register a module-level memo dict for global eviction."""
-    _REGISTRY.append(cache)
-    return cache
+def shared(spark: SparkSession, sf_dir: str, name: str, build: Callable[[], T]) -> T:
+    """The value stored under ``name`` for this session and corpus,
+    calling ``build()`` once on a miss."""
+    key = (id(spark), spark.sparkContext.applicationId, sf_dir, name)
+    if key not in _MEMO:
+        _MEMO[key] = build()
+    return _MEMO[key]
 
 
 def _unpersist(value: Any) -> None:
     # Values are DataFrames, collected python lists, or tuples mixing
-    # both (e.g. bpe._TRAIN_CACHE holds (merges, DataFrame)).
+    # both (e.g. bpe's (merges, DataFrame)).
     if isinstance(value, (tuple, list)):
         for v in value:
             _unpersist(v)
@@ -60,21 +82,14 @@ def _unpersist(value: Any) -> None:
 
 
 def clear_memos() -> int:
-    """Evict every registered memo entry; returns the count evicted.
+    """Evict every memo entry; returns the count evicted.
 
     Call between corpora in a long-lived session, or before re-reading
     a path that was rewritten in place (see the immutable-corpus
     contract above).
     """
-    evicted = 0
-    for cache in _REGISTRY:
-        for value in cache.values():
-            _unpersist(value)
-        evicted += len(cache)
-        cache.clear()
+    for value in _MEMO.values():
+        _unpersist(value)
+    evicted = len(_MEMO)
+    _MEMO.clear()
     return evicted
-
-
-def registered_memo_count() -> int:
-    """Number of registered memo dicts (test/introspection hook)."""
-    return len(_REGISTRY)

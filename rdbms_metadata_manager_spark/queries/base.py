@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..memo import register_memo
+from .. import memo
 
 TABLE_NAMES = [
     "region",
@@ -44,21 +44,11 @@ DAY_SECONDS = 24 * 3600
 # materialization still scans the parquet from disk, so this is plan
 # reuse (what a catalog/metastore gives a real deployment — schema
 # resolved once per session, not per query), not result caching.
-# Keyed by (session, applicationId) so a fresh session re-reads the
-# footer — ADVICE r9 #1: applicationId alone is shared by sibling
-# sessions from newSession(), whose different confs (e.g. nanosAsLong)
-# must not be served another session's analyzed plan. id(spark) is
-# disambiguated by the applicationId alongside it; the
-# immutable-corpus contract in ``memo.py`` covers in-place rewrites
-# (call ``clear_memos`` first).
-_LOAD_CACHE: dict[tuple[int, str, str, str], DataFrame] = register_memo({})
-
-
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (id(spark), spark.sparkContext.applicationId, sf_dir, name)
-    cached = _LOAD_CACHE.get(key)
-    if cached is not None:
-        return cached
+    return memo.shared(spark, sf_dir, f"{name}.parquet", lambda: _read(spark, sf_dir, name))
+
+
+def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
         from pyspark.sql import functions as F
@@ -78,7 +68,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # standardizes on TIMESTAMP. Session tz is pinned UTC, so
             # the cast is an exact identity on the stored micros.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    _LOAD_CACHE[key] = df
     return df
 
 

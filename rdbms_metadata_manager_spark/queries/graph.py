@@ -32,10 +32,9 @@ rank loop's cost is independent of corpus size.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-from ..memo import register_memo
 from pyspark.sql import functions as F
 
+from .. import memo
 from .base import load, tables
 
 N_NATIONS = 25
@@ -45,23 +44,19 @@ INIT_RANK = 0.04  # 1 / N_NATIONS
 ITERATIONS = 3
 
 
-_TRADE_CACHE: dict[tuple[str, str], DataFrame] = register_memo({})
-
-
 def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(src=customer nation, dst=supplier nation, w=lineitem count) —
-    the ≤|nations|²-row trade graph, materialized once per (corpus,
-    app): the 4-table join behind it is the whole cost of BOTH
+    the ≤|nations|²-row trade graph, materialized once per (session,
+    corpus): the 4-table join behind it is the whole cost of BOTH
     consumers (PageRank and the recursive-CTE reach), so they share
     one checkpoint the way the co-purchase faces share the edge
     memo."""
-    key = (sf_dir, spark.sparkContext.applicationId)
-    cached = _TRADE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    out = _build_trade_edges(spark, sf_dir).localCheckpoint(eager=True)
-    _TRADE_CACHE[key] = out
-    return out
+    return memo.shared(
+        spark,
+        sf_dir,
+        "trade_edges",
+        lambda: _build_trade_edges(spark, sf_dir).localCheckpoint(eager=True),
+    )
 
 
 def _build_trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -50,7 +50,13 @@ def _prefix_ranges(df: DataFrame) -> int:
 
     env = os.environ.get("SPARK_GRAFT_PREFIX_RANGES")
     if env:
-        return max(1, int(env))
+        try:
+            ranges = int(env)
+        except ValueError:
+            raise ValueError(
+                f"SPARK_GRAFT_PREFIX_RANGES must be an integer, got {env!r}"
+            ) from None
+        return max(1, ranges)
     return max(1, df.sparkSession.sparkContext.defaultParallelism)
 
 

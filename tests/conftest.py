@@ -127,6 +127,19 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(pytest.mark.slow)
 
 
+def pytest_terminal_summary(terminalreporter):
+    # a default run must say what it left out: it is not the full gate
+    slow = [
+        item
+        for item in terminalreporter.stats.get("deselected", [])
+        if item.get_closest_marker("slow")
+    ]
+    if slow:
+        terminalreporter.write_line(
+            f"{len(slow)} slow tests deselected; run -m 'slow or not slow'"
+        )
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("tests")

@@ -129,14 +129,24 @@ def test_centroid_memo_is_exact_and_no_arrow_safe(spark, sf_dir):
     relation under a NON-Arrow session — the driver's posture, where
     numpy-int64 cells crash the createDataFrame verifier (the round-2
     fixtures failure class)."""
+    from rdbms_metadata_manager_spark import memo
     from rdbms_metadata_manager_spark.llm import kmeans
+    from rdbms_metadata_manager_spark.llm.similarity import _as_double
+    from rdbms_metadata_manager_spark.queries.base import load_spread
 
-    kmeans._CENTROID_CACHE.clear()
-    cold = kmeans.kmeans_clusters(spark, sf_dir).collect()
-    assert sf_dir in kmeans._CENTROID_CACHE
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "false")
-    try:
-        warm = kmeans.kmeans_clusters(spark, sf_dir).collect()
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
+    def entries():
+        return sum(len(d) for d in memo._REGISTRY)
+
+    # a sibling session has its own memo entries: its first call trains
+    s = spark.newSession()
+    emb = load_spread(s, sf_dir, "embeddings", "vec_id").select(
+        "vec_id", _as_double("embedding").alias("v")
+    )
+    trained = sorted(map(tuple, kmeans.train_centroids(emb).collect()))
+    cold = kmeans.kmeans_clusters(s, sf_dir).collect()
+    built = entries()
+    s.conf.set("spark.sql.execution.arrow.pyspark.enabled", "false")
+    warm = kmeans.kmeans_clusters(s, sf_dir).collect()
+    assert entries() == built  # every memo hit
+    assert sorted(map(tuple, kmeans.shared_centroids(s, sf_dir, emb).collect())) == trained
     assert cold == warm

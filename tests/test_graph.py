@@ -139,16 +139,17 @@ def test_bfs_levels_hand_graph(spark, sf_dir, monkeypatch):
     unreachable within 3 rounds (5 is at dist 4)."""
     from rdbms_metadata_manager_spark.queries import mining
 
-    edges = spark.createDataFrame(
+    # the real corpus's adjacency is memoized in the shared session...
+    mining._bidir_adjacency(spark, sf_dir)
+    # ...and a sibling session has its own memo entries, so the hand
+    # graph patched in under the memoized edge kernel reaches the
+    # adjacency build instead of that memoized real-corpus relation
+    hand = spark.newSession()
+    edges = hand.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)], "a long, b long"
     )
-    # patch the memoized edge kernel itself: _copurchase_edges caches
-    # by (sf_dir, app) and would otherwise serve the real corpus —
-    # and reset the derived adjacency memo, which caches under the
-    # same key and would serve the real corpus even through the patch
     monkeypatch.setattr(mining, "_copurchase_edges", lambda s, d: edges)
-    monkeypatch.setattr(mining, "_ADJ_CACHE", {})
-    got = {r.dist: r.n_nodes for r in mining.bfs_levels_from_hub(spark, sf_dir).collect()}
+    got = {r.dist: r.n_nodes for r in mining.bfs_levels_from_hub(hand, sf_dir).collect()}
     assert got == {0: 1, 1: 1, 2: 1, 3: 1, -1: 3}, got
 
 

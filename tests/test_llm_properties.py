@@ -749,3 +749,34 @@ def test_control_pairing_invariants(spark, ids):
         assert bkt(a) == bkt(b)  # never cross-bucket
     sizes = Counter(bkt(i) for i in ids)
     assert len(pairs) == sum(n // 2 for n in sizes.values())
+
+
+def test_control_pairing_drops_null_ids_like_the_oracle(spark):
+    """A NULL id has no md5 bucket: the oracle's CONTROL_PAIR_JOIN
+    (an equi-join on _bkt) never pairs such rows, and neither may the
+    Spark pairing, whatever non-NULL rows surround them."""
+    import duckdb
+
+    from rdbms_metadata_manager_spark.llm.hashing import (
+        CONTROL_PAIR_JOIN,
+        md5_control_pairs,
+        md5_control_pairs_ctes,
+    )
+
+    rows = [(i, f"t{i}") for i in range(40)] + [(None, f"n{j}") for j in range(7)]
+    df = spark.createDataFrame(rows, "doc_id long, tag string")
+    got = sorted(tuple(r) for r in md5_control_pairs(df, "doc_id").collect())
+
+    values = ", ".join(
+        f"({'CAST(NULL AS BIGINT)' if i is None else i}, '{t}')" for i, t in rows
+    )
+    src = f"SELECT * FROM (VALUES {values}) v(doc_id, tag)"
+    want = sorted(
+        duckdb.sql(
+            f"WITH {md5_control_pairs_ctes(src, 'doc_id')} "
+            "SELECT a.doc_id, a.tag, b.doc_id, b.tag "
+            f"FROM {CONTROL_PAIR_JOIN}"
+        ).fetchall()
+    )
+    assert want, "the non-NULL rows must still pair"
+    assert got == want

@@ -1,56 +1,78 @@
-"""ADVICE r7 #1: global memo eviction hook.
+"""The session memo (rdbms_metadata_manager_spark/memo.py).
 
-The per-app memo caches assume an immutable corpus (see
-rdbms_metadata_manager_spark/memo.py); clear_memos() is the explicit
-escape hatch for in-place rewrites and long-lived multi-corpus
-sessions. This test proves (a) every known cache module registers,
-(b) a populated cache is evicted and the query recomputes, and
-(c) results are identical before/after eviction (the memo is a pure
-performance artifact, never a semantic one).
+``memo.shared`` builds each shared relation or model once per
+(session, corpus, name). The memo assumes an immutable corpus;
+``clear_memos()`` is the explicit escape hatch for in-place rewrites
+and long-lived multi-corpus sessions. The memo is a pure performance
+artifact, never a semantic one: eviction recomputes identical rows.
 """
 
 from __future__ import annotations
 
-from rdbms_metadata_manager_spark.memo import (
-    clear_memos,
-    register_memo,
-    registered_memo_count,
-)
+from rdbms_metadata_manager_spark import memo
+from rdbms_metadata_manager_spark.memo import clear_memos, shared
 
 
-def test_all_known_cache_modules_register():
-    # Importing the registry imports every query module, which runs
-    # the module-level register_memo calls.
-    from rdbms_metadata_manager_spark.registry import all_queries
+def _entries() -> int:
+    return sum(len(d) for d in memo._REGISTRY)
 
-    all_queries()
-    # 17 caches at round 8: curation, clustering, fingerprint, kmeans,
-    # dedup x6, pq, bpe, graph, mining x4. New caches must register
-    # too — bump this floor when adding one.
-    assert registered_memo_count() >= 17
+
+def _counting(value):
+    calls = []
+
+    def build():
+        calls.append(1)
+        return value
+
+    return build, calls
+
+
+def test_second_call_in_the_same_session_does_not_build(spark):
+    build, calls = _counting("value")
+    assert shared(spark, "/corpus/a", "m", build) == "value"
+    assert shared(spark, "/corpus/a", "m", build) == "value"
+    assert len(calls) == 1
+
+
+def test_sibling_session_gets_its_own_entry(spark):
+    sibling = spark.newSession()
+    assert shared(spark, "/corpus/b", "m", lambda: "first") == "first"
+    assert shared(sibling, "/corpus/b", "m", lambda: "sibling") == "sibling"
+    assert shared(spark, "/corpus/b", "m", lambda: "rebuilt") == "first"
+
+
+def test_stored_falsy_value_is_a_hit(spark):
+    build, calls = _counting([])
+    assert shared(spark, "/corpus/c", "m", build) == []
+    assert shared(spark, "/corpus/c", "m", build) == []
+    assert len(calls) == 1
+
+
+def test_clear_memos_returns_the_evicted_count(spark):
+    shared(spark, "/corpus/d", "m", lambda: 1)
+    live = _entries()
+    assert live >= 1
+    assert clear_memos() == live
+    assert _entries() == 0
 
 
 def test_clear_memos_evicts_and_recomputes(spark, sf_dir):
     from rdbms_metadata_manager_spark.llm import curation
 
-    curation._QC_CACHE.clear()
     before = curation.quality_classifier_scores(spark, sf_dir)
+    assert curation.quality_classifier_scores(spark, sf_dir) is before
     rows_before = sorted(map(tuple, before.limit(50).collect()))
-    assert len(curation._QC_CACHE) == 1
-    evicted = clear_memos()
-    assert evicted >= 1
-    assert len(curation._QC_CACHE) == 0
+    assert clear_memos() >= 1
     after = curation.quality_classifier_scores(spark, sf_dir)
     assert after is not before  # genuinely recomputed, not the old ref
     rows_after = sorted(map(tuple, after.limit(50).collect()))
     assert rows_before == rows_after
 
 
-def test_clear_memos_handles_heterogeneous_values():
+def test_clear_memos_handles_heterogeneous_values(spark):
     # bpe-style (list, DataFrame) tuples and plain lists must not trip
     # the unpersist walk.
-    cache = register_memo({})
-    cache[("a", "b")] = ([("x", 1)], None)
-    cache[("c", "d")] = [1, 2, 3]
+    shared(spark, "/corpus/e", "tuple", lambda: ([("x", 1)], None))
+    shared(spark, "/corpus/e", "list", lambda: [1, 2, 3])
     assert clear_memos() >= 2
-    assert cache == {}
+    assert _entries() == 0

@@ -110,7 +110,7 @@ def test_ivfpq_hits_come_from_probed_cells(spark, sf_dir):
     """Every IVFPQ hit must lie in one of the query's IVFPQ_NPROBE
     nearest coarse cells (the index never scans other partitions),
     with a non-negative integer ADC distance."""
-    from rdbms_metadata_manager_spark.llm.kmeans import _dist2, trained_assignments
+    from rdbms_metadata_manager_spark.llm.kmeans import _dist2, shared_centroids
     from rdbms_metadata_manager_spark.llm.pq import IVFPQ_NPROBE, ivfpq_residual_search
     from rdbms_metadata_manager_spark.llm.similarity import _as_double
 
@@ -119,7 +119,7 @@ def test_ivfpq_hits_come_from_probed_cells(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", _as_double("embedding").alias("v")
     )
-    centroids, _ = trained_assignments(emb, checkpoint_assigned=False, cache_key=sf_dir)
+    centroids = shared_centroids(spark, sf_dir, emb)
     probed = [
         r.cid
         for r in (
