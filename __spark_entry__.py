@@ -31,9 +31,6 @@ def _ensure_confs(spark: SparkSession) -> SparkSession:
         # faster for local relations anyway).  Set it here so no query
         # depends on who built the session (VERDICT r2 item 1b).
         ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-        # Spark 4.1 PyDS filter pushdown: the pg_catalog reader defines
-        # pushFilters(), which ERRORS (not degrades) when this is off.
-        ("spark.sql.python.filterPushdown.enabled", "true"),
         # Correctness-neutral but plan-shaping (all runtime-settable):
         # without them a stock session (200 shuffle partitions, 10 MB
         # broadcast cap) runs the same queries with slower plans.

@@ -9,9 +9,9 @@ so Catalyst/Tungsten pick the physical strategy and the same code
 scales from a laptop to a 1000-executor cluster.
 
 Layout:
-  catalog/   metadata data model, fixtures, JDBC catalog sources
+  catalog/   metadata data model, fixtures, live catalog readers
   rules/     the 5 data-quality rules as composable DataFrame transforms
-  sinks/     console / CSV / parquet sinks
+  sinks/     console / CSV sinks
   queries/   relational analytics surface (joins, aggs, windows, ...)
   llm/       dedup, similarity search, text analysis, multimodal
   streaming/ Structured Streaming over the events surface

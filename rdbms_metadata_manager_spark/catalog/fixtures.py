@@ -4,9 +4,9 @@ Two synthetic catalogs reconstructed from the reference's golden
 output (reference exports-sample/ecommerce_db_schema_issues.csv) and
 its rule semantics (reference app.py:41-105):
 
-- ``ecommerce_db`` — yields the canonical 19-issue set under
-  current-code semantics (the 21-row golden CSV is stale; see
-  SURVEY.md §2.3(5)).
+- ``ecommerce_db`` — yields the canonical 18-issue set under
+  current-code semantics, pinned by ``tests/test_rules.py::GOLDEN_18``
+  (the 21-row golden CSV is stale; see SURVEY.md §2.3(5)).
 - ``quirks_db`` — exercises every semantic trap: composite-FK
   first-column-only (app.py:35), ``startswith("id")`` (app.py:54),
   keyword substring matching (app.py:66-67), ``unique=None``
@@ -14,8 +14,8 @@ its rule semantics (reference app.py:41-105):
 
 Rows are module-level Python tuples, NOT parquet files: the same
 tuples build the Spark DataFrames here and the DuckDB ``VALUES``
-oracle in ``queries/metadata_oracle.py``, so Spark and oracle always
-see identical input.
+oracle in ``queries/metadata.py::_rules_oracle_sql``, so Spark and
+oracle always see identical input.
 """
 
 from __future__ import annotations

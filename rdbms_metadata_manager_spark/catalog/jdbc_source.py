@@ -1,23 +1,11 @@
-"""Live-catalog JDBC sources for MySQL and PostgreSQL.
+"""Live-catalog JDBC transport for MySQL and PostgreSQL.
 
-Replaces the reference's SQLAlchemy reflection (app.py:27-33), which
-issues ~3-5 round-trips PER TABLE (reflect() plus redundant
-per-table get_indexes/get_foreign_keys — the 2x N+1 pattern,
-SURVEY.md §4.1). Here the whole catalog arrives in THREE set-oriented
-JDBC reads regardless of table count, producing the same three
-DataFrame contracts as ``catalog.schemas``:
-
-    columns_meta / indexes_meta / foreign_keys_meta
-
-Dialect differences live entirely in this module: the rules engine
-never sees them. Type names are normalized to the SQLAlchemy-class-
-name-style uppercase strings the rules compare against (reference
-app.py:39 yields "VARCHAR", "TINYINT", "DATETIME", ...).
-
-The PostgreSQL query text and post-processing are integration-tested
-against a real PostgreSQL server via the psql transport in
+The three catalog faces (SQL, raw schemas, post-processing) live in
+``catalog.faces``; this module supplies only the wire,
+``spark.read.format("jdbc")``. The face SQL is integration-tested
+against a real PostgreSQL server through the psql transport in
 ``catalog.pg_live`` (tests/test_pg_live.py); only the JDBC wire
-itself (spark.read.format("jdbc")) lacks a driver jar here.
+itself lacks a driver jar here.
 """
 
 from __future__ import annotations
@@ -25,43 +13,19 @@ from __future__ import annotations
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-# information_schema.data_type / pg type names → SQLAlchemy class-name
-# style (reference app.py:39). Anything absent passes through upper().
-_TYPE_NORMALIZATION = {
-    "INT": "INTEGER",
-    "INT4": "INTEGER",
-    "INT8": "BIGINT",
-    "INT2": "SMALLINT",
-    "CHARACTER VARYING": "VARCHAR",
-    "CHARACTER": "CHAR",
-    "TIMESTAMP WITHOUT TIME ZONE": "TIMESTAMP",
-    "TIMESTAMP WITH TIME ZONE": "TIMESTAMP",
-    "DOUBLE PRECISION": "FLOAT",
-    "DOUBLE": "FLOAT",
-    "REAL": "FLOAT",
-    "BOOL": "BOOLEAN",
-    "SERIAL": "INTEGER",
-    "BIGSERIAL": "BIGINT",
-}
+from .faces import FACES, read_face
 
 
 def get_database_name(db_url: str) -> str:
     """Extract the database (schema) name from a connection URL —
-    parity with reference app.py:14-22."""
-    database_name = urlparse(db_url).path.lstrip("/")
+    parity with reference app.py:14-22. A ``jdbc:`` prefix is
+    stripped first: ``urlparse`` would otherwise read ``jdbc`` as the
+    scheme and return the whole ``mysql://host/db`` remainder."""
+    database_name = urlparse(db_url.removeprefix("jdbc:")).path.lstrip("/")
     if database_name:
         return database_name
     raise ValueError("Could not extract database name from DB_URL.")
-
-
-def _normalize_type(col: F.Column) -> F.Column:
-    upper = F.upper(col)
-    expr = upper
-    for src, dst in _TYPE_NORMALIZATION.items():
-        expr = F.when(upper == src, F.lit(dst)).otherwise(expr)
-    return expr
 
 
 def _jdbc(spark: SparkSession, url: str, query: str, properties: dict | None = None) -> DataFrame:
@@ -76,167 +40,14 @@ def _jdbc(spark: SparkSession, url: str, query: str, properties: dict | None = N
     return reader.load()
 
 
-# --- MySQL ----------------------------------------------------------------
+def read_catalog_jdbc(
+    spark: SparkSession, url: str, database: str, dialect: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The three catalog contracts over JDBC — the drop-in input for
+    ``rules.detect_schema_flaws``. ``dialect`` is ``mysql`` or
+    ``postgresql``."""
 
-_MYSQL_COLUMNS_QUERY = """
-SELECT c.table_schema      AS `database`,
-       c.table_name,
-       c.column_name,
-       c.ordinal_position  AS ordinal,
-       c.data_type,
-       c.character_maximum_length AS char_max_length,
-       (c.is_nullable = 'YES')    AS is_nullable,
-       NULL                       AS is_unique,
-       (c.column_key = 'PRI')     AS is_primary_key
-FROM information_schema.columns c
-JOIN information_schema.tables t
-  ON  t.table_schema = c.table_schema
-  AND t.table_name   = c.table_name
-WHERE c.table_schema = '{db}'
-  AND t.table_type = 'BASE TABLE'
-"""
+    def fetch(sql, _raw_schema):
+        return _jdbc(spark, url, sql)
 
-_MYSQL_INDEXES_QUERY = """
-SELECT table_schema AS `database`,
-       table_name,
-       index_name,
-       column_name,
-       (non_unique = 0) AS is_unique
-FROM information_schema.statistics
-WHERE table_schema = '{db}'
-"""
-
-_MYSQL_FK_QUERY = """
-SELECT kcu.table_schema AS `database`,
-       kcu.table_name,
-       kcu.constraint_name,
-       kcu.column_name,
-       kcu.ordinal_position,
-       kcu.referenced_table_name  AS referred_table,
-       kcu.referenced_column_name AS referred_column
-FROM information_schema.key_column_usage kcu
-JOIN information_schema.table_constraints tc
-  ON  tc.constraint_schema = kcu.constraint_schema
-  AND tc.table_name = kcu.table_name
-  AND tc.constraint_name = kcu.constraint_name
-WHERE tc.constraint_type = 'FOREIGN KEY'
-  AND kcu.table_schema = '{db}'
-"""
-
-# --- PostgreSQL -----------------------------------------------------------
-
-# The pk subquery correlates key_column_usage back to
-# table_constraints on (schema, table, name) — PostgreSQL constraint
-# names are unique only per table/schema, so a join on
-# constraint_name alone cross-matches same-named PKs (users_pkey in
-# public and backup schemas), duplicating columns_meta rows through
-# the LEFT JOIN. Same bug class as the FK query's documented fix.
-# The tables join drops views (the reference's SQLAlchemy reflection
-# audits base tables only; a view's columns have no indexes to see,
-# so every large-varchar view column would fire a false Rule 1).
-_PG_COLUMNS_QUERY = """
-SELECT c.table_catalog AS database,
-       c.table_name,
-       c.column_name,
-       c.ordinal_position AS ordinal,
-       c.data_type,
-       c.character_maximum_length AS char_max_length,
-       (c.is_nullable = 'YES') AS is_nullable,
-       NULL::boolean AS is_unique,
-       (pk.column_name IS NOT NULL) AS is_primary_key
-FROM information_schema.columns c
-JOIN information_schema.tables t
-  ON  t.table_schema = c.table_schema
-  AND t.table_name   = c.table_name
-LEFT JOIN (
-    SELECT DISTINCT kcu.table_schema, kcu.table_name, kcu.column_name
-    FROM information_schema.table_constraints tc
-    JOIN information_schema.key_column_usage kcu
-      ON  kcu.constraint_schema = tc.constraint_schema
-      AND kcu.table_name        = tc.table_name
-      AND kcu.constraint_name   = tc.constraint_name
-    WHERE tc.constraint_type = 'PRIMARY KEY'
-) pk ON pk.table_schema = c.table_schema
-    AND pk.table_name   = c.table_name
-    AND pk.column_name  = c.column_name
-WHERE c.table_schema = 'public'
-  AND t.table_type = 'BASE TABLE'
-"""
-
-_PG_INDEXES_QUERY = """
-SELECT current_database() AS database,
-       t.relname AS table_name,
-       i.relname AS index_name,
-       a.attname AS column_name,
-       ix.indisunique AS is_unique
-FROM pg_class t
-JOIN pg_index ix ON t.oid = ix.indrelid
-JOIN pg_class i ON i.oid = ix.indexrelid
-JOIN pg_attribute a ON a.attrelid = t.oid AND a.attnum = ANY(ix.indkey)
-WHERE t.relkind IN ('r', 'p') AND t.relnamespace = 'public'::regnamespace
-"""
-
-# Multi-column FKs pair constrained→referred columns positionally by
-# zipping pg_constraint's conkey/confkey arrays (multi-array unnest
-# WITH ORDINALITY). pg_catalog, not information_schema, because
-# PostgreSQL constraint names are unique only PER TABLE: an
-# information_schema join on (constraint_schema, constraint_name)
-# cross-matches same-named constraints on different tables, while
-# con.oid keys each constraint exactly once. Verified against live
-# PostgreSQL 15 (tests/test_pg_live.py, incl. the duplicate-name
-# scenario).
-_PG_FK_QUERY = """
-SELECT current_database() AS database,
-       rel.relname  AS table_name,
-       con.conname  AS constraint_name,
-       att.attname  AS column_name,
-       u.ord        AS ordinal_position,
-       frel.relname AS referred_table,
-       fatt.attname AS referred_column
-FROM pg_constraint con
-JOIN pg_class rel  ON rel.oid = con.conrelid
-JOIN pg_class frel ON frel.oid = con.confrelid
-CROSS JOIN LATERAL unnest(con.conkey, con.confkey) WITH ORDINALITY AS u(attnum, fattnum, ord)
-JOIN pg_attribute att  ON att.attrelid = con.conrelid  AND att.attnum = u.attnum
-JOIN pg_attribute fatt ON fatt.attrelid = con.confrelid AND fatt.attnum = u.fattnum
-WHERE con.contype = 'f' AND rel.relnamespace = 'public'::regnamespace
-"""
-
-
-def read_columns_meta(spark: SparkSession, jdbc_url: str, database: str, dialect: str = "mysql") -> DataFrame:
-    query = (_MYSQL_COLUMNS_QUERY if dialect == "mysql" else _PG_COLUMNS_QUERY).format(db=database)
-    df = _jdbc(spark, jdbc_url, query)
-    return df.withColumn("data_type", _normalize_type(F.col("data_type")))
-
-
-def read_indexes_meta(spark: SparkSession, jdbc_url: str, database: str, dialect: str = "mysql") -> DataFrame:
-    query = (_MYSQL_INDEXES_QUERY if dialect == "mysql" else _PG_INDEXES_QUERY).format(db=database)
-    return _jdbc(spark, jdbc_url, query)
-
-
-def group_foreign_keys(df: DataFrame) -> DataFrame:
-    """Collapse flat (constraint, column, ordinal) FK rows to one row
-    per constraint with the ordered ``constrained_columns`` array the
-    rules contract expects — ``sort_array(collect_list(struct(ordinal,
-    col)))`` keeps column order so ``element_at(..., 1)`` matches the
-    reference's ``constrained_columns[0]`` (app.py:35). Shared by the
-    JDBC readers and the live-psql transport (catalog.pg_live)."""
-    return (
-        df.groupBy("database", "table_name", "constraint_name")
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("ordinal_position", "column_name"))),
-                lambda s: s["column_name"],
-            ).alias("constrained_columns"),
-            F.first("referred_table").alias("referred_table"),
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("ordinal_position", "referred_column"))),
-                lambda s: s["referred_column"],
-            ).alias("referred_columns"),
-        )
-    )
-
-
-def read_foreign_keys_meta(spark: SparkSession, jdbc_url: str, database: str, dialect: str = "mysql") -> DataFrame:
-    query = (_MYSQL_FK_QUERY if dialect == "mysql" else _PG_FK_QUERY).format(db=database)
-    return group_foreign_keys(_jdbc(spark, jdbc_url, query))
+    return tuple(read_face(face, dialect, database, fetch) for face in FACES)

@@ -1,10 +1,11 @@
-"""Live-MySQL catalog reader over a ``mysql`` CLI subprocess transport.
+"""Live-MySQL catalog transport over a ``mysql`` CLI subprocess.
 
 Integration face for the reference's OTHER supported engine — MySQL is
-its golden-sample database (reference README.md:3,56). The catalog SQL
-is the SAME text the JDBC reader uses (``jdbc_source._MYSQL_*``); only
-the wire differs: no JDBC driver jar or Python DB-API client ships in
-this environment, so rows travel as ``mysql --batch --xml`` output.
+its golden-sample database (reference README.md:3,56). The catalog
+SQL and its post-processing are ``catalog.faces``'s, shared with the
+JDBC and PostgreSQL transports; this module supplies only the wire.
+No JDBC driver jar or Python DB-API client ships in this
+environment, so rows travel as ``mysql --batch --xml`` output.
 
 XML, not tab-batch, because the default ``--batch`` format prints SQL
 NULL as the literal four characters ``NULL`` — indistinguishable from
@@ -12,13 +13,11 @@ a VARCHAR cell holding the string 'NULL'. The XML writer marks NULL
 with an explicit ``xsi:nil="true"`` attribute and entity-escapes
 tabs/newlines/angle brackets, so framing is unambiguous for any data.
 
-The DataFrames produced here are byte-identical contracts to the
-fixture and JDBC paths, so ``rules.detect_schema_flaws`` is
-transport-agnostic. Mirrors ``catalog.pg_live`` (the PostgreSQL twin,
-integration-proven in tests/test_pg_live.py); this module's transport
-parser is unit-tested without a server, and the full loop runs in
-tests/test_mysql_live.py the moment a mysqld/mariadbd appears in the
-environment (none ships today — the test skips cleanly).
+This module's transport parser is unit-tested without a server, and
+the full loop runs in tests/test_mysql_live.py the moment a
+mysqld/mariadbd appears in the environment (none ships today — the
+test skips cleanly). The PostgreSQL twin, ``catalog.pg_live``, is
+integration-proven in tests/test_pg_live.py.
 
 Scale note: identical to pg_live — a catalog is small even for a huge
 warehouse, so one driver-side read is the right shape; beyond ~10^6
@@ -28,19 +27,14 @@ catalog rows the JDBC partitioned read is the cluster path.
 from __future__ import annotations
 
 import os
-import re
 import shutil
 import subprocess
 import xml.etree.ElementTree as ET
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from . import jdbc_source
+from .faces import FACES, coerce, read_face, validate_database_ident
 from .fixtures import _local_df
-from .pg_live import _FK_FLAT_SCHEMA
-from .schemas import COLUMNS_META_SCHEMA, INDEXES_META_SCHEMA
 
 _XSI_NIL = "{http://www.w3.org/2001/XMLSchema-instance}nil"
 
@@ -82,23 +76,6 @@ def parse_xml(xml_text: str) -> list[list[str | None]]:
     return rows
 
 
-_DB_IDENT_RX = re.compile(r"^[A-Za-z0-9_$]+$")
-
-
-def validate_database_ident(database: str) -> str:
-    """The database name is interpolated into both the catalog SQL
-    (``.format(db=...)`` string literals) and the ``-D`` flag, so it
-    must be a plain unquoted MySQL identifier — anything else
-    (quotes, whitespace, semicolons) is rejected here rather than
-    reaching the SQL text (ADVICE r4 #3)."""
-    if not _DB_IDENT_RX.match(database):
-        raise ValueError(
-            f"invalid MySQL database identifier {database!r}: only"
-            " [A-Za-z0-9_$] names are accepted on the CLI transport"
-        )
-    return database
-
-
 def run_sql(
     sql: str,
     database: str,
@@ -130,50 +107,6 @@ def run_sql(
     return parse_xml(out)
 
 
-def _coerce(rows: list[list[str | None]], schema: T.StructType) -> list[tuple]:
-    """XML strings → Python values per the contract schema. MySQL has
-    no boolean type: comparison results arrive as '1'/'0'."""
-
-    def conv(v: str | None, dt: T.DataType):
-        if v is None:
-            return None
-        if isinstance(dt, (T.IntegerType, T.LongType)):
-            return int(v)
-        if isinstance(dt, T.BooleanType):
-            return v == "1"
-        return v
-
-    return [tuple(conv(v, f.dataType) for v, f in zip(row, schema.fields)) for row in rows]
-
-
-def read_columns_meta_live(
-    spark: SparkSession, database: str, socket: str | None = None, host: str | None = None,
-    user: str = "root", password: str | None = None,
-) -> DataFrame:
-    sql = jdbc_source._MYSQL_COLUMNS_QUERY.format(db=validate_database_ident(database))
-    rows = _coerce(run_sql(sql, database, socket, host, user, password), COLUMNS_META_SCHEMA)
-    df = _local_df(spark, rows, COLUMNS_META_SCHEMA)
-    return df.withColumn("data_type", jdbc_source._normalize_type(F.col("data_type")))
-
-
-def read_indexes_meta_live(
-    spark: SparkSession, database: str, socket: str | None = None, host: str | None = None,
-    user: str = "root", password: str | None = None,
-) -> DataFrame:
-    sql = jdbc_source._MYSQL_INDEXES_QUERY.format(db=validate_database_ident(database))
-    rows = _coerce(run_sql(sql, database, socket, host, user, password), INDEXES_META_SCHEMA)
-    return _local_df(spark, rows, INDEXES_META_SCHEMA)
-
-
-def read_foreign_keys_meta_live(
-    spark: SparkSession, database: str, socket: str | None = None, host: str | None = None,
-    user: str = "root", password: str | None = None,
-) -> DataFrame:
-    sql = jdbc_source._MYSQL_FK_QUERY.format(db=validate_database_ident(database))
-    rows = _coerce(run_sql(sql, database, socket, host, user, password), _FK_FLAT_SCHEMA)
-    return jdbc_source.group_foreign_keys(_local_df(spark, rows, _FK_FLAT_SCHEMA))
-
-
 def read_catalog_live(
     spark: SparkSession, database: str, socket: str | None = None, host: str | None = None,
     user: str = "root", password: str | None = None,
@@ -182,8 +115,9 @@ def read_catalog_live(
     input for ``rules.detect_schema_flaws``. Credentials come from the
     caller (the CLI parses them out of the DB_URL); the database name
     is identifier-validated before any SQL interpolation."""
-    return (
-        read_columns_meta_live(spark, database, socket, host, user, password),
-        read_indexes_meta_live(spark, database, socket, host, user, password),
-        read_foreign_keys_meta_live(spark, database, socket, host, user, password),
-    )
+
+    def fetch(sql, schema):
+        rows = run_sql(sql, database, socket, host, user, password)
+        return _local_df(spark, coerce(rows, schema, "1"), schema)
+
+    return tuple(read_face(face, "mysql", database, fetch) for face in FACES)

@@ -1,12 +1,13 @@
-"""Live-PostgreSQL catalog reader over a ``psql`` subprocess transport.
+"""Live-PostgreSQL catalog transport over a ``psql`` subprocess.
 
 Integration face for the reference's primary mode — a live database
 connection (reference app.py:123-125, README.md:43-50). The catalog
-SQL is the SAME text the JDBC reader uses (``jdbc_source._PG_*``);
-only the wire differs: this container has PostgreSQL server binaries
-but no JDBC driver jar or Python DB-API client, so rows travel as
-``COPY (…) TO STDOUT (FORMAT text)`` through ``psql`` (tab-delimited,
-backslash-escaped, unambiguous ``\\N`` NULL).
+SQL and its post-processing are ``catalog.faces``'s, shared with the
+JDBC and MySQL transports; this module supplies only the wire. This
+container has PostgreSQL server binaries but no JDBC driver jar or
+Python DB-API client, so rows travel as ``COPY (…) TO STDOUT (FORMAT
+text)`` through ``psql`` (tab-delimited, backslash-escaped,
+unambiguous ``\\N`` NULL).
 
 Scale note: a catalog is small even for a huge warehouse (10^5 tables
 × 10^2 columns ≈ 10^7 rows ≈ 1 GB of text), so a single driver-side
@@ -19,16 +20,14 @@ transport-agnostic.
 
 from __future__ import annotations
 
+import os
 import shutil
 import subprocess
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from . import jdbc_source
+from .faces import coerce, read_face
 from .fixtures import _local_df
-from .schemas import COLUMNS_META_SCHEMA, INDEXES_META_SCHEMA
 
 _NULL = "\\N"
 
@@ -55,38 +54,36 @@ def _unescape(v: str) -> str:
             i += 1
     return "".join(out)
 
-# Flat FK rows as they leave the catalog query, before
-# jdbc_source.group_foreign_keys collapses them to one row/constraint.
-_FK_FLAT_SCHEMA = T.StructType(
-    [
-        T.StructField("database", T.StringType(), False),
-        T.StructField("table_name", T.StringType(), False),
-        T.StructField("constraint_name", T.StringType(), False),
-        T.StructField("column_name", T.StringType(), False),
-        T.StructField("ordinal_position", T.IntegerType(), False),
-        T.StructField("referred_table", T.StringType(), False),
-        T.StructField("referred_column", T.StringType(), False),
-    ]
-)
-
 
 def psql_available() -> bool:
     return shutil.which("psql") is not None
 
 
-def run_sql(sql: str, database: str, host: str, user: str = "postgres") -> list[list[str | None]]:
+def run_sql(
+    sql: str,
+    database: str,
+    host: str,
+    user: str = "postgres",
+    port: int | None = None,
+    password: str | None = None,
+) -> list[list[str | None]]:
     """Run ``sql`` and return rows as lists of strings (None for SQL
-    NULL). ``host`` may be a unix-socket directory or a hostname.
+    NULL). ``host`` may be a unix-socket directory or a hostname; with
+    no ``port``, psql's default applies (``PGPORT``, else 5432). The
+    password travels via the ``PGPASSWORD`` environment variable,
+    never argv (argv is world-readable in /proc).
     Uses COPY *text* format: tab-delimited, backslash-escaped, with
     an unambiguous ``\\N`` NULL (a data value of those two characters
     arrives escaped as ``\\\\N``)."""
     copy_stmt = f"COPY ({sql.rstrip().rstrip(';')}) TO STDOUT (FORMAT text)"
-    out = subprocess.run(
-        ["psql", "-h", host, "-U", user, "-d", database, "-X", "-q", "-v", "ON_ERROR_STOP=1", "-c", copy_stmt],
-        check=True,
-        capture_output=True,
-        text=True,
-    ).stdout
+    cmd = ["psql", "-h", host]
+    if port is not None:
+        cmd += ["-p", str(port)]
+    cmd += ["-U", user, "-d", database, "-X", "-q", "-v", "ON_ERROR_STOP=1", "-c", copy_stmt]
+    env = None
+    if password is not None:
+        env = dict(os.environ, PGPASSWORD=password)
+    out = subprocess.run(cmd, check=True, capture_output=True, text=True, env=env).stdout
     # split on '\n' ONLY: COPY text escapes \n/\r in data, so the row
     # terminator is exactly one newline — str.splitlines() would also
     # split on U+0085/U+2028/U+2029, which COPY text does NOT escape,
@@ -100,42 +97,36 @@ def run_sql(sql: str, database: str, host: str, user: str = "postgres") -> list[
     ]
 
 
-def _coerce(rows: list[list[str | None]], schema: T.StructType) -> list[tuple]:
-    """COPY-text strings → Python values per the contract schema
-    (PostgreSQL output booleans are 't'/'f')."""
-    def conv(v: str | None, dt: T.DataType):
-        if v is None:
-            return None
-        if isinstance(dt, (T.IntegerType, T.LongType)):
-            return int(v)
-        if isinstance(dt, T.BooleanType):
-            return v == "t"
-        return v
+def _read(face: str, spark: SparkSession, database: str, host: str, conn: dict) -> DataFrame:
+    def fetch(sql, schema):
+        rows = run_sql(sql, database, host, **conn)
+        return _local_df(spark, coerce(rows, schema, "t"), schema)
 
-    return [tuple(conv(v, f.dataType) for v, f in zip(row, schema.fields)) for row in rows]
+    return read_face(face, "postgresql", database, fetch)
 
 
-def read_columns_meta_live(spark: SparkSession, database: str, host: str) -> DataFrame:
-    rows = _coerce(run_sql(jdbc_source._PG_COLUMNS_QUERY, database, host), COLUMNS_META_SCHEMA)
-    df = _local_df(spark, rows, COLUMNS_META_SCHEMA)
-    return df.withColumn("data_type", jdbc_source._normalize_type(F.col("data_type")))
+def read_columns_meta_live(spark: SparkSession, database: str, host: str, **conn) -> DataFrame:
+    return _read("columns", spark, database, host, conn)
 
 
-def read_indexes_meta_live(spark: SparkSession, database: str, host: str) -> DataFrame:
-    rows = _coerce(run_sql(jdbc_source._PG_INDEXES_QUERY, database, host), INDEXES_META_SCHEMA)
-    return _local_df(spark, rows, INDEXES_META_SCHEMA)
+def read_indexes_meta_live(spark: SparkSession, database: str, host: str, **conn) -> DataFrame:
+    return _read("indexes", spark, database, host, conn)
 
 
-def read_foreign_keys_meta_live(spark: SparkSession, database: str, host: str) -> DataFrame:
-    rows = _coerce(run_sql(jdbc_source._PG_FK_QUERY, database, host), _FK_FLAT_SCHEMA)
-    return jdbc_source.group_foreign_keys(_local_df(spark, rows, _FK_FLAT_SCHEMA))
+def read_foreign_keys_meta_live(spark: SparkSession, database: str, host: str, **conn) -> DataFrame:
+    return _read("foreign_keys", spark, database, host, conn)
 
 
-def read_catalog_live(spark: SparkSession, database: str, host: str) -> tuple[DataFrame, DataFrame, DataFrame]:
+def read_catalog_live(
+    spark: SparkSession, database: str, host: str, **conn
+) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The three catalog contracts from a live PostgreSQL — the
-    drop-in input for ``rules.detect_schema_flaws``."""
+    drop-in input for ``rules.detect_schema_flaws``. ``conn`` is
+    run_sql's keyword arguments (user, port, password). Calls the
+    three per-face readers through this module's globals, so a caller
+    can wrap each one (perfbench times them this way)."""
     return (
-        read_columns_meta_live(spark, database, host),
-        read_indexes_meta_live(spark, database, host),
-        read_foreign_keys_meta_live(spark, database, host),
+        read_columns_meta_live(spark, database, host, **conn),
+        read_indexes_meta_live(spark, database, host, **conn),
+        read_foreign_keys_meta_live(spark, database, host, **conn),
     )

@@ -35,8 +35,6 @@ def get_spark(app_name: str = "rdbms-metadata-manager-spark") -> SparkSession:
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Spark 4.1 Python DataSource filter pushdown (pg_catalog reader)
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         # Older testdata generations store events.ts as TIMESTAMP(NANOS),
         # which the Spark parquet reader rejects; this conf surfaces it
         # as a raw long for the loader to convert, and is a no-op on the

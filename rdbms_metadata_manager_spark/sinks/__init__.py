@@ -1,3 +1,3 @@
-from .report import print_report, write_csv, write_parquet
+from .report import print_report, write_csv
 
-__all__ = ["print_report", "write_csv", "write_parquet"]
+__all__ = ["print_report", "write_csv"]

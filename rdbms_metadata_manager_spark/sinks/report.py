@@ -6,9 +6,8 @@ header ``Table,Column,Issue Type,Issue,Recommendation``
 
 - console sink formats on the driver from a bounded ``collect()``
   (an issue report is human-scale by definition; we still cap it);
-- CSV sink is a distributed write — ``coalesce(1)`` only when a
-  single file is required for reference-compatibility, partitioned
-  parquet otherwise (the scale path).
+- CSV sink is a Spark write coalesced to one part file, as the
+  reference writes one CSV.
 
 The reference writes into a never-created ``exports/`` directory
 (app.py:135 vs Dockerfile:19 — SURVEY.md §2.3(8)); we create parent
@@ -56,17 +55,8 @@ def _renamed(issues: DataFrame) -> DataFrame:
     )
 
 
-def write_csv(issues: DataFrame, path: str, single_file: bool = True) -> None:
-    """CSV sink (app.py:110-119). ``single_file`` reproduces the
-    reference's one-file output; leave False for partitioned writes
-    at scale."""
+def write_csv(issues: DataFrame, path: str) -> None:
+    """CSV sink (app.py:110-119): one part file, as the reference
+    writes one CSV."""
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    df = _renamed(issues)
-    if single_file:
-        df = df.coalesce(1)
-    df.write.mode("overwrite").option("header", True).csv(path)
-
-
-def write_parquet(issues: DataFrame, path: str) -> None:
-    """Scale-path sink: partitioned parquet, no coalesce."""
-    issues.write.mode("overwrite").parquet(path)
+    _renamed(issues).coalesce(1).write.mode("overwrite").option("header", True).csv(path)

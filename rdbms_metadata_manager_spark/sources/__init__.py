@@ -1,4 +1,3 @@
-from .pg_catalog import PgCatalogDataSource, read_pg_catalog
 from .pyds import (
     CatalogFixtureDataSource,
     TickStreamDataSource,
@@ -8,9 +7,7 @@ from .pyds import (
 
 __all__ = [
     "CatalogFixtureDataSource",
-    "PgCatalogDataSource",
     "TickStreamDataSource",
     "read_catalog_fixture",
-    "read_pg_catalog",
     "read_tick_stream",
 ]

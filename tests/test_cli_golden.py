@@ -38,7 +38,7 @@ def test_cli_fixture_mode_and_golden_csv(tmp_path):
 
     export_dir = tmp_path / "exports" / "ecommerce_db_schema_issues.csv"
     parts = sorted(export_dir.glob("part-*.csv"))
-    assert len(parts) == 1  # single_file reference-compat mode
+    assert len(parts) == 1  # one part file, as the reference writes one CSV
     produced = parts[0].read_text()
     assert produced == open(GOLDEN).read()
 

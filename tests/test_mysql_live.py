@@ -7,7 +7,7 @@ this is the MySQL twin, structured identically: provision a throwaway
 server in a temp dir (skip cleanly when no mysqld/mariadbd ships in
 the container — none does today), create the ecommerce scenario with
 actual DDL, read the catalog back through ``catalog.mysql_live`` (the
-SAME information_schema SQL text the JDBC reader uses), run
+face SQL of ``catalog.faces``, shared with the JDBC reader), run
 ``detect_schema_flaws``, and check:
 
 1. engine-vs-oracle: the DuckDB rules oracle rendered from the live
@@ -342,11 +342,18 @@ def test_parse_xml_empty_resultset():
 
 
 def test_coerce_maps_mysql_booleans_and_ints():
+    """One coerce serves both text wires: MySQL sends booleans as
+    '1'/'0', PostgreSQL's COPY text as 't'/'f'."""
+    from rdbms_metadata_manager_spark.catalog.faces import coerce
     from rdbms_metadata_manager_spark.catalog.schemas import COLUMNS_META_SCHEMA
 
     rows = [["ecommerce_db", "Users", "email", "3", "varchar", "100", "1", None, "0"]]
-    out = mysql_live._coerce(rows, COLUMNS_META_SCHEMA)
+    out = coerce(rows, COLUMNS_META_SCHEMA, "1")
     assert out == [("ecommerce_db", "Users", "email", 3, "varchar", 100, True, None, False)]
+
+    pg_rows = [["ecommerce_db", "Users", "user_id", "1", "integer", None, "f", None, "t"]]
+    out = coerce(pg_rows, COLUMNS_META_SCHEMA, "t")
+    assert out == [("ecommerce_db", "Users", "user_id", 1, "integer", None, False, None, True)]
 
 
 def test_run_sql_passes_credentials_and_validates_ident(monkeypatch):

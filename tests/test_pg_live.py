@@ -5,7 +5,7 @@ its catalog, run the 5 rules (reference app.py:123-125). This test
 provisions a REAL PostgreSQL server (binaries ship in this container;
 initdb + pg_ctl in a temp dir, unix socket, trust auth), creates the
 ecommerce_db scenario with actual DDL, reads the catalog back through
-``catalog.pg_live`` (same SQL text as the JDBC reader), runs
+``catalog.pg_live`` (the face SQL of ``catalog.faces``), runs
 ``detect_schema_flaws``, and checks it two ways:
 
 1. engine-vs-oracle: the DuckDB rules oracle rendered from the SAME
@@ -30,7 +30,6 @@ import time
 
 import pytest
 
-from pyspark.sql import functions as F
 
 from rdbms_metadata_manager_spark.catalog import fixtures, pg_live
 from rdbms_metadata_manager_spark.queries.metadata import _rules_oracle_sql
@@ -335,83 +334,3 @@ def test_cli_main_runs_against_live_postgres(spark, pg_host, capsys, monkeypatch
     # rows and the composite-FK table adds one Rule-2 row on top of
     # the fixture's 18-issue golden set: 18 + 3
     assert out.count("Issue Type:") == 21
-
-
-def test_pg_catalog_datasource_matches_driver_side_read(spark, pg_host, live_catalog):
-    """The DataSource scan path (executors run the hash-bucketed
-    catalog query) must produce exactly the rows the driver-side
-    psql read does, for every face — including the grouped FK
-    contract — and must actually split the scan across partitions."""
-    from rdbms_metadata_manager_spark.sources import read_pg_catalog
-
-    cols, idx, fks = live_catalog
-    ds_cols = read_pg_catalog(spark, "columns", "ecommerce_db", pg_host)
-    ds_idx = read_pg_catalog(spark, "indexes", "ecommerce_db", pg_host)
-    ds_fks = read_pg_catalog(spark, "foreign_keys", "ecommerce_db", pg_host)
-
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    assert rows(ds_cols) == rows(cols)
-    assert rows(ds_idx) == rows(idx)
-    assert rows(ds_fks) == rows(fks)
-    assert ds_cols.rdd.getNumPartitions() == 4
-    # buckets partition the catalog: each table's rows land in one
-    # bucket and the buckets are collectively exhaustive (row counts
-    # already proven equal above)
-    per_part = ds_cols.select("table_name").rdd.mapPartitions(
-        lambda it: [set(r.table_name for r in it)]
-    ).collect()
-    seen = [t for s in per_part for t in s]
-    assert len(seen) == len(set(seen))
-
-
-def test_pg_catalog_datasource_filter_pushdown(spark, pg_host, live_catalog):
-    """Spark 4.1 PyDS pushFilters: an EqualTo/In on table_name must
-    (a) return exactly the Spark-side-filtered rows — correctness of
-    the WHERE rendering, including quote escaping — and (b) actually
-    reach the reader (asserted through the reader API directly, since
-    the scan re-checks pushed filters Spark-side by design)."""
-    from pyspark.sql.datasource import EqualTo, In, IsNull
-
-    from rdbms_metadata_manager_spark.sources import read_pg_catalog
-    from rdbms_metadata_manager_spark.sources.pg_catalog import _PgCatalogReader
-
-    cols, _, _ = live_catalog
-    base = read_pg_catalog(spark, "columns", "ecommerce_db", pg_host)
-
-    got_eq = base.filter(F.col("table_name") == "Products")
-    want_eq = sorted(tuple(r) for r in cols.collect() if r["table_name"] == "Products")
-    assert sorted(tuple(r) for r in got_eq.collect()) == want_eq and want_eq
-
-    got_in = base.filter(F.col("table_name").isin("Products", "Users"))
-    want_in = sorted(
-        tuple(r) for r in cols.collect() if r["table_name"] in ("Products", "Users")
-    )
-    assert sorted(tuple(r) for r in got_in.collect()) == want_in
-
-    # reader-level contract: supported filters render to conjuncts,
-    # unsupported ones pass through untouched; everything is returned
-    r = _PgCatalogReader("columns", "ecommerce_db", pg_host, 2)
-    fs = [
-        EqualTo(("table_name",), "it's"),          # escaping
-        In(("table_name",), ("Products", "Users")),
-        EqualTo(("no_such_col",), "x"),            # not in schema
-        IsNull(("table_name",)),                   # unsupported class
-    ]
-    back = list(r.pushFilters(fs))
-    assert back == fs
-    assert r.pushed == [
-        "q.\"table_name\" = 'it''s'",
-        "q.\"table_name\" IN ('Products', 'Users')",
-    ]
-    # pushed conjuncts shrink the per-bucket query result
-    from rdbms_metadata_manager_spark.sources.pg_catalog import _bucket_rows
-
-    full = sum(len(_bucket_rows("columns", "ecommerce_db", pg_host, 2, p)) for p in (0, 1))
-    pruned = sum(
-        len(_bucket_rows("columns", "ecommerce_db", pg_host, 2, p,
-                         ["q.\"table_name\" = 'Products'"]))
-        for p in (0, 1)
-    )
-    assert 0 < pruned < full

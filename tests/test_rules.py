@@ -1,8 +1,9 @@
 """Rule-parity tests (SURVEY.md §5.2 items 1-2).
 
-Golden: the ecommerce_db fixture must yield exactly the 19-issue
-current-code set (FIXTURES.md §1.5); quirks_db exercises every
-semantic trap from SURVEY.md §2.3.
+Golden: the ecommerce_db fixture must yield exactly the 18-issue
+current-code set (``GOLDEN_18`` below explains why FIXTURES.md §1.5's
+19 is one too many); quirks_db exercises every semantic trap from
+SURVEY.md §2.3.
 """
 
 from __future__ import annotations
