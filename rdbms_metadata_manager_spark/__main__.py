@@ -127,8 +127,8 @@ def main() -> int:
         cols, idx, fks = read_catalog_jdbc(spark, db_url, database_name, dialect)
 
     issues = detect_schema_flaws(cols, idx, fks)
-    print_report(issues, database_name)
-    if not issues.isEmpty() and os.getenv("EXPORT_TO_CSV", "NO").strip().upper() == "YES":
+    found = print_report(issues, database_name)
+    if found and os.getenv("EXPORT_TO_CSV", "NO").strip().upper() == "YES":
         path = f"exports/{database_name}_schema_issues.csv"
         write_csv(issues, path)
         print(f"Results exported to {path}")

@@ -15,10 +15,12 @@ Everything a face needs to know lives in this module: which SQL it
 runs per dialect, the raw row schema it returns, and the
 post-processing that turns raw rows into the contract (type-name
 normalization for ``columns``, the ordered-array collapse for
-``foreign_keys``). A transport (``jdbc_source``, ``pg_live``,
-``mysql_live``) supplies only its wire, as a ``fetch(sql,
-raw_schema) -> DataFrame`` callable; the rules engine never sees a
-dialect.
+``foreign_keys``, each one SQL expression or statement). A transport
+(``jdbc_source``, ``pg_live``, ``mysql_live``) supplies only its
+wire, as a ``fetch(sql, raw_schema) -> DataFrame`` callable; the
+rules engine never sees a dialect. For PostgreSQL the three face
+queries also come as one face-tagged statement, ``PG_CATALOG_QUERY``,
+so a live read is one round trip (``read_tagged_catalog``).
 """
 
 from __future__ import annotations
@@ -54,12 +56,13 @@ _TYPE_NORMALIZATION = {
 }
 
 
-def _normalize_type(col: F.Column) -> F.Column:
-    upper = F.upper(col)
-    expr = upper
-    for src, dst in _TYPE_NORMALIZATION.items():
-        expr = F.when(upper == src, F.lit(dst)).otherwise(expr)
-    return expr
+# One CASE expression, so the whole normalization is one parse rather
+# than a chain of Column calls.
+_NORMALIZED_TYPE = (
+    "CASE upper(data_type) "
+    + " ".join(f"WHEN '{src}' THEN '{dst}'" for src, dst in _TYPE_NORMALIZATION.items())
+    + " ELSE upper(data_type) END"
+)
 
 
 # --- MySQL ----------------------------------------------------------------
@@ -111,42 +114,52 @@ WHERE tc.constraint_type = 'FOREIGN KEY'
 
 # --- PostgreSQL -----------------------------------------------------------
 
-# The pk subquery correlates key_column_usage back to
-# table_constraints on (schema, table, name) — PostgreSQL constraint
-# names are unique only per table/schema, so a join on
-# constraint_name alone cross-matches same-named PKs (users_pkey in
-# public and backup schemas), duplicating columns_meta rows through
-# the LEFT JOIN. Same bug class as the FK query's documented fix.
-# The tables join drops views (the reference's SQLAlchemy reflection
-# audits base tables only; a view's columns have no indexes to see,
-# so every large-varchar view column would fire a false Rule 1).
+# Straight from pg_catalog: the same rows information_schema.columns
+# gives (its data_type CASE, its character-length helpers), without
+# that view's joins through information_schema.tables and the
+# key_column_usage/table_constraints pair, which cost most of the
+# catalog read's server time. ``relkind IN ('r', 'p')`` is
+# information_schema's 'BASE TABLE': views are left out (the
+# reference's SQLAlchemy reflection audits base tables only; a view's
+# columns have no indexes to see, so every large-varchar view column
+# would fire a false Rule 1). The primary-key flag is an EXISTS over
+# the table's own pg_constraint rows, so a same-named constraint on
+# another table cannot match. One intended difference: the
+# information_schema views hide columns the connected role holds no
+# privilege on, while pg_catalog shows every column, as SQLAlchemy's
+# PostgreSQL reflection (the reference's reader) also does.
 _PG_COLUMNS_QUERY = """
-SELECT c.table_catalog AS database,
-       c.table_name,
-       c.column_name,
-       c.ordinal_position AS ordinal,
-       c.data_type,
-       c.character_maximum_length AS char_max_length,
-       (c.is_nullable = 'YES') AS is_nullable,
+SELECT current_database() AS database,
+       c.relname AS table_name,
+       a.attname AS column_name,
+       a.attnum AS ordinal,
+       CASE WHEN t.typtype = 'd' THEN
+              CASE WHEN bt.typelem <> 0 AND bt.typlen = -1 THEN 'ARRAY'
+                   WHEN nbt.nspname = 'pg_catalog' THEN format_type(t.typbasetype, NULL)
+                   ELSE 'USER-DEFINED' END
+            ELSE
+              CASE WHEN t.typelem <> 0 AND t.typlen = -1 THEN 'ARRAY'
+                   WHEN nt.nspname = 'pg_catalog' THEN format_type(a.atttypid, NULL)
+                   ELSE 'USER-DEFINED' END
+       END AS data_type,
+       information_schema._pg_char_max_length(information_schema._pg_truetypid(a.*, t.*),
+                                              information_schema._pg_truetypmod(a.*, t.*))
+         AS char_max_length,
+       NOT (a.attnotnull OR (t.typtype = 'd' AND t.typnotnull)) AS is_nullable,
        NULL::boolean AS is_unique,
-       (pk.column_name IS NOT NULL) AS is_primary_key
-FROM information_schema.columns c
-JOIN information_schema.tables t
-  ON  t.table_schema = c.table_schema
-  AND t.table_name   = c.table_name
-LEFT JOIN (
-    SELECT DISTINCT kcu.table_schema, kcu.table_name, kcu.column_name
-    FROM information_schema.table_constraints tc
-    JOIN information_schema.key_column_usage kcu
-      ON  kcu.constraint_schema = tc.constraint_schema
-      AND kcu.table_name        = tc.table_name
-      AND kcu.constraint_name   = tc.constraint_name
-    WHERE tc.constraint_type = 'PRIMARY KEY'
-) pk ON pk.table_schema = c.table_schema
-    AND pk.table_name   = c.table_name
-    AND pk.column_name  = c.column_name
-WHERE c.table_schema = 'public'
-  AND t.table_type = 'BASE TABLE'
+       EXISTS (SELECT 1 FROM pg_constraint k
+               WHERE k.conrelid = c.oid AND k.contype = 'p' AND a.attnum = ANY (k.conkey))
+         AS is_primary_key
+FROM pg_attribute a
+JOIN pg_class c ON c.oid = a.attrelid
+JOIN pg_type t ON t.oid = a.atttypid
+JOIN pg_namespace nt ON nt.oid = t.typnamespace
+LEFT JOIN (pg_type bt JOIN pg_namespace nbt ON nbt.oid = bt.typnamespace)
+       ON t.typtype = 'd' AND t.typbasetype = bt.oid
+WHERE c.relnamespace = 'public'::regnamespace
+  AND c.relkind IN ('r', 'p')
+  AND a.attnum > 0
+  AND NOT a.attisdropped
 """
 
 _PG_INDEXES_QUERY = """
@@ -189,26 +202,21 @@ WHERE con.contype = 'f' AND rel.relnamespace = 'public'::regnamespace
 """
 
 
-def group_foreign_keys(df: DataFrame) -> DataFrame:
-    """Collapse flat (constraint, column, ordinal) FK rows to one row
-    per constraint with the ordered ``constrained_columns`` array the
-    rules contract expects — ``sort_array(collect_list(struct(ordinal,
-    col)))`` keeps column order so ``element_at(..., 1)`` matches the
-    reference's ``constrained_columns[0]`` (app.py:35)."""
-    return (
-        df.groupBy("database", "table_name", "constraint_name")
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("ordinal_position", "column_name"))),
-                lambda s: s["column_name"],
-            ).alias("constrained_columns"),
-            F.first("referred_table").alias("referred_table"),
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("ordinal_position", "referred_column"))),
-                lambda s: s["referred_column"],
-            ).alias("referred_columns"),
-        )
-    )
+# Flat FK rows collapse to one row per constraint with the ordered
+# ``constrained_columns`` array the rules contract expects —
+# ``sort_array(collect_list(struct(ordinal, col)))`` keeps column order
+# so ``constrained_columns[0]`` matches the reference's
+# ``constrained_columns[0]`` (app.py:35).
+_FK_GROUPED = """
+SELECT database, table_name, constraint_name,
+       transform(sort_array(collect_list(struct(ordinal_position, column_name))),
+                 s -> s.column_name) AS constrained_columns,
+       first(referred_table) AS referred_table,
+       transform(sort_array(collect_list(struct(ordinal_position, referred_column))),
+                 s -> s.referred_column) AS referred_columns
+FROM {fks}
+GROUP BY database, table_name, constraint_name
+"""
 
 
 _QUERIES = {
@@ -224,8 +232,8 @@ _QUERIES = {
     },
 }
 
-# Flat FK rows as they leave the catalog query, before
-# group_foreign_keys collapses them to one row per constraint.
+# Flat FK rows as they leave the catalog query, before _FK_GROUPED
+# collapses them to one row per constraint.
 _FK_FLAT_SCHEMA = T.StructType(
     [
         T.StructField("database", T.StringType(), False),
@@ -264,7 +272,8 @@ def validate_database_ident(database: str) -> str:
 def coerce(rows: list[list[str | None]], schema: T.StructType, true_literal: str) -> list[tuple]:
     """Text-wire strings → Python values per ``schema``. SQL NULL
     arrives as None; booleans arrive as the dialect's text form
-    (PostgreSQL prints 't'/'f', MySQL has no boolean type and sends
+    (PostgreSQL prints 't'/'f', or 'true'/'false' once cast to text as
+    in ``PG_CATALOG_QUERY``; MySQL has no boolean type and sends
     comparison results as '1'/'0')."""
 
     def conv(v: str | None, dt: T.DataType):
@@ -277,6 +286,15 @@ def coerce(rows: list[list[str | None]], schema: T.StructType, true_literal: str
         return v
 
     return [tuple(conv(v, f.dataType) for v, f in zip(row, schema.fields)) for row in rows]
+
+
+def _contract(face: str, df: DataFrame) -> DataFrame:
+    """Raw face rows → the face's ``catalog.schemas`` contract."""
+    if face == "columns":
+        return df.withColumn("data_type", F.expr(_NORMALIZED_TYPE))
+    if face == "foreign_keys":
+        return df.sparkSession.sql(_FK_GROUPED, fks=df)
+    return df
 
 
 def read_face(
@@ -295,9 +313,33 @@ def read_face(
     sql = _QUERIES[dialect][face]
     if dialect == "mysql":
         sql = sql.format(db=validate_database_ident(database))
-    df = fetch(sql, _RAW_SCHEMAS[face])
-    if face == "columns":
-        return df.withColumn("data_type", _normalize_type(F.col("data_type")))
-    if face == "foreign_keys":
-        return group_foreign_keys(df)
-    return df
+    return _contract(face, fetch(sql, _RAW_SCHEMAS[face]))
+
+
+def _tagged(face: str, width: int) -> str:
+    names = _RAW_SCHEMAS[face].fieldNames()
+    fields = [f"q.{n}::text" for n in names] + ["NULL"] * (width - len(names))
+    return f"SELECT '{face}', {', '.join(fields)} FROM ({_QUERIES['postgresql'][face]}) q"
+
+
+# All three PostgreSQL faces in one statement, so a live read is one
+# round trip. UNION ALL needs one row type: each row leads with its
+# face's name, then that face's fields cast to text (booleans read
+# 'true'/'false'), padded with NULLs to the widest face.
+PG_CATALOG_QUERY = "\nUNION ALL\n".join(
+    _tagged(face, max(len(s.fields) for s in _RAW_SCHEMAS.values())) for face in FACES
+)
+
+
+def read_tagged_catalog(
+    rows: list[list[str | None]],
+    to_df: Callable[[list[list[str | None]], T.StructType], DataFrame],
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The three contracts from the rows of ``PG_CATALOG_QUERY``.
+    ``to_df(face_rows, raw_schema)`` turns one face's rows, tag
+    removed, into a DataFrame; trailing padding fields are beyond
+    ``raw_schema`` and are left for it to drop."""
+    by_face: dict[str, list] = {face: [] for face in FACES}
+    for face, *fields in rows:
+        by_face[face].append(fields)
+    return tuple(_contract(face, to_df(by_face[face], _RAW_SCHEMAS[face])) for face in FACES)

@@ -46,10 +46,6 @@ def client_binary() -> str | None:
     return None
 
 
-def mysql_available() -> bool:
-    return client_binary() is not None
-
-
 def parse_xml(xml_text: str) -> list[list[str | None]]:
     """``mysql --xml`` resultset → rows of (str | None).
 

@@ -1,4 +1,4 @@
-"""The 5 data-quality rules as composable DataFrame transforms.
+"""The 5 data-quality rules as data, composed into one projection.
 
 Parity target: reference app.py:41-105 (rule semantics AND exact
 message strings, including the trailing space the reference's
@@ -6,35 +6,40 @@ adjacent f-strings produce in Rule 2's recommendation at
 app.py:61-62).
 
 Where the reference does per-column Python interpretation
-(app.py:38), each rule here is one declarative plan over the whole
-``columns_meta`` DataFrame, so Catalyst whole-stage-codegens the
-predicates and projections:
+(app.py:38), each rule here is SQL text over one ``columns_meta``
+row: a predicate and two message expressions. ``detect_schema_flaws``
+composes every rule into ONE projection over the columns fact table,
+so the whole audit is one scan:
 
-- membership tests against per-table sets (app.py:44,55) become
-  broadcast LEFT ANTI joins on (database, table_name, column_name);
-- Rule 4's dict lookup (app.py:84) becomes a broadcast INNER join
-  against a 3-row lookup DataFrame;
-- the list accumulator (app.py:26,107) becomes ``unionByName``.
+- the per-table membership sets (app.py:34-35,44,55) become two
+  boolean columns, ``is_indexed`` and ``is_fk_first``, each an
+  ``EXISTS`` that Catalyst plans as a broadcast existence join — one
+  probe per column row, no ``distinct()``, no anti join;
+- Rule 4's dict lookup (app.py:84) becomes a ``map(...)`` literal
+  indexed in the expression itself, so there is no lookup relation;
+- the list accumulator (app.py:26,107) becomes
+  ``inline(filter(array(CASE WHEN predicate THEN issue END, ...)))``:
+  each column row emits one issue per rule that fires, and there is
+  no union.
 
 Catalog metadata is small even for huge warehouses (10^5 tables x
-10^2 columns ~ 10^7 rows), so every join side below is explicitly
-broadcast; the fact side streams. At that scale nothing shuffles.
+10^2 columns ~ 10^7 rows): the index and FK sides are broadcast and
+the columns side streams. Nothing shuffles but the final sort.
 
 Semantic traps preserved (SURVEY.md §2.3): composite-FK
-first-column-only via ``element_at(constrained_columns, 1)``;
-``unique=None`` falsy via ``is_unique IS NOT TRUE``; Rule 3 substring
-(not word) keyword matching; Rule 2 ``startswith("id")``; lowercased
-name matching but reflected-case type-name matching.
+first-column-only via ``constrained_columns[0]`` behind a
+``size(...) > 0`` guard (under ANSI mode an empty array would raise
+INVALID_ARRAY_INDEX); ``unique=None`` falsy via ``is_unique IS NOT
+TRUE``; Rule 3 substring (not word) keyword matching; Rule 2
+``startswith("id")``; lowercased name matching but reflected-case
+type-name matching.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from functools import reduce
-from typing import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 # Rule 3 keyword list (app.py:66-67) — substring containment, so
 # 'corporate_rate_x' matches 'rate' and 'rating' matches 'rate'.
@@ -46,210 +51,126 @@ EXPECTED_TYPES = {"rating": "FLOAT", "created_at": "DATETIME", "order_date": "DA
 # Rule 5 critical-column list (app.py:96).
 NON_NULLABLE_COLUMNS = ["email", "price", "total_amount", "order_date", "rating"]
 
-_KEY = ["database", "table_name", "column_name"]
+
+def _sql_string(s: str) -> str:
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def _issue(df: DataFrame, rule_id: int, issue_type: str, issue: F.Column, recommendation: F.Column) -> DataFrame:
-    return df.select(
-        F.col("table_name").alias("table"),
-        F.col("column_name").alias("column"),
-        F.lit(issue_type).alias("issue_type"),
-        issue.alias("issue"),
-        recommendation.alias("recommendation"),
-        F.lit(rule_id).alias("rule_id"),
-    )
+def _sql_list(items) -> str:
+    return ", ".join(_sql_string(s) for s in items)
 
 
-def _indexed_columns(indexes_meta: DataFrame) -> DataFrame:
-    """Distinct (db, table, column) covered by any index (app.py:34)."""
-    return indexes_meta.select(*_KEY).distinct()
-
-
-def _fk_first_columns(foreign_keys_meta: DataFrame) -> DataFrame:
-    """First constrained column of each FK — app.py:35 keeps only
-    ``constrained_columns[0]``, leaving composite-FK tail columns
-    uncovered (SURVEY.md §2.3(1))."""
-    return (
-        foreign_keys_meta.filter(F.size("constrained_columns") > 0)
-        .select(
-            "database",
-            "table_name",
-            F.element_at("constrained_columns", 1).alias("column_name"),
-        )
-        .distinct()
-    )
-
-
-def rule1_unindexed_large_text(
-    columns_meta: DataFrame, indexes_meta: DataFrame, foreign_keys_meta: DataFrame
-) -> DataFrame:
-    """Large VARCHAR/TEXT without an index (app.py:41-51).
-
-    ``not column.unique`` passes when unique is None (app.py:44), so
-    the filter is ``is_unique IS NOT TRUE``, not ``NOT is_unique``.
-    """
-    candidates = columns_meta.filter(
-        F.col("data_type").isin("VARCHAR", "TEXT")
-        & F.col("char_max_length").isNotNull()
-        & (F.col("char_max_length") >= 255)
-        & ~F.coalesce(F.col("is_unique"), F.lit(False))
-    )
-    unindexed = candidates.join(F.broadcast(_indexed_columns(indexes_meta)), _KEY, "left_anti")
-    return _issue(
-        unindexed,
-        1,
-        "Query performance - missing index",
-        F.format_string(
-            "Large %s column '%s' in '%s' is not indexed.",
-            "data_type",
-            "column_name",
-            "table_name",
-        ),
-        F.format_string(
-            "Add an index on '%s(%s)' to improve query performance.",
-            "table_name",
-            "column_name",
-        ),
-    )
-
-
-def rule2_id_like_non_key(
-    columns_meta: DataFrame, indexes_meta: DataFrame, foreign_keys_meta: DataFrame
-) -> DataFrame:
-    """id-prefixed/suffixed column that is no key and unindexed
-    (app.py:53-63). ``startswith("id")`` intentionally catches names
-    like ``idempotency_key`` (SURVEY.md §2.3(3))."""
-    name = F.lower(F.col("column_name"))
-    candidates = columns_meta.filter(
-        (name.endswith("id") | name.startswith("id")) & ~F.col("is_primary_key")
-    )
-    uncovered = candidates.join(
-        F.broadcast(_fk_first_columns(foreign_keys_meta)), _KEY, "left_anti"
-    ).join(F.broadcast(_indexed_columns(indexes_meta)), _KEY, "left_anti")
-    return _issue(
-        uncovered,
-        2,
-        "Normalization - Data integrity",
-        F.format_string(
-            "Potential foreign key column '%s' is not properly defined.", "column_name"
-        ),
-        F.format_string(
-            "Define a foreign key constraint and index for '%s' referencing "
-            "the appropriate table and add the correct kind of index. ",
-            "column_name",
-        ),
-    )
-
-
-def rule3_monetary_wrong_type(
-    columns_meta: DataFrame, indexes_meta: DataFrame, foreign_keys_meta: DataFrame
-) -> DataFrame:
-    """Monetary-named column not DECIMAL/NUMERIC (app.py:65-76).
-    Substring containment per app.py:66-67 — ``rlike`` over the
-    keyword alternation, not word-boundary matching."""
-    keyword_rx = "|".join(MONETARY_KEYWORDS)
-    hits = columns_meta.filter(
-        F.lower(F.col("column_name")).rlike(keyword_rx)
-        & ~F.col("data_type").isin("DECIMAL", "NUMERIC")
-    )
-    return _issue(
-        hits,
-        3,
-        "Data type - Precision error",
-        F.format_string(
-            "Monetary column '%s' is of type '%s', expected DECIMAL or NUMERIC.",
-            "column_name",
-            "data_type",
-        ),
-        F.format_string(
-            "Consider changing the column '%s(%s)' to DECIMAL or NUMERIC for "
-            "better precision in monetary calculations.",
-            "table_name",
-            "column_name",
-        ),
-    )
-
-
-def rule4_expected_type_mismatch(
-    columns_meta: DataFrame, indexes_meta: DataFrame, foreign_keys_meta: DataFrame
-) -> DataFrame:
-    """Expected-type dictionary mismatch (app.py:78-93). The dict the
-    reference re-allocates per column (app.py:79-83) becomes a 3-row
-    broadcast lookup joined once."""
-    import pandas as pd
-
-    spark = columns_meta.sparkSession
-    # pandas+Arrow → LocalTableScan (a list-based createDataFrame is a
-    # Python-RDD scan that costs seconds per broadcast; see
-    # catalog.fixtures._local_df).
-    expected = spark.createDataFrame(
-        pd.DataFrame(
-            {"lookup_name": list(EXPECTED_TYPES), "expected_type": list(EXPECTED_TYPES.values())}
-        )
-    )
-    hits = columns_meta.join(
-        F.broadcast(expected),
-        F.lower(columns_meta["column_name"]) == expected["lookup_name"],
-        "inner",
-    ).filter(F.col("data_type") != F.col("expected_type"))
-    return _issue(
-        hits,
-        4,
-        "Data type mismatch",
-        F.format_string(
-            "Column '%s' has type '%s', expected '%s'.",
-            "column_name",
-            "data_type",
-            "expected_type",
-        ),
-        F.format_string(
-            "Change column '%s(%s)' to '%s' to match the expected type defined",
-            "table_name",
-            "column_name",
-            "expected_type",
-        ),
-    )
-
-
-def rule5_critical_nullable(
-    columns_meta: DataFrame, indexes_meta: DataFrame, foreign_keys_meta: DataFrame
-) -> DataFrame:
-    """Critical column allows NULL (app.py:95-105)."""
-    hits = columns_meta.filter(
-        F.lower(F.col("column_name")).isin(NON_NULLABLE_COLUMNS) & F.col("is_nullable")
-    )
-    return _issue(
-        hits,
-        5,
-        "Data Integrity - NULL values not allowed",
-        F.format_string("Critical column '%s' allows NULL values.", "column_name"),
-        F.format_string(
-            "Alter column '%s(%s)' to NOT NULL to maintain data integrity.",
-            "table_name",
-            "column_name",
-        ),
-    )
-
-
-RuleFn = Callable[[DataFrame, DataFrame, DataFrame], DataFrame]
+_EXPECTED_TYPE = (
+    "map(" + _sql_list(x for kv in EXPECTED_TYPES.items() for x in kv) + ")[lower(column_name)]"
+)
 
 
 @dataclass(frozen=True)
 class Rule:
+    """One rule as SQL text over a ``columns_meta`` row, which also
+    carries ``is_indexed`` (some index covers the column) and
+    ``is_fk_first`` (the column is the first constrained column of
+    some FK). ``issue`` and ``recommendation`` are string expressions;
+    ``issue_type`` is the literal issue type."""
+
     rule_id: int
     name: str
-    fn: RuleFn
+    issue_type: str
+    predicate: str
+    issue: str
+    recommendation: str
 
 
-# Rule registry as data (SURVEY.md §4.2) — rules compose as DataFrame
-# transforms instead of the reference's hard-coded if-blocks.
+# Rule registry as data (SURVEY.md §4.2) — rules compose as SQL
+# expressions instead of the reference's hard-coded if-blocks.
 RULES: list[Rule] = [
-    Rule(1, "unindexed_large_text", rule1_unindexed_large_text),
-    Rule(2, "id_like_non_key", rule2_id_like_non_key),
-    Rule(3, "monetary_wrong_type", rule3_monetary_wrong_type),
-    Rule(4, "expected_type_mismatch", rule4_expected_type_mismatch),
-    Rule(5, "critical_nullable", rule5_critical_nullable),
+    # app.py:41-51. ``not column.unique`` passes when unique is None
+    # (app.py:44), hence ``IS NOT TRUE``, not ``NOT is_unique``.
+    Rule(
+        1,
+        "unindexed_large_text",
+        "Query performance - missing index",
+        "data_type IN ('VARCHAR', 'TEXT') AND char_max_length >= 255"
+        " AND is_unique IS NOT TRUE AND NOT is_indexed",
+        """format_string("Large %s column '%s' in '%s' is not indexed.",
+                         data_type, column_name, table_name)""",
+        """format_string("Add an index on '%s(%s)' to improve query performance.",
+                         table_name, column_name)""",
+    ),
+    # app.py:53-63. ``startswith("id")`` intentionally catches names
+    # like ``idempotency_key`` (SURVEY.md §2.3(3)).
+    Rule(
+        2,
+        "id_like_non_key",
+        "Normalization - Data integrity",
+        "(endswith(lower(column_name), 'id') OR startswith(lower(column_name), 'id'))"
+        " AND NOT is_primary_key AND NOT is_fk_first AND NOT is_indexed",
+        """format_string("Potential foreign key column '%s' is not properly defined.",
+                         column_name)""",
+        """format_string("Define a foreign key constraint and index for '%s' referencing "
+                         "the appropriate table and add the correct kind of index. ",
+                         column_name)""",
+    ),
+    # app.py:65-76: substring containment, so ``rlike`` over the
+    # keyword alternation, not word-boundary matching.
+    Rule(
+        3,
+        "monetary_wrong_type",
+        "Data type - Precision error",
+        f"lower(column_name) RLIKE {_sql_string('|'.join(MONETARY_KEYWORDS))}"
+        " AND data_type NOT IN ('DECIMAL', 'NUMERIC')",
+        """format_string("Monetary column '%s' is of type '%s', expected DECIMAL or NUMERIC.",
+                         column_name, data_type)""",
+        """format_string("Consider changing the column '%s(%s)' to DECIMAL or NUMERIC for "
+                         "better precision in monetary calculations.",
+                         table_name, column_name)""",
+    ),
+    # app.py:78-93. A name absent from the map looks up NULL, and the
+    # predicate is then NULL: the rule does not fire.
+    Rule(
+        4,
+        "expected_type_mismatch",
+        "Data type mismatch",
+        f"data_type != {_EXPECTED_TYPE}",
+        f"""format_string("Column '%s' has type '%s', expected '%s'.",
+                          column_name, data_type, {_EXPECTED_TYPE})""",
+        f"""format_string("Change column '%s(%s)' to '%s' to match the expected type defined",
+                          table_name, column_name, {_EXPECTED_TYPE})""",
+    ),
+    # app.py:95-105.
+    Rule(
+        5,
+        "critical_nullable",
+        "Data Integrity - NULL values not allowed",
+        f"lower(column_name) IN ({_sql_list(NON_NULLABLE_COLUMNS)}) AND is_nullable",
+        """format_string("Critical column '%s' allows NULL values.", column_name)""",
+        """format_string("Alter column '%s(%s)' to NOT NULL to maintain data integrity.",
+                         table_name, column_name)""",
+    ),
 ]
+
+# The two membership flags: app.py:34 (any index covers the column)
+# and app.py:35 (first constrained column of an FK). ``{columns}``,
+# ``{indexes}`` and ``{fks}`` are filled by ``spark.sql``'s formatter.
+_FLAGGED_COLUMNS = """
+SELECT c.*,
+       EXISTS (SELECT 1 FROM {indexes} i
+               WHERE i.database = c.database AND i.table_name = c.table_name
+                 AND i.column_name = c.column_name) AS is_indexed,
+       EXISTS (SELECT 1 FROM {fks} f
+               WHERE size(f.constrained_columns) > 0
+                 AND f.database = c.database AND f.table_name = c.table_name
+                 AND f.constrained_columns[0] = c.column_name) AS is_fk_first
+FROM {columns} c
+"""
+
+
+def _issue_case(rule: Rule) -> str:
+    return (
+        f"CASE WHEN {rule.predicate} THEN named_struct("
+        f"'issue_type', {_sql_string(rule.issue_type)}, 'issue', {rule.issue}, "
+        f"'recommendation', {rule.recommendation}, 'rule_id', {rule.rule_id}) END"
+    )
 
 
 def detect_schema_flaws(
@@ -258,12 +179,23 @@ def detect_schema_flaws(
     foreign_keys_meta: DataFrame,
     rules: list[Rule] | None = None,
 ) -> DataFrame:
-    """All rules, unioned and canonically ordered.
+    """Every rule's issues, canonically ordered, as one SQL statement.
 
     Replaces the reference's driver loop + list accumulator
     (app.py:26-107). Output order: (table, column, rule_id) — the
     reference's order is nondeterministic reflection order
     (SURVEY.md §2.3(6)), so we define the canonical sort here.
     """
-    rule_dfs = [r.fn(columns_meta, indexes_meta, foreign_keys_meta) for r in (rules or RULES)]
-    return reduce(DataFrame.unionByName, rule_dfs).orderBy("table", "column", "rule_id")
+    cases = ", ".join(_issue_case(r) for r in (rules or RULES))
+    # one statement is one analysis (about half the plan-build time of
+    # a statement plus chained DataFrame calls); braces in rule text are
+    # doubled so the formatter passes them through
+    sql = f"""
+SELECT table_name AS `table`, column_name AS `column`,
+       inline(filter(array({cases.replace("{", "{{").replace("}", "}}")}), i -> i IS NOT NULL))
+FROM ({_FLAGGED_COLUMNS})
+ORDER BY `table`, `column`, rule_id
+"""
+    return columns_meta.sparkSession.sql(
+        sql, columns=columns_meta, indexes=indexes_meta, fks=foreign_keys_meta
+    )

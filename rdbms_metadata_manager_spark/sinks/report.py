@@ -32,11 +32,14 @@ CSV_COLUMNS = {
 }
 
 
-def print_report(issues: DataFrame, database_name: str, limit: int = 1000) -> str:
-    """Per-issue 5-line pretty print, matching app.py:127-133."""
+def print_report(issues: DataFrame, database_name: str, limit: int = 1000) -> int:
+    """Per-issue 5-line pretty print, or the no-issues line, matching
+    app.py:127-133. Returns the number of issues printed, so a caller
+    learns whether there were any from this one collect."""
     rows = issues.limit(limit).collect()
     if not rows:
-        return f'No issues detected in schema "{database_name}".'
+        print(f'No issues detected in schema "{database_name}".')
+        return 0
     lines = [f'Schema "{database_name}" issues detected:']
     for r in rows:
         lines.append(f"Table: {r['table']}")
@@ -44,9 +47,8 @@ def print_report(issues: DataFrame, database_name: str, limit: int = 1000) -> st
         lines.append(f"Issue Type: {r['issue_type']}")
         lines.append(f"Issue: {r['issue']}")
         lines.append(f"Recommendation: {r['recommendation']}\n")
-    out = "\n".join(lines)
-    print(out)
-    return out
+    print("\n".join(lines))
+    return len(rows)
 
 
 def _renamed(issues: DataFrame) -> DataFrame:

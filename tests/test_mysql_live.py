@@ -207,7 +207,7 @@ def test_live_columns_contract(live_catalog):
     r = rows[("Users", "email")]
     assert (r.data_type, r.char_max_length, r.is_nullable, r.is_primary_key) == (
         "VARCHAR", 100, True, False)
-    # MySQL type-name case arrives lowercase; _normalize_type uppercases
+    # MySQL type-name case arrives lowercase; _NORMALIZED_TYPE uppercases
     # and maps INT→INTEGER, DOUBLE→FLOAT
     assert rows[("Users", "user_id")].data_type == "INTEGER"
     assert rows[("Products", "price")].data_type == "FLOAT"

@@ -84,7 +84,7 @@ CREATE TABLE users_teste (
 );
 -- composite-FK quirk table (reference app.py:35 keeps only
 -- constrained_columns[0]) so the live path also exercises
--- group_foreign_keys' ordered-array collapse
+-- the FK face's ordered-array collapse
 CREATE TABLE warehouse_bins (
   warehouse_id integer,
   bin_id integer,
@@ -200,6 +200,71 @@ def pg_host():
         subprocess.run(_as_pg(["pg_ctl", "-D", data, "-m", "immediate", "stop"]),
                        capture_output=True)
         shutil.rmtree(root, ignore_errors=True)
+
+
+def _psql(host: str, database: str, sql: str) -> None:
+    subprocess.run(["psql", "-h", host, "-U", "postgres", "-d", database, "-X", "-q",
+                    "-v", "ON_ERROR_STOP=1", "-c", sql], check=True, capture_output=True)
+
+
+# The columns face as it read information_schema before it moved to
+# pg_catalog; kept here only as the reference the pg_catalog SQL must
+# reproduce row for row.
+INFORMATION_SCHEMA_COLUMNS = """
+SELECT c.table_catalog AS database,
+       c.table_name,
+       c.column_name,
+       c.ordinal_position AS ordinal,
+       c.data_type,
+       c.character_maximum_length AS char_max_length,
+       (c.is_nullable = 'YES') AS is_nullable,
+       NULL::boolean AS is_unique,
+       (pk.column_name IS NOT NULL) AS is_primary_key
+FROM information_schema.columns c
+JOIN information_schema.tables t
+  ON  t.table_schema = c.table_schema
+  AND t.table_name   = c.table_name
+LEFT JOIN (
+    SELECT DISTINCT kcu.table_schema, kcu.table_name, kcu.column_name
+    FROM information_schema.table_constraints tc
+    JOIN information_schema.key_column_usage kcu
+      ON  kcu.constraint_schema = tc.constraint_schema
+      AND kcu.table_name        = tc.table_name
+      AND kcu.constraint_name   = tc.constraint_name
+    WHERE tc.constraint_type = 'PRIMARY KEY'
+) pk ON pk.table_schema = c.table_schema
+    AND pk.table_name   = c.table_name
+    AND pk.column_name  = c.column_name
+WHERE c.table_schema = 'public'
+  AND t.table_type = 'BASE TABLE'
+"""
+
+# Column shapes whose information_schema rendering the pg_catalog SQL
+# must reproduce: a domain (its base type and length), char(n), arrays
+# (plain and of a domain), an enum, a dropped column, a serial PK, a
+# partitioned table and its partition, a view, and a same-named table
+# in another schema.
+PARITY_DDL = """
+CREATE DOMAIN label AS varchar(120);
+CREATE DOMAIN strict_text AS text NOT NULL;
+CREATE TYPE mood AS ENUM ('calm', 'busy');
+CREATE TABLE shapes (
+  id serial PRIMARY KEY,
+  code char(9),
+  tags text[],
+  name label,
+  gone integer,
+  note strict_text,
+  names label[],
+  feeling mood
+);
+ALTER TABLE shapes DROP COLUMN gone;
+CREATE TABLE events (id integer, at timestamptz, PRIMARY KEY (id)) PARTITION BY RANGE (id);
+CREATE TABLE events_p0 PARTITION OF events FOR VALUES FROM (0) TO (100);
+CREATE VIEW v_shapes AS SELECT id, code FROM shapes;
+CREATE SCHEMA other;
+CREATE TABLE other.shapes (id integer PRIMARY KEY, code varchar(3));
+"""
 
 
 @pytest.fixture(scope="module")
@@ -334,3 +399,60 @@ def test_cli_main_runs_against_live_postgres(spark, pg_host, capsys, monkeypatch
     # rows and the composite-FK table adds one Rule-2 row on top of
     # the fixture's 18-issue golden set: 18 + 3
     assert out.count("Issue Type:") == 21
+
+
+@pytest.mark.parametrize("database", ["ecommerce_db", "parity_db"])
+def test_columns_face_matches_information_schema(pg_host, database):
+    """The pg_catalog columns face returns exactly the rows the
+    information_schema SQL returned, text for text."""
+    from rdbms_metadata_manager_spark.catalog.faces import _PG_COLUMNS_QUERY
+
+    if database == "parity_db":
+        _psql(pg_host, "postgres", "DROP DATABASE IF EXISTS parity_db")
+        _psql(pg_host, "postgres", "CREATE DATABASE parity_db")
+        _psql(pg_host, "parity_db", PARITY_DDL)
+    got = sorted(pg_live.run_sql(_PG_COLUMNS_QUERY, database, pg_host))
+    want = sorted(pg_live.run_sql(INFORMATION_SCHEMA_COLUMNS, database, pg_host))
+    assert got == want
+    if database == "parity_db":
+        rows = {(r[1], r[2]): r[4:] for r in got}  # data_type onwards
+        assert rows[("shapes", "name")][:2] == ["character varying", "120"]
+        assert rows[("shapes", "code")][:2] == ["character", "9"]
+        assert rows[("shapes", "tags")][0] == rows[("shapes", "names")][0] == "ARRAY"
+        assert rows[("shapes", "note")][2] == "f"  # the domain's NOT NULL
+        assert ("shapes", "gone") not in rows and ("v_shapes", "id") not in rows
+        assert {("events", "id"), ("events_p0", "id")} <= set(rows)
+
+
+def test_one_round_trip_read_matches_per_face_reads(spark, pg_host, live_catalog):
+    """The face-tagged single read gives the same three contracts as
+    running each face's own SQL in its own round trip."""
+    from rdbms_metadata_manager_spark.catalog import faces
+    from rdbms_metadata_manager_spark.catalog.fixtures import _local_df
+
+    def fetch(sql, schema):
+        rows = pg_live.run_sql(sql, "ecommerce_db", pg_host)
+        return _local_df(spark, faces.coerce(rows, schema, "t"), schema)
+
+    for face, tagged in zip(faces.FACES, live_catalog):
+        single = faces.read_face(face, "postgresql", "ecommerce_db", fetch)
+        assert tagged.schema == single.schema
+        assert sorted(map(tuple, tagged.collect())) == sorted(map(tuple, single.collect()))
+
+
+def test_cli_reports_empty_schema_and_exports_nothing(spark, pg_host, capsys, monkeypatch, tmp_path):
+    """A catalog with no tables: the CLI prints the reference's
+    no-issues line (app.py:127-133) and writes no CSV, even when asked
+    to export."""
+    from rdbms_metadata_manager_spark.__main__ import main
+
+    _psql(pg_host, "postgres", "DROP DATABASE IF EXISTS empty_db")
+    _psql(pg_host, "postgres", "CREATE DATABASE empty_db")
+    monkeypatch.chdir(tmp_path)
+    monkeypatch.setenv("DB_URL", f"psql:///empty_db?host={pg_host}")
+    monkeypatch.setenv("EXPORT_TO_CSV", "YES")
+    assert main() == 0
+    out = capsys.readouterr().out
+    assert 'No issues detected in schema "empty_db".' in out
+    assert "Results exported" not in out
+    assert not (tmp_path / "exports").exists()

@@ -12,11 +12,6 @@ import pytest
 
 from rdbms_metadata_manager_spark.catalog import fixtures
 from rdbms_metadata_manager_spark.rules import detect_schema_flaws
-from rdbms_metadata_manager_spark.rules.engine import (
-    rule1_unindexed_large_text,
-    rule2_id_like_non_key,
-    rule3_monetary_wrong_type,
-)
 
 
 @pytest.fixture(scope="module")
@@ -111,31 +106,34 @@ def test_issue_messages_match_reference(ecommerce):
     assert r5["recommendation"] == "Alter column 'Users(email)' to NOT NULL to maintain data integrity."
 
 
+def _hits(catalog, rule_id: int) -> set[tuple[str, str]]:
+    """(table, column) pairs one rule flags in the full audit."""
+    issues = detect_schema_flaws(*catalog).filter(f"rule_id = {rule_id}")
+    return {(r["table"], r["column"]) for r in issues.collect()}
+
+
 def test_composite_fk_first_column_only(quirks):
     """app.py:35 keeps only constrained_columns[0]: warehouse_id is
     covered (and indexed), bin_id is not → bin_id fires Rule 2."""
-    hits = {
-        (r["table"], r["column"])
-        for r in rule2_id_like_non_key(*quirks).collect()
-    }
+    hits = _hits(quirks, 2)
     assert ("shipments", "bin_id") in hits
     assert ("shipments", "warehouse_id") not in hits
 
 
 def test_startswith_id_catches_idempotency_key(quirks):
-    hits = {(r["table"], r["column"]) for r in rule2_id_like_non_key(*quirks).collect()}
+    hits = _hits(quirks, 2)
     assert ("payments", "idempotency_key") in hits
 
 
 def test_substring_keyword_matching(quirks):
-    hits = {(r["table"], r["column"]) for r in rule3_monetary_wrong_type(*quirks).collect()}
+    hits = _hits(quirks, 3)
     assert ("payments", "corporate_rate_x") in hits  # 'rate' substring
     assert ("payments", "total_amount") in hits
 
 
 def test_unique_none_is_falsy_but_unique_true_blocks(quirks):
     """app.py:44: `not column.unique` passes when unique is None."""
-    hits = {(r["table"], r["column"]) for r in rule1_unindexed_large_text(*quirks).collect()}
+    hits = _hits(quirks, 1)
     assert ("audit", "notes") in hits  # unique=None → fires
     assert ("audit", "summary") not in hits  # unique=True → blocked
     assert ("audit", "email") in hits
@@ -154,19 +152,17 @@ def test_custom_rule_plugs_into_registry(spark, ecommerce):
     with the built-ins through the same registry mechanism."""
     from pyspark.sql import functions as F
 
-    from rdbms_metadata_manager_spark.rules.engine import RULES, Rule, _issue
+    from rdbms_metadata_manager_spark.rules.engine import RULES, Rule
 
-    def rule6_reserved_word_names(columns_meta, indexes_meta, foreign_keys_meta):
-        hits = columns_meta.filter(F.lower(F.col("column_name")).isin("order", "user", "table"))
-        return _issue(
-            hits,
-            6,
-            "Naming - reserved word",
-            F.format_string("Column '%s' shadows a reserved word.", "column_name"),
-            F.format_string("Rename column '%s(%s)'.", "table_name", "column_name"),
-        )
-
-    extended = RULES + [Rule(6, "reserved_word_names", rule6_reserved_word_names)]
+    rule6_reserved_word_names = Rule(
+        6,
+        "reserved_word_names",
+        "Naming - reserved word",
+        "lower(column_name) IN ('order', 'user', 'table')",
+        """format_string("Column '%s' shadows a reserved word.", column_name)""",
+        """format_string("Rename column '%s(%s)'.", table_name, column_name)""",
+    )
+    extended = RULES + [rule6_reserved_word_names]
     issues = detect_schema_flaws(*ecommerce, rules=extended)
     # fixture has no reserved-word columns → same 18 issues; and the
     # rule runs (no analysis error), proving composability.
@@ -219,3 +215,64 @@ def test_fixtures_without_arrow(spark):
         assert isinstance(row["char_max_length"], int)
     finally:
         spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", prev)
+
+
+def test_empty_fk_columns_array_audits_unchanged(spark, ecommerce):
+    """An FK row with no constrained columns covers nothing. Under ANSI
+    mode ``constrained_columns[0]`` on it would raise
+    INVALID_ARRAY_INDEX, so the engine must guard the lookup."""
+    from rdbms_metadata_manager_spark.catalog.fixtures import ECOMMERCE_FOREIGN_KEYS, _local_df
+    from rdbms_metadata_manager_spark.catalog.schemas import FOREIGN_KEYS_META_SCHEMA
+
+    cols, idx, _ = ecommerce
+    fks = _local_df(
+        spark,
+        ECOMMERCE_FOREIGN_KEYS + [("ecommerce_db", "orders_teste", "fk_empty", [], "Users", [])],
+        FOREIGN_KEYS_META_SCHEMA,
+    )
+    got = sorted((r["table"], r["column"], r["rule_id"]) for r in detect_schema_flaws(cols, idx, fks).collect())
+    assert got == GOLDEN_18
+
+
+def test_rules_plan_is_one_projection(ecommerce):
+    """All rules run as one projection over the columns: no union of
+    per-rule plans, and the only joins are the index and FK existence
+    probes (Rule 4's lookup is a map literal, not a joined relation)."""
+    issues = detect_schema_flaws(*ecommerce)
+    issues.collect()
+    plan = issues._jdf.queryExecution().executedPlan().toString()
+    assert "Union" not in plan
+    joins = [line for line in plan.splitlines() if "Join" in line]
+    assert joins and all("ExistenceJoin" in line for line in joins), plan
+
+
+def test_report_and_csv_run_at_most_10_jobs(spark, ecommerce, tmp_path, capsys):
+    """The CLI's two materializations of one audit (console report,
+    then CSV) stay within 10 Spark jobs on the fixture."""
+    from rdbms_metadata_manager_spark.sinks import print_report, write_csv
+
+    sc = spark.sparkContext
+    group = "test-audit-jobs"
+    sc.setJobGroup(group, "print_report + write_csv")
+    try:
+        issues = detect_schema_flaws(*ecommerce)
+        assert print_report(issues, "ecommerce_db") == 18
+        write_csv(issues, str(tmp_path / "issues.csv"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 10
+    assert "Table: Users" in capsys.readouterr().out
+
+
+def test_rule_text_with_braces_reaches_spark_unchanged(ecommerce):
+    """Rule SQL goes through spark.sql's ``{}`` formatter; braces in a
+    rule (a regex quantifier, a literal) must arrive as written."""
+    from rdbms_metadata_manager_spark.rules.engine import Rule
+
+    braces = Rule(7, "braces", "Braces", "column_name RLIKE '^e.{4}$'",
+                  """format_string("{%s}", column_name)""", "'{}'")
+    got = {(r["table"], r["issue"], r["recommendation"])
+           for r in detect_schema_flaws(*ecommerce, rules=[braces]).collect()}
+    assert got == {("Users", "{email}", "{}"), ("users_teste", "{email}", "{}")}
