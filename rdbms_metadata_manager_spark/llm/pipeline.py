@@ -334,12 +334,6 @@ ORDER BY source
 """
 
 
-def write_training_shards(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
-    """Materialize the survivor set as lang-partitioned parquet —
-    the pipeline's production sink (partition pruning for readers)."""
-    pipeline_survivors(spark, sf_dir).write.mode("overwrite").partitionBy("lang").parquet(out_dir)
-
-
 def corpus_overview_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The one-page dataset card: (metric, value) rows summarizing
     the corpus a data team pins on the wall — doc/token/char counts,

@@ -410,9 +410,7 @@ def anomaly_event_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
     hit the float-aggregate trap AND be dragged by the very outliers
     we're hunting). Scale: two tiny quantile aggs over the rolled-up
     spine (time-range-bound rows), broadcast back — the raw events
-    are scanned once, by the resample. Streaming face:
-    ``streaming/stream.py::streaming_anomaly_alerts`` scores live
-    micro-batches against these same thresholds."""
+    are scanned once, by the resample."""
     dense = resample_events_hourly(spark, sf_dir)
     return (
         dense.join(F.broadcast(mad_thresholds(spark, sf_dir)), "event_type")

@@ -5,7 +5,8 @@ header ``Table,Column,Issue Type,Issue,Recommendation``
 (app.py:111). Here:
 
 - console sink formats on the driver from a bounded ``collect()``
-  (an issue report is human-scale by definition; we still cap it);
+  (an issue report is human-scale by definition; we still cap it at
+  ``REPORT_CAP`` and say so when issues are left out);
 - CSV sink is a Spark write coalesced to one part file, as the
   reference writes one CSV.
 
@@ -31,12 +32,19 @@ CSV_COLUMNS = {
     "recommendation": "Recommendation",
 }
 
+# Most issues the console report prints; the CSV export has them all.
+REPORT_CAP = 1000
 
-def print_report(issues: DataFrame, database_name: str, limit: int = 1000) -> int:
+
+def print_report(issues: DataFrame, database_name: str) -> int:
     """Per-issue 5-line pretty print, or the no-issues line, matching
     app.py:127-133. Returns the number of issues printed, so a caller
-    learns whether there were any from this one collect."""
-    rows = issues.limit(limit).collect()
+    learns whether there were any from this one collect. Past
+    ``REPORT_CAP`` issues it prints the first ``REPORT_CAP`` and one
+    line saying so: one row over the cap is collected to tell."""
+    rows = issues.limit(REPORT_CAP + 1).collect()
+    more = len(rows) > REPORT_CAP
+    rows = rows[:REPORT_CAP]
     if not rows:
         print(f'No issues detected in schema "{database_name}".')
         return 0
@@ -47,6 +55,11 @@ def print_report(issues: DataFrame, database_name: str, limit: int = 1000) -> in
         lines.append(f"Issue Type: {r['issue_type']}")
         lines.append(f"Issue: {r['issue']}")
         lines.append(f"Recommendation: {r['recommendation']}\n")
+    if more:
+        lines.append(
+            f"Showing the first {REPORT_CAP} issues; "
+            "the CSV export (EXPORT_TO_CSV=YES) lists every issue."
+        )
     print("\n".join(lines))
     return len(rows)
 

@@ -2,10 +2,8 @@
 face of the streaming surface.
 
 ``window()`` and ``session_window()`` are the SAME expressions
-Structured Streaming uses (streaming/stream.py wires them to
-readStream/writeStream); running them in batch mode gives the driver
-an oracle-checkable result while the streaming tests exercise the
-incremental path with watermarks.
+Structured Streaming uses behind ``withWatermark``; running them in
+batch mode gives the driver an oracle-checkable result.
 
 Oracles: tumbling window ↔ date_trunc; session window ↔ the classic
 gaps-and-islands (lag + running flag-sum) construction, with
@@ -417,8 +415,8 @@ WM_JITTER_S = 7200  # synthetic delivery skew bound (2 h)
 def watermark_lateness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """How much data would each candidate watermark delay DROP? The
     sizing study a team runs BEFORE picking the ``withWatermark``
-    horizon for the streaming faces (stream.py's documented
-    state-vs-completeness trade, stream_dedup's 36500-day choice):
+    horizon for the streaming faces (the state-vs-completeness
+    trade, stream_dedup's 36500-day choice):
     replay the event log in arrival order and count rows whose event
     time falls behind (running max event time − delay) — exactly the
     late-row predicate Structured Streaming applies.

@@ -1,10 +1,8 @@
 """Streaming incremental-distinct via mergeable HLL sketch state —
-the streaming face of `queries/modern.py::hll_sketch_partition_union`
-and the sketch sibling of `streaming/incremental_agg.py` (which
-maintains ADDITIVE aggregates; distinct counts are the canonical
-NON-additive aggregate, and the mergeable sketch is the production
-answer: state per key is a fixed ~2^lgK bytes regardless of how many
-ids were seen).
+the streaming face of `queries/modern.py::hll_sketch_partition_union`.
+Distinct counts are the canonical NON-additive aggregate, and the
+mergeable sketch is the production answer: state per key is a fixed
+~2^lgK bytes regardless of how many ids were seen.
 
 [beyond-reference] SURVEY.md §2.2 streaming surface. The query stages
 ``documents`` as a 3-file source drained one file per micro-batch

@@ -27,6 +27,42 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
+
+EVENTS_SCHEMA_NANOS = (
+    "event_id bigint, ts bigint, user_id bigint, event_type string, "
+    "value double, props string"
+)
+EVENTS_SCHEMA_MICROS = (
+    "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string, "
+    "value double, props string"
+)
+
+
+def read_events_stream(spark: SparkSession, source_dir: str) -> DataFrame:
+    """File-source stream with the same ts normalization the batch
+    loader applies (see queries/base.py). Streaming sources need an
+    explicit schema, so peek at the on-disk encoding with a one-off
+    batch schema read (driver-side, metadata only) and pick the
+    matching fixed schema."""
+    on_disk = spark.read.parquet(source_dir).schema["ts"].dataType
+    if isinstance(on_disk, LongType):
+        raw = (
+            spark.readStream.schema(EVENTS_SCHEMA_NANOS)
+            .format("parquet")
+            .option("path", source_dir)
+            .load()
+        )
+        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    raw = (
+        spark.readStream.schema(EVENTS_SCHEMA_MICROS)
+        .format("parquet")
+        .option("path", source_dir)
+        .load()
+    )
+    # Watermarks require TIMESTAMP (not NTZ); UTC session tz makes
+    # this cast an exact identity on the stored micros.
+    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 def run_state_checkpoint(
@@ -35,8 +71,6 @@ def run_state_checkpoint(
     """Drain the events table through the stateful per-type
     aggregation into ``ckpt`` (availableNow:
     process-everything-then-stop)."""
-    from .stream import read_events_stream  # shared loader contract
-
     # the file stream source needs a DIRECTORY; testdata ships a
     # single parquet file — stage it via symlink next to the ckpt
     src_dir = os.path.join(os.path.dirname(ckpt), "src")
@@ -92,12 +126,6 @@ def read_aggregation_state(spark: SparkSession, ckpt: str) -> DataFrame:
         F.col(f"value.{value_fields[1]}").alias("sum_value_ticks"),
         "partition_id",
     )
-
-
-def state_operator_metadata(spark: SparkSession, ckpt: str) -> DataFrame:
-    """The ``state-metadata`` face: operator name, store name,
-    partition count, batch range — the first thing an on-call reads."""
-    return spark.read.format("state-metadata").load(ckpt)
 
 
 def streaming_state_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -23,8 +23,7 @@ Watermark: sized past the dataset's time span here, so no row is
 late-dropped and the oracle equality is exact. In production the
 delay is the dedup horizon (how stale a retry can be) and bounds
 state: ids older than it are evicted, which is what makes the
-operator feasible on an unbounded stream — the trade documented in
-streaming/stream.py:10-14.
+operator feasible on an unbounded stream.
 """
 
 from __future__ import annotations

@@ -10,7 +10,7 @@ fresh as the replay artifact (which it also regenerates):
 1. full pytest suite → passed / skipped counts
 2. full-registry pristine replay → REPLAY_FULL_r{N}.json (n_green/n_total)
 3. bench at sf0.1 → BENCH_FULL.json totals + the r7 tide-suspect rows
-4. environment probes (mysqld, protobuf) → blocked/available
+4. environment probes (mysqld) → blocked/available
 
 Usage:
     python scripts/freeze_certify.py --round 9 [--skip-suite] [--skip-bench]
@@ -27,7 +27,6 @@ certification is possible.
 from __future__ import annotations
 
 import argparse
-import importlib.util
 import json
 import os
 import re
@@ -140,11 +139,7 @@ def main() -> int:
             report["bench"] = _stage_error(exc)
 
     # 4. environment probes
-    report["env"] = {
-        "mysqld": bool(shutil.which("mysqld")),
-        "protobuf": importlib.util.find_spec("google.protobuf") is not None
-        if importlib.util.find_spec("google") else False,
-    }
+    report["env"] = {"mysqld": bool(shutil.which("mysqld"))}
 
     def _ok_stage(v: object) -> bool:
         return isinstance(v, dict) and not v.get("failed")
@@ -181,8 +176,7 @@ def main() -> int:
     else:
         md.append(f"- bench: {b if isinstance(b, str) else 'STAGE FAILED: ' + str(b.get('error'))}")
     env = report["env"]
-    md.append(f"- env blocks: mysqld={'available' if env['mysqld'] else 'ABSENT'},"
-              f" protobuf={'available' if env['protobuf'] else 'ABSENT'}")
+    md.append(f"- env blocks: mysqld={'available' if env['mysqld'] else 'ABSENT'}")
     md.append("")
     md.append("```json")
     md.append(json.dumps(report, indent=1, sort_keys=True))

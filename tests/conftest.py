@@ -41,7 +41,6 @@ _SLOW_TESTS = {
     "test_cli_fixture_mode_and_golden_csv",
     "test_cli_loads_db_url_from_dotenv_file",
     "test_d4_matches_oracle_on_random_vectors",
-    "test_delete_keys_rewrites_only_affected_partitions",
     "test_dsir_resample_invariants",
     "test_fixtures_without_arrow",
     "test_gini_matches_pure_python",
@@ -81,15 +80,11 @@ _SLOW_TESTS = {
     "test_shared_runs_match_quadratic_reference",
     "test_skyline_matches_bruteforce_on_random_points",
     "test_star_contraction_random_graphs_match_union_find",
-    "test_stateful_user_profiles_match_batch",
     "test_stream_dedup_replay_spans_multiple_microbatches",
     "test_stream_minhash_catches_near_dups_not_just_exact",
     "test_stream_minhash_equals_batch_spec",
     "test_stream_minhash_matches_oracle",
     "test_stream_minhash_redelivery_exactly_once",
-    "test_stream_stream_interval_join_matches_batch",
-    "test_stream_stream_left_outer_join_matches_batch",
-    "test_stream_upsert_end_to_end",
     "test_survivorship_classes_partition_and_order",
     "test_tick_stream_aggregate_matches_batch",
     "test_window_outputs_are_canon_safe_scalar_types",
@@ -112,8 +107,6 @@ _SLOW_FILES = {
     "test_audit_ops.py",
     "test_round4_ops.py",
     "test_session_i_ops.py",
-    "test_incremental_agg.py",
-    "test_upsert_zorder.py",
     "test_entity_cohort_quantize.py",
 }
 

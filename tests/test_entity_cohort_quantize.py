@@ -1,10 +1,8 @@
-"""Invariants for entity resolution, cohort retention, embedding
-quantization, and small-file compaction — the semantic properties the
-per-query oracle diff can't express."""
+"""Invariants for entity resolution, cohort retention, and embedding
+quantization — the semantic properties the per-query oracle diff
+can't express."""
 
 from __future__ import annotations
-
-import glob
 
 from pyspark.sql import functions as F
 
@@ -16,7 +14,6 @@ from rdbms_metadata_manager_spark.llm.quantize import (
 )
 from rdbms_metadata_manager_spark.queries.base import load
 from rdbms_metadata_manager_spark.queries.cohort import cohort_retention
-from rdbms_metadata_manager_spark.sinks.io_formats import compact_small_files
 
 
 def test_entity_match_full_recall_and_unique_matches(spark, sf_dir):
@@ -80,20 +77,6 @@ def test_cohort_offset_zero_is_full_cohort(spark, sf_dir):
             assert r.retention_rate == 1.0
             seen0.add(r.cohort_day)
     assert seen0 == {r.cohort_day for r in rows}
-
-
-def test_compact_small_files_preserves_rows(spark, sf_dir, tmp_path):
-    docs = load(spark, sf_dir, "documents")
-    frag = str(tmp_path / "frag")
-    docs.repartition(40).write.parquet(frag)
-    assert len(glob.glob(f"{frag}/part-*.parquet")) == 40
-    out = str(tmp_path / "compact")
-    n = compact_small_files(spark, frag, out, target_file_bytes=1 << 30)
-    assert n == 1
-    assert len(glob.glob(f"{out}/part-*.parquet")) == 1
-    compacted = spark.read.parquet(out)
-    assert compacted.count() == docs.count()
-    assert set(compacted.columns) == set(docs.columns)
 
 
 def test_quantized_rerank_recall_vs_bruteforce(spark, sf_dir):

@@ -1,8 +1,6 @@
-"""End-to-end training-data pipeline: stage consistency + shard sink."""
+"""End-to-end training-data pipeline: stage consistency and survivor sets."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from rdbms_metadata_manager_spark.llm import pipeline
 
@@ -24,16 +22,6 @@ def test_survivors_have_no_near_dup_pairs(spark, sf_dir):
         (r["doc_a"], r["doc_b"]) for r in pairs if r["doc_a"] in survivors and r["doc_b"] in survivors
     ]
     assert both_survived == []
-
-
-def test_training_shards_partitioned_by_lang(spark, sf_dir, tmp_path):
-    out = str(tmp_path / "shards")
-    pipeline.write_training_shards(spark, sf_dir, out)
-    back = spark.read.parquet(out)
-    n_survivors = pipeline.pipeline_survivors(spark, sf_dir).count()
-    assert back.count() == n_survivors
-    plan = back.filter(F.col("lang") == "en")._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "lang" in plan
 
 
 def test_cross_source_matrix_accounts_for_every_pair(spark, sf_dir):

@@ -193,10 +193,8 @@ def test_dynamic_partition_pruning_on_partitioned_fact(spark, sf_dir, tmp_path):
     the pruning side.)"""
     import pandas as pd
 
-    from rdbms_metadata_manager_spark.sinks import io_formats
-
     docs = load(spark, sf_dir, "documents")
-    io_formats.write_partitioned_parquet(docs, str(tmp_path / "fact"), ["lang"])
+    docs.write.partitionBy("lang").parquet(str(tmp_path / "fact"))
     spark.createDataFrame(
         pd.DataFrame({"lang": ["en", "de", "fr", "es", "zh"], "keep": [1, 0, 0, 0, 0]})
     ).write.parquet(str(tmp_path / "dim"))
@@ -239,34 +237,6 @@ def test_runtime_bloom_filter_prunes_shuffle_join(spark, sf_dir):
         for k, v in old.items():
             if v is not None:
                 spark.conf.set(k, v)
-
-
-def test_range_clustered_write_gives_disjoint_file_ranges(spark, sf_dir, tmp_path):
-    """write_range_clustered_parquet must produce files owning
-    disjoint o_orderkey ranges (verified from the parquet footers) —
-    the property that lets min/max stats skip whole files on range
-    predicates."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from rdbms_metadata_manager_spark.sinks import io_formats
-
-    orders = load(spark, sf_dir, "orders")
-    path = str(tmp_path / "orders_rc")
-    io_formats.write_range_clustered_parquet(orders, path, ["o_orderkey"], n_files=6)
-    spans = []
-    for f in glob.glob(f"{path}/part-*.parquet"):
-        md = pq.ParquetFile(f).metadata
-        idx = md.schema.to_arrow_schema().get_field_index("o_orderkey")
-        lo = min(md.row_group(g).column(idx).statistics.min for g in range(md.num_row_groups))
-        hi = max(md.row_group(g).column(idx).statistics.max for g in range(md.num_row_groups))
-        spans.append((lo, hi))
-    spans.sort()
-    assert len(spans) >= 2, spans
-    for (_, prev_hi), (lo, _) in zip(spans, spans[1:]):
-        assert lo > prev_hi, spans
-    assert spark.read.parquet(path).count() == orders.count()
 
 
 def test_scd2_reuses_one_hash_exchange(spark, sf_dir):

@@ -266,6 +266,35 @@ def test_report_and_csv_run_at_most_10_jobs(spark, ecommerce, tmp_path, capsys):
     assert "Table: Users" in capsys.readouterr().out
 
 
+class _Issues:
+    """Just the ``limit().collect()`` surface ``print_report`` reads."""
+
+    def __init__(self, n):
+        self.rows = [
+            {"table": f"T{i}", "column": "c", "issue_type": "t", "issue": "i",
+             "recommendation": "r"}
+            for i in range(n)
+        ]
+
+    def limit(self, n):
+        self.rows = self.rows[:n]
+        return self
+
+    def collect(self):
+        return self.rows
+
+
+@pytest.mark.parametrize("n, printed, notice", [(4, 3, True), (3, 3, False)])
+def test_report_cap_says_when_issues_are_left_out(monkeypatch, capsys, n, printed, notice):
+    from rdbms_metadata_manager_spark.sinks import report
+
+    monkeypatch.setattr(report, "REPORT_CAP", 3)
+    assert report.print_report(_Issues(n), "db") == printed
+    out = capsys.readouterr().out
+    assert out.count("Table: ") == printed
+    assert ("Showing the first 3 issues" in out) == notice
+
+
 def test_rule_text_with_braces_reaches_spark_unchanged(ecommerce):
     """Rule SQL goes through spark.sql's ``{}`` formatter; braces in a
     rule (a regex quantifier, a literal) must arrive as written."""

@@ -1,20 +1,13 @@
-"""Invariants for SCD2 interval building, heavy-hitter skew
-diagnosis, and the partition-scoped hard delete."""
+"""Invariants for SCD2 interval building and heavy-hitter skew
+diagnosis."""
 
 from __future__ import annotations
-
-import glob
-import os
 
 from pyspark.sql import functions as F
 
 from rdbms_metadata_manager_spark.queries.base import load
 from rdbms_metadata_manager_spark.queries.scd import scd2_user_state_intervals
 from rdbms_metadata_manager_spark.queries.skew import HEAVY_K, heavy_hitter_users
-from rdbms_metadata_manager_spark.sinks.io_formats import (
-    delete_keys_partition_rewrite,
-    write_partitioned_parquet,
-)
 
 
 def test_scd2_intervals_tile_each_user_timeline(spark, sf_dir):
@@ -44,34 +37,6 @@ def test_heavy_hitter_shares(spark, sf_dir):
     assert all(rows[i].n_events >= rows[i + 1].n_events for i in range(len(rows) - 1))
     for r in rows:
         assert r.row_share == r.n_events / total
-
-
-def test_delete_keys_rewrites_only_affected_partitions(spark, sf_dir, tmp_path):
-    docs = load(spark, sf_dir, "documents")
-    path = str(tmp_path / "docs_by_lang")
-    write_partitioned_parquet(docs, path, ["lang"])
-
-    victims = docs.filter(F.col("lang") == "de").select("doc_id").limit(10)
-    n_victims = victims.count()
-    before_counts = {r.lang: r.n for r in docs.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    untouched_listing = {
-        f: os.path.getmtime(f) for f in glob.glob(f"{path}/lang=en/part-*.parquet")
-    }
-
-    affected = delete_keys_partition_rewrite(spark, path, "lang", "doc_id", victims)
-    assert affected == ["de"]
-
-    after = spark.read.parquet(path)
-    after_counts = {r.lang: r.n for r in after.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    assert after_counts["de"] == before_counts["de"] - n_victims
-    for lang, n in before_counts.items():
-        if lang != "de":
-            assert after_counts[lang] == n
-    # deleted keys are gone, and the en partition kept its exact files
-    assert after.join(victims, "doc_id").count() == 0
-    assert {
-        f: os.path.getmtime(f) for f in glob.glob(f"{path}/lang=en/part-*.parquet")
-    } == untouched_listing
 
 
 def test_scd2_snapshots_count_exactly_onboarded_users(spark, sf_dir):

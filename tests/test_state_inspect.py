@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 from rdbms_metadata_manager_spark.streaming.state_inspect import (
     read_aggregation_state,
     run_state_checkpoint,
-    state_operator_metadata,
     streaming_state_rollup,
 )
 
@@ -42,7 +41,7 @@ def test_state_metadata_and_partition_layout(spark, sf_dir, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     run_state_checkpoint(spark, sf_dir, ckpt, "state_meta_test")
 
-    meta = state_operator_metadata(spark, ckpt).collect()
+    meta = spark.read.format("state-metadata").load(ckpt).collect()
     assert len(meta) == 1
     assert meta[0].operatorName == "stateStoreSave"
     n_parts = meta[0].numPartitions

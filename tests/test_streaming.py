@@ -1,212 +1,7 @@
-"""Structured Streaming tests: the incremental path must produce the
-same results as the batch-mode window queries (which are themselves
-oracle-checked against DuckDB in test_oracle_parity)."""
+"""Structured Streaming test for the registered ``stream_dedup``
+query: its id state must survive across micro-batches."""
 
 from __future__ import annotations
-
-import shutil
-
-import pytest
-
-from rdbms_metadata_manager_spark.streaming import events_batch, stream
-
-
-@pytest.fixture(scope="module")
-def events_source(spark, sf_dir, tmp_path_factory):
-    # File-source streams want a directory of files.
-    d = tmp_path_factory.mktemp("events_stream")
-    shutil.copy(f"{sf_dir}/events.parquet", d / "events.parquet")
-    return str(d)
-
-
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
-def test_streaming_tumbling_matches_batch(spark, sf_dir, events_source):
-    events = stream.read_events_stream(spark, events_source)
-    q = stream.run_to_memory(
-        stream.streaming_tumbling_counts(events), "tumbling_test", "complete"
-    )
-    assert not q.isActive
-    got = _rows(spark.table("tumbling_test"))
-    expected = _rows(events_batch.events_tumbling_hourly(spark, sf_dir))
-    assert got == expected
-
-
-def test_streaming_sessions_match_batch(spark, sf_dir, events_source):
-    events = stream.read_events_stream(spark, events_source)
-    stream.run_to_memory(
-        stream.streaming_session_counts(events), "sessions_test", "complete"
-    )
-    got = _rows(spark.table("sessions_test"))
-    expected = _rows(
-        events_batch.events_session_stats(spark, sf_dir).drop("sum_value")
-    )
-    assert got == expected
-
-
-def test_foreach_batch_parquet_sink(spark, events_source, tmp_path):
-    out = str(tmp_path / "fb_out")
-    events = stream.read_events_stream(spark, events_source)
-    q = stream.run_foreach_batch_to_parquet(events, out)
-    assert not q.isActive
-    written = spark.read.parquet(out)
-    n_src = spark.read.parquet(events_source).count()
-    assert written.count() == n_src
-    assert "batch_id" in written.columns
-    # Restart with the same checkpoint: availableNow finds nothing new
-    q2 = stream.run_foreach_batch_to_parquet(
-        stream.read_events_stream(spark, events_source), out
-    )
-    assert spark.read.parquet(out).count() == n_src
-
-
-def test_streaming_dedup_drops_duplicate_ids(spark, events_source):
-    events = stream.read_events_stream(spark, events_source)
-    n_input = spark.read.parquet(events_source).count()
-    stream.run_to_memory(
-        stream.streaming_dedup_events(events), "dedup_test", "append"
-    )
-    deduped = spark.table("dedup_test")
-    n_out = deduped.count()
-    assert n_out == deduped.select("event_id").distinct().count()
-    assert 0 < n_out <= n_input
-
-
-def test_streaming_anomaly_alerts_match_batch(spark, sf_dir, events_source):
-    """The stream-static anomaly scorer must flag exactly the hours
-    the batch detector flags (minus gap hours, which a stream never
-    materializes — no events, no micro-batch rows)."""
-    from rdbms_metadata_manager_spark.queries.profiling import (
-        anomaly_event_hours,
-        mad_thresholds,
-    )
-    from rdbms_metadata_manager_spark.streaming.stream import (
-        read_events_stream,
-        run_to_memory,
-        streaming_anomaly_alerts,
-    )
-
-    thresholds = mad_thresholds(spark, sf_dir).localCheckpoint(eager=True)
-    stream = streaming_anomaly_alerts(
-        read_events_stream(spark, events_source), thresholds
-    )
-    run_to_memory(stream, "anomaly_alerts", output_mode="complete")
-    streamed = {
-        (r["event_type"], r["hour"], r["n_events"])
-        for r in spark.table("anomaly_alerts").collect()
-    }
-    batch = {
-        (r["event_type"], r["hour"], r["n_events"])
-        for r in anomaly_event_hours(spark, sf_dir).collect()
-        if r["n_events"] > 0
-    }
-    assert streamed == batch
-
-
-def test_stream_stream_interval_join_matches_batch(spark, sf_dir, events_source):
-    """The stream-stream attribution join (watermarked both sides,
-    time-range condition) must emit exactly the pairs the equivalent
-    batch join produces."""
-    from pyspark.sql import functions as F
-
-    events = stream.read_events_stream(spark, events_source)
-    clicks = events.filter(F.col("event_type") == "click")
-    purchases = events.filter(F.col("event_type") == "purchase")
-    stream.run_to_memory(
-        stream.streaming_click_purchase_join(clicks, purchases),
-        "attribution_test",
-        "append",
-    )
-    got = _rows(spark.table("attribution_test"))
-
-    from rdbms_metadata_manager_spark.queries import base
-
-    batch = base.load(spark, sf_dir, "events")
-    c = batch.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    p = batch.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    expected = _rows(
-        c.join(
-            p,
-            (F.col("c_user") == F.col("p_user"))
-            & (F.col("purchase_ts") >= F.col("click_ts"))
-            & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 300 SECONDS")),
-        ).select(
-            F.col("c_user").alias("user_id"),
-            "click_id",
-            "click_ts",
-            "purchase_id",
-            "purchase_ts",
-        )
-    )
-    assert len(got) > 0
-    assert got == expected
-
-
-def test_streaming_variant_counts_match_batch(spark, sf_dir, events_source):
-    """The streaming VARIANT rollup must equal the same expressions
-    evaluated in batch (incremental state path == one-shot)."""
-    from pyspark.sql import functions as F
-
-    events = stream.read_events_stream(spark, events_source)
-    stream.run_to_memory(
-        stream.streaming_variant_counts(events), "variant_test", "complete"
-    )
-    got = _rows(spark.table("variant_test"))
-
-    from rdbms_metadata_manager_spark.queries import base
-
-    batch = (
-        base.load(spark, sf_dir, "events")
-        .withColumn("k", F.expr("variant_get(parse_json(props), '$.k', 'int')"))
-        .groupBy(
-            F.window("ts", "1 hour").alias("w"),
-            "event_type",
-            F.expr("k div 10").alias("k_decile"),
-        )
-        .agg(F.count("*").alias("n_events"), F.sum("k").cast("bigint").alias("sum_k"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type", "k_decile", "n_events", "sum_k",
-        )
-    )
-    assert got == _rows(batch)
-
-
-def test_streaming_pit_enrich_matches_batch(spark, sf_dir, events_source):
-    """Stream-static PIT lookup must equal the batch feature-time-
-    travel join when the stream drains the same facts."""
-    from pyspark.sql import functions as F
-
-    from rdbms_metadata_manager_spark.queries.base import load
-    from rdbms_metadata_manager_spark.queries.scd import (
-        _state_intervals,
-        pit_state_at_purchase,
-    )
-
-    ev = load(spark, sf_dir, "events")
-    dim = _state_intervals(ev.filter(F.col("event_type") != "purchase")).select(
-        F.col("user_id").alias("d_user"),
-        F.col("event_type").alias("state_type"),
-        "valid_from",
-        "valid_to",
-    )
-    events = stream.read_events_stream(spark, events_source)
-    stream.run_to_memory(
-        stream.streaming_pit_enrich(events, dim), "pit_test", "append"
-    )
-    got = _rows(spark.table("pit_test"))
-    expected = _rows(pit_state_at_purchase(spark, sf_dir))
-    assert got == expected
 
 
 def test_stream_dedup_replay_spans_multiple_microbatches(spark, sf_dir, tmp_path):
@@ -252,85 +47,3 @@ def test_stream_dedup_replay_spans_multiple_microbatches(spark, sf_dir, tmp_path
     n_base = base.count()
     assert out.count() == n_base
     assert out.select("event_id").distinct().count() == n_base
-
-
-def test_stream_stream_left_outer_join_matches_batch(spark, sf_dir, events_source):
-    """LEFT OUTER attribution: matched pairs must equal the batch
-    inner join; null-padded rows must be exactly the batch-unmatched
-    clicks whose no-match proof the final watermark covers (click_ts
-    + window < watermark). Tail clicks may legitimately stay
-    buffered — the test separates the two regions instead of
-    demanding full equality."""
-    import datetime
-
-    from pyspark.sql import functions as F
-
-    from rdbms_metadata_manager_spark.queries import base
-    from rdbms_metadata_manager_spark.streaming.stream import (
-        ATTRIBUTION_WINDOW_S,
-        WATERMARK,
-    )
-
-    events = stream.read_events_stream(spark, events_source)
-    clicks = events.filter(F.col("event_type") == "click")
-    purchases = events.filter(F.col("event_type") == "purchase")
-    stream.run_to_memory(
-        stream.streaming_click_purchase_left_join(clicks, purchases),
-        "attribution_outer_test",
-        "append",
-    )
-    streamed = spark.table("attribution_outer_test").collect()
-    got_matched = sorted(tuple(r) for r in streamed if r["purchase_id"] is not None)
-    got_nulls = {(r["user_id"], r["click_id"]) for r in streamed if r["purchase_id"] is None}
-
-    batch = base.load(spark, sf_dir, "events")
-    c = batch.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    p = batch.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    joined = c.join(
-        p,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (
-            F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr(f"INTERVAL {ATTRIBUTION_WINDOW_S} SECONDS")
-        ),
-        "left",
-    ).select(
-        F.col("c_user").alias("user_id"),
-        "click_id",
-        "click_ts",
-        "purchase_id",
-        "purchase_ts",
-    ).collect()
-    want_matched = sorted(tuple(r) for r in joined if r["purchase_id"] is not None)
-    assert got_matched == want_matched
-
-    # The final GLOBAL watermark is the MIN over both watermark
-    # operators (default multipleWatermarkPolicy): each side's max
-    # event time minus the delay. Using the overall max would
-    # over-promise eviction of the last click in the stream.
-    wm_delay_s = int(WATERMARK.split()[0]) * (60 if "minute" in WATERMARK else 1)
-    max_click = batch.filter(F.col("event_type") == "click").agg(F.max("ts")).collect()[0][0]
-    max_purch = batch.filter(F.col("event_type") == "purchase").agg(F.max("ts")).collect()[0][0]
-    wm = min(max_click, max_purch) - datetime.timedelta(seconds=wm_delay_s)
-    closeable = {
-        (r["user_id"], r["click_id"])
-        for r in joined
-        if r["purchase_id"] is None
-        and r["click_ts"] + datetime.timedelta(seconds=ATTRIBUTION_WINDOW_S) < wm
-    }
-    all_unmatched = {(r["user_id"], r["click_id"]) for r in joined if r["purchase_id"] is None}
-    # every provably-unmatched click must have emitted its null row...
-    assert closeable <= got_nulls, (len(closeable), len(got_nulls))
-    # ...and no null row may contradict the batch join
-    assert got_nulls <= all_unmatched
-    # the outer path must actually have fired on this data
-    assert got_nulls, "no null-padded rows emitted"
