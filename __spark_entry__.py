@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from rdbms_metadata_manager_spark.registry import all_oracles, all_queries  # noqa: E402
+from rdbms_metadata_manager_spark.session import spark_cpus  # noqa: E402
 
 
 def _ensure_confs(spark: SparkSession) -> SparkSession:
@@ -37,7 +38,7 @@ def _ensure_confs(spark: SparkSession) -> SparkSession:
         ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
         ("spark.sql.adaptive.skewJoin.enabled", "true"),
         ("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)),
-        ("spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        ("spark.sql.shuffle.partitions", str(spark_cpus())),
     ]:
         try:
             spark.conf.set(k, v)
@@ -61,6 +62,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL oracle per query (omitted entries get
-    the driver's weaker rows-only check)."""
+    """DuckDB-runnable ANSI SQL oracle per query; every query has one."""
     return all_oracles()

@@ -21,7 +21,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from rdbms_metadata_manager_spark.registry import all_queries  # noqa: E402
-from rdbms_metadata_manager_spark.session import get_spark  # noqa: E402
+from rdbms_metadata_manager_spark.session import get_spark, spark_cpus  # noqa: E402
 
 # Representative headline set: one per operator family, weighted
 # toward the scan/join/shuffle-heavy shapes that dominate at scale.
@@ -278,7 +278,7 @@ def main() -> None:
     materialize(li.join(F.broadcast(tiny), li["l_linenumber"] == tiny["k"], "left"))
     # Spawn the Python worker pool once (first mapInPandas pays ~4s
     # for 32 workers; they're reused by every later Python-path query).
-    warm = spark.range(0, 64).repartition(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    warm = spark.range(0, 64).repartition(spark_cpus())
     materialize(warm.mapInPandas(lambda it: it, "id long"))
 
     # Untimed warmup pass (BENCH_NOTES r8): every headline query runs

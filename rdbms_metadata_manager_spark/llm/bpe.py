@@ -345,15 +345,9 @@ ORDER BY source
 """
 
 
-QUERIES = {
-    "bpe_pair_merge_counts": bpe_pair_merge_counts,
-    "bpe_train_merges": bpe_train_merges,
-    "bpe_vocab_after_merges": bpe_vocab_after_merges,
-    "tokenizer_fertility_report": tokenizer_fertility_report,
-}
-ORACLES = {
-    "bpe_pair_merge_counts": _BPE_SQL,
-    "bpe_train_merges": _BPE_TRAIN_SQL,
-    "bpe_vocab_after_merges": _bpe_vocab_sql(),
-    "tokenizer_fertility_report": _fertility_sql(),
-}
+QUERIES = (
+    (bpe_pair_merge_counts, _BPE_SQL),
+    (bpe_train_merges, _BPE_TRAIN_SQL),
+    (bpe_vocab_after_merges, _bpe_vocab_sql()),
+    (tokenizer_fertility_report, _fertility_sql()),
+)

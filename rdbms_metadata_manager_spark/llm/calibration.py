@@ -401,14 +401,8 @@ FROM agg
 """
 
 
-QUERIES = {
-    "brier_score_decomposition": brier_score_decomposition,
-    "isotonic_calibration_pava": isotonic_calibration_pava,
-    "average_precision_scorer": average_precision_scorer,
-}
-
-ORACLES = {
-    "brier_score_decomposition": _BRIER_SQL,
-    "isotonic_calibration_pava": _PAVA_SQL,
-    "average_precision_scorer": _AP_SQL,
-}
+QUERIES = (
+    (brier_score_decomposition, _BRIER_SQL),
+    (isotonic_calibration_pava, _PAVA_SQL),
+    (average_precision_scorer, _AP_SQL),
+)

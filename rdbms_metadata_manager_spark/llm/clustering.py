@@ -498,19 +498,11 @@ ORDER BY doc_class
 """
 
 
-QUERIES = {
-    "dedup_clusters": dedup_clusters,
-    "cluster_safe_split": cluster_safe_split,
-    "dedup_clusters_star": dedup_clusters_star,
-    "dedup_cluster_size_histogram": dedup_cluster_size_histogram,
-    "dedup_keep_best": dedup_keep_best,
-    "dedup_survivorship_audit": dedup_survivorship_audit,
-}
-ORACLES = {
-    "dedup_clusters": _CLUSTERS_SQL,
-    "cluster_safe_split": _cluster_split_oracle(),
-    "dedup_clusters_star": _CLUSTERS_SQL,
-    "dedup_cluster_size_histogram": _CLUSTER_SIZES_SQL,
-    "dedup_keep_best": _keep_best_oracle(),
-    "dedup_survivorship_audit": _survivorship_oracle(),
-}
+QUERIES = (
+    (dedup_clusters, _CLUSTERS_SQL),
+    (cluster_safe_split, _cluster_split_oracle()),
+    (dedup_clusters_star, _CLUSTERS_SQL),
+    (dedup_cluster_size_histogram, _CLUSTER_SIZES_SQL),
+    (dedup_keep_best, _keep_best_oracle()),
+    (dedup_survivorship_audit, _survivorship_oracle()),
+)

@@ -1507,41 +1507,22 @@ FROM sums
 """
 
 
-QUERIES = {
-    "cochran_q_scorer_battery": cochran_q_scorer_battery,
-    "dsir_systematic_resample": dsir_systematic_resample,
-    "mcnemar_scorer_disagreement": mcnemar_scorer_disagreement,
-    "dedup_chunk_ratio": dedup_chunk_ratio,
-    "chunk_dedup_rewrite": chunk_dedup_rewrite,
-    "quality_filter_gate": quality_filter_gate,
-    "bm25_keyword_search": bm25_keyword_search,
-    "dsir_importance_weights": dsir_importance_weights,
-    "quality_classifier_scores": quality_classifier_scores,
-    "quality_scorer_agreement": quality_scorer_agreement,
-    "quality_scorer_auc": quality_scorer_auc,
-    "jackknife_source_sensitivity": jackknife_source_sensitivity,
-    "gains_curve_scorer": gains_curve_scorer,
-    "score_calibration_bins": score_calibration_bins,
-    "boilerplate_ngram_report": boilerplate_ngram_report,
-    "source_quality_gate": source_quality_gate,
-    "rag_chunk_overlap_stats": rag_chunk_overlap_stats,
-}
-ORACLES = {
-    "cochran_q_scorer_battery": _COCHRAN_SQL,
-    "dsir_systematic_resample": _RESAMPLE_SQL,
-    "mcnemar_scorer_disagreement": _MCNEMAR_SQL,
-    "dedup_chunk_ratio": _CHUNK_SQL,
-    "chunk_dedup_rewrite": _CHUNK_REWRITE_SQL,
-    "quality_filter_gate": _GATE_SQL,
-    "bm25_keyword_search": _BM25_SQL,
-    "dsir_importance_weights": _DSIR_SQL,
-    "quality_classifier_scores": _QC_SQL,
-    "quality_scorer_agreement": _AGREEMENT_SQL,
-    "quality_scorer_auc": _AUC_SQL,
-    "jackknife_source_sensitivity": _JACKKNIFE_SQL.format(qc=_QC_SQL),
-    "gains_curve_scorer": _GAINS_SQL,
-    "score_calibration_bins": _CALIBRATION_SQL,
-    "boilerplate_ngram_report": _boilerplate_sql(),
-    "source_quality_gate": _SOURCE_GATE_SQL,
-    "rag_chunk_overlap_stats": _rag_chunk_sql(),
-}
+QUERIES = (
+    (cochran_q_scorer_battery, _COCHRAN_SQL),
+    (dsir_systematic_resample, _RESAMPLE_SQL),
+    (mcnemar_scorer_disagreement, _MCNEMAR_SQL),
+    (dedup_chunk_ratio, _CHUNK_SQL),
+    (chunk_dedup_rewrite, _CHUNK_REWRITE_SQL),
+    (quality_filter_gate, _GATE_SQL),
+    (bm25_keyword_search, _BM25_SQL),
+    (dsir_importance_weights, _DSIR_SQL),
+    (quality_classifier_scores, _QC_SQL),
+    (quality_scorer_agreement, _AGREEMENT_SQL),
+    (quality_scorer_auc, _AUC_SQL),
+    (jackknife_source_sensitivity, _JACKKNIFE_SQL.format(qc=_QC_SQL)),
+    (gains_curve_scorer, _GAINS_SQL),
+    (score_calibration_bins, _CALIBRATION_SQL),
+    (boilerplate_ngram_report, _boilerplate_sql()),
+    (source_quality_gate, _SOURCE_GATE_SQL),
+    (rag_chunk_overlap_stats, _rag_chunk_sql()),
+)

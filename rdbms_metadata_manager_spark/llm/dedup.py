@@ -1356,40 +1356,21 @@ def lsh_band_planner(spark, sf_dir):  # sf_dir unused: closed-form planner
     return spark.sql(_LSH_PLANNER_SQL)
 
 
-QUERIES = {
-    "lsh_band_planner": lsh_band_planner,
-    "dedup_exact": dedup_exact,
-    "dedup_ngram_jaccard": dedup_ngram_jaccard,
-    "dedup_minhash_lsh": dedup_minhash_lsh,
-    "dedup_simhash": dedup_simhash,
-    "dedup_incremental_batch": dedup_incremental_batch,
-    "dedup_jaccard_prefix_filter": dedup_jaccard_prefix_filter,
-    "dedup_containment": dedup_containment,
-    "dedup_sketch_recall_report": dedup_sketch_recall_report,
-    "minhash_estimate_calibration": minhash_estimate_calibration,
-    "dedup_negative_control": dedup_negative_control,
-    "dedup_edit_distance_verify": dedup_edit_distance_verify,
-    "dedup_tf_cosine": dedup_tf_cosine,
-    "cross_source_dup_matrix": cross_source_dup_matrix,
-    "dedup_threshold_sweep": dedup_threshold_sweep,
-    "ngram_novelty_curve": ngram_novelty_curve,
-}
-
-ORACLES = {
-    "lsh_band_planner": _LSH_PLANNER_SQL,
-    "dedup_exact": _EXACT_SQL,
-    "dedup_ngram_jaccard": _JACCARD_SQL,
-    "dedup_minhash_lsh": _MINHASH_SQL,
-    "dedup_simhash": _SIMHASH_SQL,
-    "dedup_incremental_batch": _INCREMENTAL_SQL,
-    "dedup_jaccard_prefix_filter": _PREFIX_FILTER_SQL,
-    "dedup_containment": _CONTAINMENT_SQL,
-    "dedup_sketch_recall_report": _SKETCH_RECALL_SQL,
-    "minhash_estimate_calibration": _MINHASH_CALIB_SQL,
-    "dedup_negative_control": _NEGATIVE_CONTROL_SQL,
-    "dedup_edit_distance_verify": _EDIT_VERIFY_SQL,
-    "dedup_tf_cosine": _TF_COSINE_SQL,
-    "cross_source_dup_matrix": _CROSS_SOURCE_SQL,
-    "dedup_threshold_sweep": _SWEEP_SQL,
-    "ngram_novelty_curve": _NOVELTY_SQL,
-}
+QUERIES = (
+    (lsh_band_planner, _LSH_PLANNER_SQL),
+    (dedup_exact, _EXACT_SQL),
+    (dedup_ngram_jaccard, _JACCARD_SQL),
+    (dedup_minhash_lsh, _MINHASH_SQL),
+    (dedup_simhash, _SIMHASH_SQL),
+    (dedup_incremental_batch, _INCREMENTAL_SQL),
+    (dedup_jaccard_prefix_filter, _PREFIX_FILTER_SQL),
+    (dedup_containment, _CONTAINMENT_SQL),
+    (dedup_sketch_recall_report, _SKETCH_RECALL_SQL),
+    (minhash_estimate_calibration, _MINHASH_CALIB_SQL),
+    (dedup_negative_control, _NEGATIVE_CONTROL_SQL),
+    (dedup_edit_distance_verify, _EDIT_VERIFY_SQL),
+    (dedup_tf_cosine, _TF_COSINE_SQL),
+    (cross_source_dup_matrix, _CROSS_SOURCE_SQL),
+    (dedup_threshold_sweep, _SWEEP_SQL),
+    (ngram_novelty_curve, _NOVELTY_SQL),
+)

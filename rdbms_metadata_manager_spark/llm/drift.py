@@ -385,14 +385,8 @@ FROM s
 """
 
 
-QUERIES = {
-    "wasserstein_source_length_drift": wasserstein_source_length_drift,
-    "rbo_scorer_rankings": rbo_scorer_rankings,
-    "vocab_gini_concentration": vocab_gini_concentration,
-}
-
-ORACLES = {
-    "wasserstein_source_length_drift": _WASSERSTEIN_SQL,
-    "rbo_scorer_rankings": _rbo_oracle(),
-    "vocab_gini_concentration": _VOCAB_GINI_SQL,
-}
+QUERIES = (
+    (wasserstein_source_length_drift, _WASSERSTEIN_SQL),
+    (rbo_scorer_rankings, _rbo_oracle()),
+    (vocab_gini_concentration, _VOCAB_GINI_SQL),
+)

@@ -142,5 +142,4 @@ ORDER BY dirty_custkey
 """
 
 
-QUERIES = {"entity_match_fuzzy_names": entity_match_fuzzy_names}
-ORACLES = {"entity_match_fuzzy_names": _ENTITY_SQL}
+QUERIES = ((entity_match_fuzzy_names, _ENTITY_SQL),)

@@ -198,11 +198,7 @@ ORDER BY doc_a, doc_b
 """
 
 
-QUERIES = {
-    "text_winnow_fingerprints": text_winnow_fingerprints,
-    "dedup_winnow_overlap": dedup_winnow_overlap,
-}
-ORACLES = {
-    "text_winnow_fingerprints": _FINGERPRINT_SQL,
-    "dedup_winnow_overlap": _OVERLAP_SQL,
-}
+QUERIES = (
+    (text_winnow_fingerprints, _FINGERPRINT_SQL),
+    (dedup_winnow_overlap, _OVERLAP_SQL),
+)

@@ -89,5 +89,4 @@ ORDER BY dim_i, dim_j
 """
 
 
-QUERIES = {"embedding_gram_matrix": embedding_gram_matrix}
-ORACLES = {"embedding_gram_matrix": _GRAM_SQL}
+QUERIES = ((embedding_gram_matrix, _GRAM_SQL),)

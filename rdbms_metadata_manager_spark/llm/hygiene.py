@@ -308,14 +308,8 @@ ORDER BY doc_id, n
 """
 
 
-QUERIES = {
-    "decontaminate_train_test": decontaminate_train_test,
-    "text_repetition_stats": text_repetition_stats,
-    "gopher_repetition_profile": gopher_repetition_profile,
-}
-
-ORACLES = {
-    "decontaminate_train_test": _DECONTAM_SQL,
-    "text_repetition_stats": _REPETITION_SQL,
-    "gopher_repetition_profile": _GOPHER_SQL,
-}
+QUERIES = (
+    (decontaminate_train_test, _DECONTAM_SQL),
+    (text_repetition_stats, _REPETITION_SQL),
+    (gopher_repetition_profile, _GOPHER_SQL),
+)

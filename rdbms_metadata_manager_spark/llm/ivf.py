@@ -433,16 +433,9 @@ ORDER BY nprobe
 """
 
 
-QUERIES = {
-    "similarity_ivf_search": similarity_ivf_search,
-    "ivf_cell_stats": ivf_cell_stats,
-    "ivf_kmeans_search": ivf_kmeans_search,
-    "ivf_nprobe_recall_curve": ivf_nprobe_recall_curve,
-}
-
-ORACLES = {
-    "ivf_nprobe_recall_curve": _nprobe_curve_oracle(),
-    "similarity_ivf_search": _IVF_SQL,
-    "ivf_cell_stats": _IVF_STATS_SQL,
-    "ivf_kmeans_search": _ivf_kmeans_sql(),
-}
+QUERIES = (
+    (similarity_ivf_search, _IVF_SQL),
+    (ivf_cell_stats, _IVF_STATS_SQL),
+    (ivf_kmeans_search, _ivf_kmeans_sql()),
+    (ivf_nprobe_recall_curve, _nprobe_curve_oracle()),
+)

@@ -277,11 +277,7 @@ ORDER BY cid
 """
 
 
-QUERIES = {
-    "kmeans_clusters": kmeans_clusters,
-    "kmeans_silhouette_report": kmeans_silhouette_report,
-}
-ORACLES = {
-    "kmeans_clusters": _KMEANS_SQL,
-    "kmeans_silhouette_report": _SILHOUETTE_SQL,
-}
+QUERIES = (
+    (kmeans_clusters, _KMEANS_SQL),
+    (kmeans_silhouette_report, _SILHOUETTE_SQL),
+)

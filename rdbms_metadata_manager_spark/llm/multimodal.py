@@ -354,15 +354,9 @@ FROM c, LATERAL (SELECT unnest(range(0, n_chunks)) AS j) t
 ORDER BY doc_id, chunk_idx
 """
 
-QUERIES = {
-    "multimodal_features": multimodal_features,
-    "multimodal_resize": multimodal_resize,
-    "multimodal_frame_sample": multimodal_frame_sample,
-    "multimodal_audio_chunks": multimodal_audio_chunks,
-}
-ORACLES = {
-    "multimodal_features": _FEATURES_SQL,
-    "multimodal_resize": _RESIZE_SQL,
-    "multimodal_frame_sample": _FRAME_SQL,
-    "multimodal_audio_chunks": _AUDIO_SQL,
-}
+QUERIES = (
+    (multimodal_features, _FEATURES_SQL),
+    (multimodal_resize, _RESIZE_SQL),
+    (multimodal_frame_sample, _FRAME_SQL),
+    (multimodal_audio_chunks, _AUDIO_SQL),
+)

@@ -414,17 +414,10 @@ FROM scored
 """
 
 
-QUERIES = {
-    "pii_redaction": pii_redaction,
-    "k_anonymity_audit": k_anonymity_audit,
-    "l_diversity_audit": l_diversity_audit,
-    "dp_sensitivity_audit": dp_sensitivity_audit,
-    "t_closeness_audit": t_closeness_audit,
-}
-ORACLES = {
-    "pii_redaction": _PII_SQL,
-    "k_anonymity_audit": _K_ANON_SQL,
-    "l_diversity_audit": _L_DIV_SQL,
-    "dp_sensitivity_audit": _DP_SQL,
-    "t_closeness_audit": _T_CLOSE_SQL,
-}
+QUERIES = (
+    (pii_redaction, _PII_SQL),
+    (k_anonymity_audit, _K_ANON_SQL),
+    (l_diversity_audit, _L_DIV_SQL),
+    (dp_sensitivity_audit, _DP_SQL),
+    (t_closeness_audit, _T_CLOSE_SQL),
+)

@@ -528,19 +528,11 @@ FROM agg
 """
 
 
-QUERIES = {
-    "pipeline_stage_counts": pipeline_stage_counts,
-    "corpus_overview_report": corpus_overview_report,
-    "source_token_budget_cap": source_token_budget_cap,
-    "source_mix_weights": source_mix_weights,
-    "corpus_temperature_mix": corpus_temperature_mix,
-    "mix_effective_sample_size": mix_effective_sample_size,
-}
-ORACLES = {
-    "pipeline_stage_counts": _PIPELINE_SQL,
-    "corpus_overview_report": _OVERVIEW_SQL,
-    "source_token_budget_cap": _BUDGET_SQL,
-    "source_mix_weights": _MIX_SQL,
-    "corpus_temperature_mix": _TEMPERATURE_SQL,
-    "mix_effective_sample_size": _ESS_SQL,
-}
+QUERIES = (
+    (pipeline_stage_counts, _PIPELINE_SQL),
+    (corpus_overview_report, _OVERVIEW_SQL),
+    (source_token_budget_cap, _BUDGET_SQL),
+    (source_mix_weights, _MIX_SQL),
+    (corpus_temperature_mix, _TEMPERATURE_SQL),
+    (mix_effective_sample_size, _ESS_SQL),
+)

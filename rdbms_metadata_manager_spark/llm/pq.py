@@ -447,11 +447,7 @@ LIMIT {PQ_K}
 """
 
 
-QUERIES = {
-    "pq_adc_search": pq_adc_search,
-    "ivfpq_residual_search": ivfpq_residual_search,
-}
-ORACLES = {
-    "pq_adc_search": _PQ_SQL,
-    "ivfpq_residual_search": _ivfpq_sql(),
-}
+QUERIES = (
+    (pq_adc_search, _PQ_SQL),
+    (ivfpq_residual_search, _ivfpq_sql()),
+)

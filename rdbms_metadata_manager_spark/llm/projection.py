@@ -455,15 +455,9 @@ ORDER BY query_id, dim
 """
 
 
-QUERIES = {
-    "embedding_random_projection": embedding_random_projection,
-    "embedding_dim_robust_stats": embedding_dim_robust_stats,
-    "embedding_norm_outlier_bands": embedding_norm_outlier_bands,
-    "matryoshka_truncation_recall": matryoshka_truncation_recall,
-}
-ORACLES = {
-    "embedding_random_projection": _PROJ_SQL,
-    "embedding_dim_robust_stats": _DIM_STATS_SQL,
-    "embedding_norm_outlier_bands": _NORM_BANDS_SQL,
-    "matryoshka_truncation_recall": _mat_oracle(),
-}
+QUERIES = (
+    (embedding_random_projection, _PROJ_SQL),
+    (embedding_dim_robust_stats, _DIM_STATS_SQL),
+    (embedding_norm_outlier_bands, _NORM_BANDS_SQL),
+    (matryoshka_truncation_recall, _mat_oracle()),
+)

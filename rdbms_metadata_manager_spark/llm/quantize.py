@@ -351,16 +351,9 @@ LIMIT {HAM_RERANK_K}
 """
 
 
-QUERIES = {
-    "embedding_quantize_int8": embedding_quantize_int8,
-    "embedding_quantization_error": embedding_quantization_error,
-    "similarity_quantized_rerank": similarity_quantized_rerank,
-    "similarity_binary_rerank": similarity_binary_rerank,
-}
-
-ORACLES = {
-    "embedding_quantize_int8": _QUANT_SQL,
-    "embedding_quantization_error": _QUANT_ERR_SQL,
-    "similarity_quantized_rerank": _RERANK_SQL,
-    "similarity_binary_rerank": _binary_rerank_sql(),
-}
+QUERIES = (
+    (embedding_quantize_int8, _QUANT_SQL),
+    (embedding_quantization_error, _QUANT_ERR_SQL),
+    (similarity_quantized_rerank, _RERANK_SQL),
+    (similarity_binary_rerank, _binary_rerank_sql()),
+)

@@ -373,16 +373,9 @@ ORDER BY query_id
 """
 
 
-QUERIES = {
-    "tfidf_top_terms": tfidf_top_terms,
-    "embedding_centroids": embedding_centroids,
-    "retrieval_eval_metrics": retrieval_eval_metrics,
-    "ndcg_at_10_eval": ndcg_at_10_eval,
-}
-
-ORACLES = {
-    "tfidf_top_terms": _TFIDF_SQL,
-    "embedding_centroids": _CENTROIDS_SQL,
-    "retrieval_eval_metrics": _retrieval_eval_oracle(),
-    "ndcg_at_10_eval": _ndcg_oracle(),
-}
+QUERIES = (
+    (tfidf_top_terms, _TFIDF_SQL),
+    (embedding_centroids, _CENTROIDS_SQL),
+    (retrieval_eval_metrics, _retrieval_eval_oracle()),
+    (ndcg_at_10_eval, _ndcg_oracle()),
+)

@@ -958,34 +958,18 @@ ORDER BY seq_len
 """
 
 
-QUERIES = {
-    "packing_bounds_curve": packing_bounds_curve,
-    "neyman_allocation_plan": neyman_allocation_plan,
-    "coreset_kcenter_sample": coreset_kcenter_sample,
-    "split_train_val_test": split_train_val_test,
-    "leakage_safe_split": leakage_safe_split,
-    "sample_stratified_lang": sample_stratified_lang,
-    "pack_training_sequences": pack_training_sequences,
-    "sample_reservoir_per_source": sample_reservoir_per_source,
-    "sample_weighted_topk": sample_weighted_topk,
-    "shard_packing_nextfit": shard_packing_nextfit,
-    "sequence_length_histogram": sequence_length_histogram,
-    "span_corruption_pairs": span_corruption_pairs,
-    "epoch_shuffle_shards": epoch_shuffle_shards,
-}
-
-
-ORACLES = {
-    "packing_bounds_curve": _PACK_BOUNDS_SQL,
-    "neyman_allocation_plan": _NEYMAN_SQL,
-    "coreset_kcenter_sample": _coreset_oracle(),
-    "split_train_val_test": _SPLIT_SQL,
-    "leakage_safe_split": _LEAK_SPLIT_SQL,
-    "sample_stratified_lang": _STRAT_SQL,
-    "pack_training_sequences": _PACK_SQL,
-    "sample_reservoir_per_source": _RESERVOIR_SQL,
-    "sample_weighted_topk": _WEIGHTED_SQL,
-    "shard_packing_nextfit": _SHARD_SQL,
-    "sequence_length_histogram": _LEN_HIST_SQL,
-    "span_corruption_pairs": _SPAN_SQL,    "epoch_shuffle_shards": _epoch_shuffle_sql(),
-}
+QUERIES = (
+    (packing_bounds_curve, _PACK_BOUNDS_SQL),
+    (neyman_allocation_plan, _NEYMAN_SQL),
+    (coreset_kcenter_sample, _coreset_oracle()),
+    (split_train_val_test, _SPLIT_SQL),
+    (leakage_safe_split, _LEAK_SPLIT_SQL),
+    (sample_stratified_lang, _STRAT_SQL),
+    (pack_training_sequences, _PACK_SQL),
+    (sample_reservoir_per_source, _RESERVOIR_SQL),
+    (sample_weighted_topk, _WEIGHTED_SQL),
+    (shard_packing_nextfit, _SHARD_SQL),
+    (sequence_length_histogram, _LEN_HIST_SQL),
+    (span_corruption_pairs, _SPAN_SQL),
+    (epoch_shuffle_shards, _epoch_shuffle_sql()),
+)

@@ -250,13 +250,8 @@ ORDER BY p.doc_a, p.doc_b
 """
 
 
-QUERIES = {
-    "semdedup_embedding_clusters": semdedup_embedding_clusters,
-    "d4_prototype_prune": d4_prototype_prune,
-    "crossmodal_dup_audit": crossmodal_dup_audit,
-}
-ORACLES = {
-    "semdedup_embedding_clusters": _SEMDEDUP_SQL,
-    "d4_prototype_prune": _D4_SQL,
-    "crossmodal_dup_audit": _crossmodal_sql(),
-}
+QUERIES = (
+    (semdedup_embedding_clusters, _SEMDEDUP_SQL),
+    (d4_prototype_prune, _D4_SQL),
+    (crossmodal_dup_audit, _crossmodal_sql()),
+)

@@ -139,5 +139,4 @@ ORDER BY doc_a, doc_b
 """
 
 
-QUERIES = {"dedup_longest_shared_run": dedup_longest_shared_run}
-ORACLES = {"dedup_longest_shared_run": _RUNS_SQL}
+QUERIES = ((dedup_longest_shared_run, _RUNS_SQL),)

@@ -1175,36 +1175,19 @@ ORDER BY k_occ
 """
 
 
-QUERIES = {
-    "ann_hubness_audit": ann_hubness_audit,
-    "similarity_topk_bruteforce": similarity_topk_bruteforce,
-    "similarity_ann_lsh": similarity_ann_lsh,
-    "similarity_same_label_pairs": similarity_same_label_pairs,
-    "dedup_embedding_cosine": dedup_embedding_cosine,
-    "knn_join_bruteforce": knn_join_bruteforce,
-    "hard_negative_mining": hard_negative_mining,
-    "hybrid_search_rrf": hybrid_search_rrf,
-    "ann_recall_report": ann_recall_report,
-    "label_centroid_separation": label_centroid_separation,
-    "embedding_pair_cosine_profile": embedding_pair_cosine_profile,
-    "similarity_mmr_rerank": similarity_mmr_rerank,
-    "similarity_filtered_topk": similarity_filtered_topk,
-    "label_noise_knn_audit": label_noise_knn_audit,
-}
-
-ORACLES = {
-    "ann_hubness_audit": _HUBNESS_SQL,
-    "similarity_topk_bruteforce": _TOPK_SQL,
-    "embedding_pair_cosine_profile": _COSINE_PROFILE_SQL,
-    "similarity_ann_lsh": _ANN_SQL,
-    "similarity_same_label_pairs": _PAIRS_SQL,
-    "dedup_embedding_cosine": _EMB_DEDUP_SQL,
-    "knn_join_bruteforce": _KNN_JOIN_SQL,
-    "hard_negative_mining": _HARDNEG_SQL,
-    "hybrid_search_rrf": _HYBRID_SQL,
-    "ann_recall_report": _RECALL_SQL,
-    "label_centroid_separation": _CENTROID_SEP_SQL,
-    "similarity_mmr_rerank": _mmr_oracle(),
-    "similarity_filtered_topk": _FILTERED_TOPK_SQL,
-    "label_noise_knn_audit": _label_noise_oracle(),
-}
+QUERIES = (
+    (ann_hubness_audit, _HUBNESS_SQL),
+    (similarity_topk_bruteforce, _TOPK_SQL),
+    (similarity_ann_lsh, _ANN_SQL),
+    (similarity_same_label_pairs, _PAIRS_SQL),
+    (dedup_embedding_cosine, _EMB_DEDUP_SQL),
+    (knn_join_bruteforce, _KNN_JOIN_SQL),
+    (hard_negative_mining, _HARDNEG_SQL),
+    (hybrid_search_rrf, _HYBRID_SQL),
+    (ann_recall_report, _RECALL_SQL),
+    (label_centroid_separation, _CENTROID_SEP_SQL),
+    (embedding_pair_cosine_profile, _COSINE_PROFILE_SQL),
+    (similarity_mmr_rerank, _mmr_oracle()),
+    (similarity_filtered_topk, _FILTERED_TOPK_SQL),
+    (label_noise_knn_audit, _label_noise_oracle()),
+)

@@ -1177,42 +1177,22 @@ ORDER BY source_a, source_b
 """
 
 
-QUERIES = {
-    "burrows_delta_sources": burrows_delta_sources,
-    "text_token_stats": text_token_stats,
-    "text_quality_language": text_quality_language,
-    "text_fingerprint": text_fingerprint,
-    "language_id_ngram": language_id_ngram,
-    "text_normalize_stats": text_normalize_stats,
-    "text_char_entropy": text_char_entropy,
-    "lexical_rarity_stats": lexical_rarity_stats,
-    "bigram_lm_doc_scores": bigram_lm_doc_scores,
-    "lang_vocab_overlap_matrix": lang_vocab_overlap_matrix,
-    "vocab_oov_rate": vocab_oov_rate,
-    "pmi_collocations": pmi_collocations,
-    "language_id_confusion": language_id_confusion,
-    "zipf_rank_frequency_audit": zipf_rank_frequency_audit,
-    "source_signature_chisq": source_signature_chisq,
-    "code_prose_detector": code_prose_detector,
-    "hof_functions_documents": hof_functions_documents,
-}
-
-ORACLES = {
-    "burrows_delta_sources": _BURROWS_SQL,
-    "text_token_stats": _TOKEN_STATS_SQL,
-    "text_quality_language": _QUALITY_SQL,
-    "text_fingerprint": _FINGERPRINT_SQL,
-    "language_id_ngram": _LANG_ID_SQL,
-    "text_normalize_stats": _NORMALIZE_SQL,
-    "text_char_entropy": _ENTROPY_SQL,
-    "lexical_rarity_stats": _RARITY_SQL,
-    "bigram_lm_doc_scores": _BIGRAM_LM_SQL,
-    "lang_vocab_overlap_matrix": _LANG_OVERLAP_SQL,
-    "vocab_oov_rate": _VOCAB_OOV_SQL,
-    "pmi_collocations": _PMI_SQL,
-    "language_id_confusion": _LANG_CONFUSION_SQL,
-    "zipf_rank_frequency_audit": _ZIPF_SQL,
-    "source_signature_chisq": _SIGNATURE_SQL,
-    "code_prose_detector": _CODE_PROSE_SQL,
-    "hof_functions_documents": _HOF_SQL,
-}
+QUERIES = (
+    (burrows_delta_sources, _BURROWS_SQL),
+    (text_token_stats, _TOKEN_STATS_SQL),
+    (text_quality_language, _QUALITY_SQL),
+    (text_fingerprint, _FINGERPRINT_SQL),
+    (language_id_ngram, _LANG_ID_SQL),
+    (text_normalize_stats, _NORMALIZE_SQL),
+    (text_char_entropy, _ENTROPY_SQL),
+    (lexical_rarity_stats, _RARITY_SQL),
+    (bigram_lm_doc_scores, _BIGRAM_LM_SQL),
+    (lang_vocab_overlap_matrix, _LANG_OVERLAP_SQL),
+    (vocab_oov_rate, _VOCAB_OOV_SQL),
+    (pmi_collocations, _PMI_SQL),
+    (language_id_confusion, _LANG_CONFUSION_SQL),
+    (zipf_rank_frequency_audit, _ZIPF_SQL),
+    (source_signature_chisq, _SIGNATURE_SQL),
+    (code_prose_detector, _CODE_PROSE_SQL),
+    (hof_functions_documents, _HOF_SQL),
+)

@@ -348,20 +348,11 @@ FROM documents GROUP BY source ORDER BY source
 """
 
 
-QUERIES = {
-    "pandas_udf_text_scores": pandas_udf_text_scores,
-    "udtf_document_chunks": udtf_document_chunks,
-    "pandas_udaf_gini_acctbal": pandas_udaf_gini_acctbal,
-    "udtf_polymorphic_doc_stats": udtf_polymorphic_doc_stats,
-    "arrow_doc_byte_stats": arrow_doc_byte_stats,
-    "udtf_table_arg_source_profile": udtf_table_arg_source_profile,
-}
-
-ORACLES = {
-    "pandas_udf_text_scores": _PANDAS_UDF_SQL,
-    "udtf_document_chunks": _UDTF_SQL,
-    "pandas_udaf_gini_acctbal": _UDAF_SQL,
-    "udtf_polymorphic_doc_stats": _POLY_UDTF_SQL,
-    "arrow_doc_byte_stats": _ARROW_BYTES_SQL,
-    "udtf_table_arg_source_profile": _TABLE_ARG_SQL,
-}
+QUERIES = (
+    (pandas_udf_text_scores, _PANDAS_UDF_SQL),
+    (udtf_document_chunks, _UDTF_SQL),
+    (pandas_udaf_gini_acctbal, _UDAF_SQL),
+    (udtf_polymorphic_doc_stats, _POLY_UDTF_SQL),
+    (arrow_doc_byte_stats, _ARROW_BYTES_SQL),
+    (udtf_table_arg_source_profile, _TABLE_ARG_SQL),
+)

@@ -770,46 +770,24 @@ ORDER BY ta, tb
 """
 
 
-QUERIES = {
-    "bitwise_functions_events": bitwise_functions_events,
-    "multi_touch_attribution": multi_touch_attribution,
-    "event_type_user_jaccard": event_type_user_jaccard,
-    "listagg_nations_per_region": listagg_nations_per_region,
-    "asof_join_last_click": asof_join_last_click,
-    "map_functions_events": map_functions_events,
-    "range_join_error_bursts": range_join_error_bursts,
-    "grouping_sets_event_rollup": grouping_sets_event_rollup,
-    "dedup_keep_best_per_group": dedup_keep_best_per_group,
-    "percentile_order_values": percentile_order_values,
-    "correlation_quantity_price": correlation_quantity_price,
-    "window_rank_functions": window_rank_functions,
-    "window_range_frame": window_range_frame,
-    "array_posexplode_part_words": array_posexplode_part_words,
-    "null_handling_order_gaps": null_handling_order_gaps,
-    "null_safe_band_join": null_safe_band_join,
-    "try_arithmetic_audit": try_arithmetic_audit,
-    "datetime_functions_orders": datetime_functions_orders,
-    "conditional_aggregates": conditional_aggregates,
-}
-
-ORACLES = {
-    "bitwise_functions_events": _BITWISE_SQL,
-    "multi_touch_attribution": _ATTRIB_SQL,
-    "event_type_user_jaccard": _TYPE_JACCARD_SQL,
-    "listagg_nations_per_region": _LISTAGG_SQL,
-    "asof_join_last_click": _ASOF_SQL,
-    "map_functions_events": _MAP_SQL,
-    "range_join_error_bursts": _RANGE_SQL,
-    "grouping_sets_event_rollup": _GROUPING_SETS_SQL,
-    "dedup_keep_best_per_group": _KEEP_BEST_SQL,
-    "percentile_order_values": _PERCENTILE_SQL,
-    "correlation_quantity_price": _CORR_SQL,
-    "window_rank_functions": _WINDOW_RANK_SQL,
-    "window_range_frame": _WINDOW_RANGE_SQL,
-    "array_posexplode_part_words": _ARRAY_SQL,
-    "null_handling_order_gaps": _NULL_SQL,
-    "null_safe_band_join": _NULL_SAFE_JOIN_SQL,
-    "try_arithmetic_audit": _TRY_ARITH_SQL,
-    "datetime_functions_orders": _DATETIME_SQL,
-    "conditional_aggregates": _CONDITIONAL_SQL,
-}
+QUERIES = (
+    (bitwise_functions_events, _BITWISE_SQL),
+    (multi_touch_attribution, _ATTRIB_SQL),
+    (event_type_user_jaccard, _TYPE_JACCARD_SQL),
+    (listagg_nations_per_region, _LISTAGG_SQL),
+    (asof_join_last_click, _ASOF_SQL),
+    (map_functions_events, _MAP_SQL),
+    (range_join_error_bursts, _RANGE_SQL),
+    (grouping_sets_event_rollup, _GROUPING_SETS_SQL),
+    (dedup_keep_best_per_group, _KEEP_BEST_SQL),
+    (percentile_order_values, _PERCENTILE_SQL),
+    (correlation_quantity_price, _CORR_SQL),
+    (window_rank_functions, _WINDOW_RANK_SQL),
+    (window_range_frame, _WINDOW_RANGE_SQL),
+    (array_posexplode_part_words, _ARRAY_SQL),
+    (null_handling_order_gaps, _NULL_SQL),
+    (null_safe_band_join, _NULL_SAFE_JOIN_SQL),
+    (try_arithmetic_audit, _TRY_ARITH_SQL),
+    (datetime_functions_orders, _DATETIME_SQL),
+    (conditional_aggregates, _CONDITIONAL_SQL),
+)

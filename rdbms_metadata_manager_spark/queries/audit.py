@@ -866,22 +866,12 @@ ORDER BY layout, probe_key, probe_id
 """
 
 
-QUERIES = {
-    "duplicate_payment_candidates": duplicate_payment_candidates,
-    "join_cardinality_audit": join_cardinality_audit,
-    "approx_percentile_rank_audit": approx_percentile_rank_audit,
-    "spc_individuals_chart": spc_individuals_chart,
-    "abc_inventory_classes": abc_inventory_classes,
-    "revenue_bridge_decomposition": revenue_bridge_decomposition,
-    "minmax_skipping_audit": minmax_skipping_audit,
-}
-
-ORACLES = {
-    "duplicate_payment_candidates": _DUP_PAY_SQL,
-    "join_cardinality_audit": _join_audit_oracle(),
-    "approx_percentile_rank_audit": _pct_audit_oracle(),
-    "spc_individuals_chart": _SPC_SQL,
-    "abc_inventory_classes": _ABC_SQL,
-    "revenue_bridge_decomposition": _BRIDGE_SQL,
-    "minmax_skipping_audit": _minmax_oracle(),
-}
+QUERIES = (
+    (duplicate_payment_candidates, _DUP_PAY_SQL),
+    (join_cardinality_audit, _join_audit_oracle()),
+    (approx_percentile_rank_audit, _pct_audit_oracle()),
+    (spc_individuals_chart, _SPC_SQL),
+    (abc_inventory_classes, _ABC_SQL),
+    (revenue_bridge_decomposition, _BRIDGE_SQL),
+    (minmax_skipping_audit, _minmax_oracle()),
+)

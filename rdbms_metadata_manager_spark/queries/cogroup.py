@@ -140,5 +140,4 @@ ORDER BY n.nationkey
 """
 
 
-QUERIES = {"cogroup_balance_ks": cogroup_balance_ks}
-ORACLES = {"cogroup_balance_ks": _COGROUP_KS_SQL}
+QUERIES = ((cogroup_balance_ks, _COGROUP_KS_SQL),)

@@ -1124,39 +1124,21 @@ FROM gaps WHERE gap_days IS NOT NULL
 """
 
 
-QUERIES = {
-    "user_activity_streaks": user_activity_streaks,
-    "ab_test_aa_calibration": ab_test_aa_calibration,
-    "mann_whitney_u_test": mann_whitney_u_test,
-    "ab_srm_check": ab_srm_check,
-    "repeat_purchase_intervals": repeat_purchase_intervals,
-    "user_acquisition_curve": user_acquisition_curve,
-    "user_lifetime_quartiles": user_lifetime_quartiles,
-    "weekly_revenue_wow": weekly_revenue_wow,
-    "cohort_retention": cohort_retention,
-    "event_markov_transitions": event_markov_transitions,
-    "user_event_gap_histogram": user_event_gap_histogram,
-    "funnel_time_to_convert": funnel_time_to_convert,
-    "event_path_trigrams": event_path_trigrams,
-    "rolling_7d_active_users": rolling_7d_active_users,
-    "rfm_customer_segments": rfm_customer_segments,
-    "dau_mau_stickiness": dau_mau_stickiness,
-}
-ORACLES = {
-    "user_activity_streaks": _STREAKS_SQL,
-    "ab_test_aa_calibration": _aa_oracle(),
-    "mann_whitney_u_test": _mw_oracle(),
-    "ab_srm_check": _srm_oracle(),
-    "repeat_purchase_intervals": _REPEAT_SQL,
-    "user_acquisition_curve": _ACQUISITION_SQL,
-    "user_lifetime_quartiles": _LIFETIME_SQL,
-    "weekly_revenue_wow": _WOW_SQL,
-    "cohort_retention": _COHORT_SQL,
-    "event_markov_transitions": _MARKOV_SQL,
-    "user_event_gap_histogram": _GAP_HIST_SQL,
-    "funnel_time_to_convert": _TIME_TO_CONVERT_SQL,
-    "event_path_trigrams": _PATHS_SQL,
-    "rolling_7d_active_users": _WAU_SQL,
-    "rfm_customer_segments": _RFM_SQL,
-    "dau_mau_stickiness": _STICKINESS_SQL,
-}
+QUERIES = (
+    (user_activity_streaks, _STREAKS_SQL),
+    (ab_test_aa_calibration, _aa_oracle()),
+    (mann_whitney_u_test, _mw_oracle()),
+    (ab_srm_check, _srm_oracle()),
+    (repeat_purchase_intervals, _REPEAT_SQL),
+    (user_acquisition_curve, _ACQUISITION_SQL),
+    (user_lifetime_quartiles, _LIFETIME_SQL),
+    (weekly_revenue_wow, _WOW_SQL),
+    (cohort_retention, _COHORT_SQL),
+    (event_markov_transitions, _MARKOV_SQL),
+    (user_event_gap_histogram, _GAP_HIST_SQL),
+    (funnel_time_to_convert, _TIME_TO_CONVERT_SQL),
+    (event_path_trigrams, _PATHS_SQL),
+    (rolling_7d_active_users, _WAU_SQL),
+    (rfm_customer_segments, _RFM_SQL),
+    (dau_mau_stickiness, _STICKINESS_SQL),
+)

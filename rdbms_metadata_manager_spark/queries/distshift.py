@@ -612,18 +612,10 @@ FROM top
 """
 
 
-QUERIES = {
-    "cramer_von_mises_weekend": cramer_von_mises_weekend,
-    "bhattacharyya_weekend_overlap": bhattacharyya_weekend_overlap,
-    "ljung_box_daily_events": ljung_box_daily_events,
-    "page_trend_weekly_events": page_trend_weekly_events,
-    "grubbs_outlier_daily_revenue": grubbs_outlier_daily_revenue,
-}
-
-ORACLES = {
-    "cramer_von_mises_weekend": _CVM_SQL,
-    "bhattacharyya_weekend_overlap": _BHATT_SQL,
-    "ljung_box_daily_events": _lb_oracle(),
-    "page_trend_weekly_events": _page_oracle(),
-    "grubbs_outlier_daily_revenue": _grubbs_oracle(),
-}
+QUERIES = (
+    (cramer_von_mises_weekend, _CVM_SQL),
+    (bhattacharyya_weekend_overlap, _BHATT_SQL),
+    (ljung_box_daily_events, _lb_oracle()),
+    (page_trend_weekly_events, _page_oracle()),
+    (grubbs_outlier_daily_revenue, _grubbs_oracle()),
+)

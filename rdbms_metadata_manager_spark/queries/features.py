@@ -135,11 +135,7 @@ FROM x GROUP BY bucket ORDER BY bucket
 """
 
 
-QUERIES = {
-    "feature_scale_orders": feature_scale_orders,
-    "feature_quantile_buckets": feature_quantile_buckets,
-}
-ORACLES = {
-    "feature_scale_orders": _FEATURE_SQL,
-    "feature_quantile_buckets": _QBUCKET_SQL,
-}
+QUERIES = (
+    (feature_scale_orders, _FEATURE_SQL),
+    (feature_quantile_buckets, _QBUCKET_SQL),
+)

@@ -935,27 +935,15 @@ ORDER BY event_type
 """
 
 
-QUERIES = {
-    "cusum_control_chart": cusum_control_chart,
-    "rolling_median_daily_revenue": rolling_median_daily_revenue,
-    "forecast_seasonal_naive_backtest": forecast_seasonal_naive_backtest,
-    "event_burstiness_fano": event_burstiness_fano,
-    "ewma_daily_events": ewma_daily_events,
-    "ols_trend_per_segment": ols_trend_per_segment,
-    "autocorr_daily_events": autocorr_daily_events,
-    "seasonal_decompose_daily": seasonal_decompose_daily,
-    "changepoint_daily_events": changepoint_daily_events,
-    "holt_trend_daily_events": holt_trend_daily_events,
-}
-ORACLES = {
-    "cusum_control_chart": _CUSUM_CHART_SQL,
-    "rolling_median_daily_revenue": _ROLL_MEDIAN_SQL,
-    "forecast_seasonal_naive_backtest": _FORECAST_SQL,
-    "event_burstiness_fano": _FANO_SQL,
-    "ewma_daily_events": _EWMA_SQL,
-    "ols_trend_per_segment": _OLS_SQL,
-    "autocorr_daily_events": _ACF_SQL,
-    "seasonal_decompose_daily": _SEASONAL_SQL,
-    "changepoint_daily_events": _CHANGEPOINT_SQL,
-    "holt_trend_daily_events": _HOLT_SQL,
-}
+QUERIES = (
+    (cusum_control_chart, _CUSUM_CHART_SQL),
+    (rolling_median_daily_revenue, _ROLL_MEDIAN_SQL),
+    (forecast_seasonal_naive_backtest, _FORECAST_SQL),
+    (event_burstiness_fano, _FANO_SQL),
+    (ewma_daily_events, _EWMA_SQL),
+    (ols_trend_per_segment, _OLS_SQL),
+    (autocorr_daily_events, _ACF_SQL),
+    (seasonal_decompose_daily, _SEASONAL_SQL),
+    (changepoint_daily_events, _CHANGEPOINT_SQL),
+    (holt_trend_daily_events, _HOLT_SQL),
+)

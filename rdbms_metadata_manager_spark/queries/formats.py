@@ -256,16 +256,9 @@ ORDER BY event_id
 """
 
 
-QUERIES = {
-    "formats_csv_json_roundtrip": formats_csv_json_roundtrip,
-    "formats_xml_roundtrip": formats_xml_roundtrip,
-    "formats_text_source_roundtrip": formats_text_source_roundtrip,
-    "binaryfile_source_stats": binaryfile_source_stats,
-}
-
-ORACLES = {
-    "formats_csv_json_roundtrip": _ROUNDTRIP_SQL,
-    "formats_xml_roundtrip": _XML_SQL,
-    "formats_text_source_roundtrip": _TEXT_SOURCE_SQL,
-    "binaryfile_source_stats": _BINARYFILE_SQL,
-}
+QUERIES = (
+    (formats_csv_json_roundtrip, _ROUNDTRIP_SQL),
+    (formats_xml_roundtrip, _XML_SQL),
+    (formats_text_source_roundtrip, _TEXT_SOURCE_SQL),
+    (binaryfile_source_stats, _BINARYFILE_SQL),
+)

@@ -391,15 +391,9 @@ ORDER BY paths3 DESC, event_type
 """
 
 
-QUERIES = {
-    "pagerank_trade_graph": pagerank_trade_graph,
-    "recursive_cte_trade_reach": recursive_cte_trade_reach,
-    "bipartite_hits_event_types": bipartite_hits_event_types,
-    "harmonic_centrality_trade": harmonic_centrality_trade,
-}
-ORACLES = {
-    "harmonic_centrality_trade": _HARMONIC_SQL,
-    "pagerank_trade_graph": _PAGERANK_SQL,
-    "recursive_cte_trade_reach": _REACH_SQL,
-    "bipartite_hits_event_types": _HITS_SQL,
-}
+QUERIES = (
+    (pagerank_trade_graph, _PAGERANK_SQL),
+    (recursive_cte_trade_reach, _REACH_SQL),
+    (bipartite_hits_event_types, _HITS_SQL),
+    (harmonic_centrality_trade, _HARMONIC_SQL),
+)

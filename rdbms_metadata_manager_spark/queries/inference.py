@@ -1598,34 +1598,18 @@ FROM stat
 """
 
 
-QUERIES = {
-    "kruskal_wallis_priority": kruskal_wallis_priority,
-    "gini_revenue_exact": gini_revenue_exact,
-    "wilson_ci_return_rate": wilson_ci_return_rate,
-    "cuped_adjusted_ab": cuped_adjusted_ab,
-    "theil_sen_daily_trend": theil_sen_daily_trend,
-    "mann_kendall_trend_test": mann_kendall_trend_test,
-    "capture_recapture_users": capture_recapture_users,
-    "wald_wolfowitz_runs_test": wald_wolfowitz_runs_test,
-    "spearman_daily_rho": spearman_daily_rho,
-    "kaplan_meier_repurchase": kaplan_meier_repurchase,
-    "hhi_market_concentration": hhi_market_concentration,
-    "cohort_ltv_curve": cohort_ltv_curve,
-    "dow_hour_activity_residuals": dow_hour_activity_residuals,
-}
-
-ORACLES = {
-    "kruskal_wallis_priority": _KRUSKAL_SQL,
-    "gini_revenue_exact": _GINI_SQL,
-    "wilson_ci_return_rate": _WILSON_SQL,
-    "cuped_adjusted_ab": _cuped_oracle(),
-    "theil_sen_daily_trend": _THEIL_SEN_SQL,
-    "mann_kendall_trend_test": _MANN_KENDALL_SQL,
-    "capture_recapture_users": _CAPTURE_SQL,
-    "wald_wolfowitz_runs_test": _RUNS_SQL,
-    "spearman_daily_rho": _SPEARMAN_SQL,
-    "kaplan_meier_repurchase": _KM_SQL,
-    "hhi_market_concentration": _HHI_SQL,
-    "cohort_ltv_curve": _LTV_SQL,
-    "dow_hour_activity_residuals": _DOW_HOUR_SQL,
-}
+QUERIES = (
+    (kruskal_wallis_priority, _KRUSKAL_SQL),
+    (gini_revenue_exact, _GINI_SQL),
+    (wilson_ci_return_rate, _WILSON_SQL),
+    (cuped_adjusted_ab, _cuped_oracle()),
+    (theil_sen_daily_trend, _THEIL_SEN_SQL),
+    (mann_kendall_trend_test, _MANN_KENDALL_SQL),
+    (capture_recapture_users, _CAPTURE_SQL),
+    (wald_wolfowitz_runs_test, _RUNS_SQL),
+    (spearman_daily_rho, _SPEARMAN_SQL),
+    (kaplan_meier_repurchase, _KM_SQL),
+    (hhi_market_concentration, _HHI_SQL),
+    (cohort_ltv_curve, _LTV_SQL),
+    (dow_hour_activity_residuals, _DOW_HOUR_SQL),
+)

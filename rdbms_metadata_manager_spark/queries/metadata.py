@@ -694,23 +694,13 @@ ORDER BY child_ref, parent_ref
 """
 
 
-QUERIES = {
-    "schema_issues": schema_issues,
-    "fk_inclusion_discovery": fk_inclusion_discovery,
-    "schema_issues_quirks": schema_issues_quirks,
-    "schema_issue_summary": schema_issue_summary,
-    "pyds_catalog_columns": pyds_catalog_columns,
-    "catalog_pii_risk_scan": catalog_pii_risk_scan,
-    "naming_convention_audit": naming_convention_audit,
-    "index_redundancy_audit": index_redundancy_audit,
-}
-
-ORACLES = {
-    "schema_issues": SCHEMA_ISSUES_ORACLE,
-    "fk_inclusion_discovery": _inclusion_oracle(),
-    "schema_issues_quirks": SCHEMA_ISSUES_QUIRKS_ORACLE,
-    "schema_issue_summary": _SUMMARY_ORACLE,
-    "pyds_catalog_columns": _pyds_columns_oracle(),
-    "catalog_pii_risk_scan": _pii_scan_oracle(),    "naming_convention_audit": _naming_oracle(),
-    "index_redundancy_audit": _index_redundancy_oracle(),
-}
+QUERIES = (
+    (schema_issues, SCHEMA_ISSUES_ORACLE),
+    (fk_inclusion_discovery, _inclusion_oracle()),
+    (schema_issues_quirks, SCHEMA_ISSUES_QUIRKS_ORACLE),
+    (schema_issue_summary, _SUMMARY_ORACLE),
+    (pyds_catalog_columns, _pyds_columns_oracle()),
+    (catalog_pii_risk_scan, _pii_scan_oracle()),
+    (naming_convention_audit, _naming_oracle()),
+    (index_redundancy_audit, _index_redundancy_oracle()),
+)

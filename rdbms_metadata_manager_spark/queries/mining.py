@@ -1824,41 +1824,22 @@ ORDER BY p.k
 """
 
 
-QUERIES = {
-    "skyline_customers": skyline_customers,
-    "pareto_revenue_concentration": pareto_revenue_concentration,
-    "degree_assortativity": degree_assortativity,
-    "rich_club_coefficient": rich_club_coefficient,
-    "copurchase_part_pairs": copurchase_part_pairs,
-    "copurchase_triangles": copurchase_triangles,
-    "drift_event_type_shares": drift_event_type_shares,
-    "kcore_copurchase_parts": kcore_copurchase_parts,
-    "label_propagation_communities": label_propagation_communities,
-    "association_rules_lift": association_rules_lift,
-    "bfs_levels_from_hub": bfs_levels_from_hub,
-    "diameter_double_sweep": diameter_double_sweep,
-    "link_prediction_hub_cn": link_prediction_hub_cn,
-    "local_clustering_coefficients": local_clustering_coefficients,
-    "copurchase_degree_histogram": copurchase_degree_histogram,
-    "ktruss_copurchase_edges": ktruss_copurchase_edges,
-    "scan_structural_similarity": scan_structural_similarity,
-}
-ORACLES = {
-    "skyline_customers": _SKYLINE_SQL,
-    "pareto_revenue_concentration": _PARETO_SQL,
-    "degree_assortativity": _assortativity_oracle(),
-    "rich_club_coefficient": _rich_club_oracle(),
-    "copurchase_part_pairs": _PAIRS_SQL,
-    "copurchase_triangles": _TRI_SQL,
-    "drift_event_type_shares": _DRIFT_SQL,
-    "kcore_copurchase_parts": _kcore_oracle(),
-    "label_propagation_communities": _lpa_oracle(),
-    "association_rules_lift": _RULES_SQL,
-    "bfs_levels_from_hub": _bfs_oracle(),
-    "diameter_double_sweep": _diameter_oracle(),
-    "link_prediction_hub_cn": _LINKPRED_SQL,
-    "local_clustering_coefficients": _LCC_SQL,
-    "copurchase_degree_histogram": _DEG_HIST_SQL,
-    "ktruss_copurchase_edges": _ktruss_oracle(),
-    "scan_structural_similarity": _SCAN_SQL,
-}
+QUERIES = (
+    (skyline_customers, _SKYLINE_SQL),
+    (pareto_revenue_concentration, _PARETO_SQL),
+    (degree_assortativity, _assortativity_oracle()),
+    (rich_club_coefficient, _rich_club_oracle()),
+    (copurchase_part_pairs, _PAIRS_SQL),
+    (copurchase_triangles, _TRI_SQL),
+    (drift_event_type_shares, _DRIFT_SQL),
+    (kcore_copurchase_parts, _kcore_oracle()),
+    (label_propagation_communities, _lpa_oracle()),
+    (association_rules_lift, _RULES_SQL),
+    (bfs_levels_from_hub, _bfs_oracle()),
+    (diameter_double_sweep, _diameter_oracle()),
+    (link_prediction_hub_cn, _LINKPRED_SQL),
+    (local_clustering_coefficients, _LCC_SQL),
+    (copurchase_degree_histogram, _DEG_HIST_SQL),
+    (ktruss_copurchase_edges, _ktruss_oracle()),
+    (scan_structural_similarity, _SCAN_SQL),
+)

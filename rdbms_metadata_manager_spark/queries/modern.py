@@ -837,41 +837,22 @@ ORDER BY event_type
 """
 
 
-QUERIES = {
-    "variant_event_props": variant_event_props,
-    "pipe_syntax_order_stats": pipe_syntax_order_stats,
-    "lateral_top_customers_per_nation": lateral_top_customers_per_nation,
-    "recursive_balance_replay": recursive_balance_replay,
-    "sql_udf_price_bands": sql_udf_price_bands,
-    "parameterized_top_purchasers": parameterized_top_purchasers,
-    "identifier_param_table_profile": identifier_param_table_profile,
-    "sql_scripting_threshold_report": sql_scripting_threshold_report,
-    "collation_ci_event_rollup": collation_ci_event_rollup,
-    "transpose_region_revenue": transpose_region_revenue,
-    "group_by_all_order_stats": group_by_all_order_stats,
-    "approx_topk_event_types": approx_topk_event_types,
-    "sql_tvf_top_customers_per_nation": sql_tvf_top_customers_per_nation,
-    "lateral_alias_packing_plan": lateral_alias_packing_plan,
-    "hll_sketch_partition_union": hll_sketch_partition_union,
-    "bitmap_distinct_users": bitmap_distinct_users,
-    "kmins_distinct_audit": kmins_distinct_audit,
-}
-ORACLES = {
-    "variant_event_props": _VARIANT_SQL,
-    "pipe_syntax_order_stats": _PIPE_SQL,
-    "lateral_top_customers_per_nation": _LATERAL_SQL,
-    "recursive_balance_replay": _RECURSIVE_SQL,
-    "sql_udf_price_bands": _SQL_UDF_SQL,
-    "parameterized_top_purchasers": _PARAM_SQL,
-    "identifier_param_table_profile": _IDENTIFIER_SQL,
-    "sql_scripting_threshold_report": _SCRIPTING_SQL,
-    "collation_ci_event_rollup": _COLLATION_SQL,
-    "transpose_region_revenue": _TRANSPOSE_SQL,
-    "group_by_all_order_stats": _GROUP_BY_ALL_SQL,
-    "approx_topk_event_types": _APPROX_TOPK_SQL,
-    "sql_tvf_top_customers_per_nation": _SQL_TVF_SQL,
-    "lateral_alias_packing_plan": _LATERAL_ALIAS_SQL,
-    "hll_sketch_partition_union": _HLL_SQL,
-    "bitmap_distinct_users": _BITMAP_SQL,
-    "kmins_distinct_audit": _kmins_oracle(),
-}
+QUERIES = (
+    (variant_event_props, _VARIANT_SQL),
+    (pipe_syntax_order_stats, _PIPE_SQL),
+    (lateral_top_customers_per_nation, _LATERAL_SQL),
+    (recursive_balance_replay, _RECURSIVE_SQL),
+    (sql_udf_price_bands, _SQL_UDF_SQL),
+    (parameterized_top_purchasers, _PARAM_SQL),
+    (identifier_param_table_profile, _IDENTIFIER_SQL),
+    (sql_scripting_threshold_report, _SCRIPTING_SQL),
+    (collation_ci_event_rollup, _COLLATION_SQL),
+    (transpose_region_revenue, _TRANSPOSE_SQL),
+    (group_by_all_order_stats, _GROUP_BY_ALL_SQL),
+    (approx_topk_event_types, _APPROX_TOPK_SQL),
+    (sql_tvf_top_customers_per_nation, _SQL_TVF_SQL),
+    (lateral_alias_packing_plan, _LATERAL_ALIAS_SQL),
+    (hll_sketch_partition_union, _HLL_SQL),
+    (bitmap_distinct_users, _BITMAP_SQL),
+    (kmins_distinct_audit, _kmins_oracle()),
+)

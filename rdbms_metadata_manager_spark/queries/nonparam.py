@@ -1473,32 +1473,17 @@ FROM sums
 """
 
 
-QUERIES = {
-    "friedman_daily_event_types": friedman_daily_event_types,
-    "jonckheere_terpstra_priority": jonckheere_terpstra_priority,
-    "cochran_armitage_trend": cochran_armitage_trend,
-    "durbin_watson_daily": durbin_watson_daily,
-    "welch_t_ab": welch_t_ab,
-    "mood_median_test": mood_median_test,
-    "hodges_lehmann_shift": hodges_lehmann_shift,
-    "granger_value_leads_volume": granger_value_leads_volume,
-    "kpss_level_daily": kpss_level_daily,
-    "seasonal_mann_kendall": seasonal_mann_kendall,
-    "ansari_bradley_dispersion": ansari_bradley_dispersion,
-    "partial_corr_volume_value": partial_corr_volume_value,
-}
-
-ORACLES = {
-    "friedman_daily_event_types": _FRIEDMAN_SQL,
-    "jonckheere_terpstra_priority": _jt_oracle(),
-    "cochran_armitage_trend": _CA_SQL,
-    "durbin_watson_daily": _DW_SQL,
-    "welch_t_ab": _welch_oracle(),
-    "mood_median_test": _mood_oracle(),
-    "hodges_lehmann_shift": _HL_SQL,
-    "granger_value_leads_volume": _granger_oracle(),
-    "kpss_level_daily": _KPSS_SQL,
-    "seasonal_mann_kendall": _SEASONAL_MK_SQL,
-    "ansari_bradley_dispersion": _ansari_oracle(),
-    "partial_corr_volume_value": _partial_corr_oracle(),
-}
+QUERIES = (
+    (friedman_daily_event_types, _FRIEDMAN_SQL),
+    (jonckheere_terpstra_priority, _jt_oracle()),
+    (cochran_armitage_trend, _CA_SQL),
+    (durbin_watson_daily, _DW_SQL),
+    (welch_t_ab, _welch_oracle()),
+    (mood_median_test, _mood_oracle()),
+    (hodges_lehmann_shift, _HL_SQL),
+    (granger_value_leads_volume, _granger_oracle()),
+    (kpss_level_daily, _KPSS_SQL),
+    (seasonal_mann_kendall, _SEASONAL_MK_SQL),
+    (ansari_bradley_dispersion, _ansari_oracle()),
+    (partial_corr_volume_value, _partial_corr_oracle()),
+)

@@ -1263,42 +1263,22 @@ ORDER BY m.grp
 """
 
 
-QUERIES = {
-    "grouped_trimmed_mean_two_pass": grouped_trimmed_mean_two_pass,
-    "exact_median_two_pass": exact_median_two_pass,
-    "grouped_mad_two_pass": grouped_mad_two_pass,
-    "partition_layout_advisor": partition_layout_advisor,
-    "join_strategy_advisor": join_strategy_advisor,
-    "zorder_locality_report": zorder_locality_report,
-    "hilbert_curve_locality": hilbert_curve_locality,
-    "profile_orders_columns": profile_orders_columns,
-    "crosstab_returnflag_linestatus": crosstab_returnflag_linestatus,
-    "unpivot_lineitem_measures": unpivot_lineitem_measures,
-    "resample_events_hourly": resample_events_hourly,
-    "resample_events_hourly_locf": resample_events_hourly_locf,
-    "resample_events_hourly_interp": resample_events_hourly_interp,
-    "outlier_customers_iqr": outlier_customers_iqr,
-    "histogram_order_values": histogram_order_values,
-    "anomaly_event_hours": anomaly_event_hours,
-    "observed_scan_metrics": observed_scan_metrics,
-}
-
-ORACLES = {
-    "grouped_trimmed_mean_two_pass": _TRIMMED_SQL,
-    "exact_median_two_pass": _MEDIAN_SQL,
-    "grouped_mad_two_pass": _MAD_SQL,
-    "partition_layout_advisor": _part_advisor_oracle(),
-    "join_strategy_advisor": _join_advisor_oracle(),
-    "zorder_locality_report": _zorder_oracle(),
-    "hilbert_curve_locality": _hilbert_oracle(),
-    "profile_orders_columns": _PROFILE_SQL,
-    "crosstab_returnflag_linestatus": _CROSSTAB_SQL,
-    "unpivot_lineitem_measures": _UNPIVOT_SQL,
-    "resample_events_hourly": _RESAMPLE_SQL,
-    "resample_events_hourly_locf": _RESAMPLE_LOCF_SQL,
-    "resample_events_hourly_interp": _RESAMPLE_INTERP_SQL,
-    "outlier_customers_iqr": _OUTLIER_SQL,
-    "histogram_order_values": _HISTOGRAM_SQL,
-    "anomaly_event_hours": _ANOMALY_SQL,
-    "observed_scan_metrics": _OBSERVED_SQL,
-}
+QUERIES = (
+    (grouped_trimmed_mean_two_pass, _TRIMMED_SQL),
+    (exact_median_two_pass, _MEDIAN_SQL),
+    (grouped_mad_two_pass, _MAD_SQL),
+    (partition_layout_advisor, _part_advisor_oracle()),
+    (join_strategy_advisor, _join_advisor_oracle()),
+    (zorder_locality_report, _zorder_oracle()),
+    (hilbert_curve_locality, _hilbert_oracle()),
+    (profile_orders_columns, _PROFILE_SQL),
+    (crosstab_returnflag_linestatus, _CROSSTAB_SQL),
+    (unpivot_lineitem_measures, _UNPIVOT_SQL),
+    (resample_events_hourly, _RESAMPLE_SQL),
+    (resample_events_hourly_locf, _RESAMPLE_LOCF_SQL),
+    (resample_events_hourly_interp, _RESAMPLE_INTERP_SQL),
+    (outlier_customers_iqr, _OUTLIER_SQL),
+    (histogram_order_values, _HISTOGRAM_SQL),
+    (anomaly_event_hours, _ANOMALY_SQL),
+    (observed_scan_metrics, _OBSERVED_SQL),
+)

@@ -651,19 +651,11 @@ FROM (
     return "SELECT * FROM (\n" + "\nUNION ALL\n".join(parts) + "\n) ORDER BY edge"
 
 
-QUERIES = {
-    "dq_expectations_orders": dq_expectations_orders,
-    "dq_referential_integrity": dq_referential_integrity,
-    "fk_fanout_profile": fk_fanout_profile,
-    "benford_digit_audit": benford_digit_audit,
-    "gdpr_erasure_audit": gdpr_erasure_audit,
-    "constraint_mining": constraint_mining,
-}
-ORACLES = {
-    "dq_expectations_orders": _DQ_EXPECT_SQL,
-    "dq_referential_integrity": _DQ_FK_SQL,
-    "fk_fanout_profile": _fanout_oracle(),
-    "benford_digit_audit": _BENFORD_SQL,
-    "gdpr_erasure_audit": _ERASURE_SQL,
-    "constraint_mining": _constraint_oracle(),
-}
+QUERIES = (
+    (dq_expectations_orders, _DQ_EXPECT_SQL),
+    (dq_referential_integrity, _DQ_FK_SQL),
+    (fk_fanout_profile, _fanout_oracle()),
+    (benford_digit_audit, _BENFORD_SQL),
+    (gdpr_erasure_audit, _ERASURE_SQL),
+    (constraint_mining, _constraint_oracle()),
+)

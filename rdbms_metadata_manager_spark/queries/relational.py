@@ -2,8 +2,8 @@
 
 Implements one query per SURVEY.md §2.2 category (joins, aggregation,
 grouping sets, windows, sorts/limits, set ops, string/date/math/JSON
-scalar functions). Every query here has a DuckDB oracle in ``ORACLES``
-with IDENTICAL column names and float-rounding so the driver's
+scalar functions). Every query here is paired with its DuckDB oracle in
+``QUERIES``, with IDENTICAL column names and float-rounding so the driver's
 order-insensitive value-hash matches.
 
 Scale notes (100 TB design):
@@ -264,7 +264,7 @@ ORDER BY r_name
 """
 
 
-def semi_join_customers_with_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
+def semi_join_high_discount_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT SEMI join ≡ EXISTS (TPC-H Q4 shape adapted to this
     schema: orders with at least one high-discount line)."""
     o = load(spark, sf_dir, "orders")
@@ -775,62 +775,32 @@ ORDER BY event_type
 """
 
 
-QUERIES = {
-    "q1_pricing_summary": q1_pricing_summary,
-    "agg_nation_stats": agg_nation_stats,
-    "having_big_customers": having_big_customers,
-    "q3_shipping_priority": q3_shipping_priority,
-    "q5_local_supplier_volume": q5_local_supplier_volume,
-    "revenue_by_region": revenue_by_region,
-    "semi_join_high_discount_orders": semi_join_customers_with_purchases,
-    "anti_join_customers_without_orders": anti_join_customers_without_orders,
-    "outer_join_nation_order_counts": outer_join_nation_order_counts,
-    "q18_large_volume_customers": q18_large_volume_customers,
-    "window_topn_orders_per_customer": window_topn_orders_per_customer,
-    "window_running_revenue": window_running_revenue,
-    "window_order_gaps": window_order_gaps,
-    "rollup_returnflag_status": rollup_returnflag_status,
-    "cube_priority_status": cube_priority_status,
-    "pivot_returnflag_by_status": pivot_returnflag_by_status,
-    "topk_orders": topk_orders,
-    "set_intersect_segments": set_intersect_segments,
-    "set_except_segments": set_except_segments,
-    "union_high_value_parties": union_high_value_parties,
-    "distinct_segments": distinct_segments,
-    "string_functions_parts": string_functions_parts,
-    "date_functions_orders": date_functions_orders,
-    "math_functions_lineitem": math_functions_lineitem,
-    "case_when_price_bands": case_when_price_bands,
-    "json_event_props": json_event_props,
-    "ordered_array_agg_orders": ordered_array_agg_orders,
-}
-
-ORACLES = {
-    "q1_pricing_summary": _Q1_SQL,
-    "agg_nation_stats": _AGG_NATION_SQL,
-    "having_big_customers": _HAVING_SQL,
-    "q3_shipping_priority": _Q3_SQL,
-    "q5_local_supplier_volume": _Q5_SQL,
-    "revenue_by_region": _REVENUE_REGION_SQL,
-    "semi_join_high_discount_orders": _SEMI_SQL,
-    "anti_join_customers_without_orders": _ANTI_SQL,
-    "outer_join_nation_order_counts": _OUTER_SQL,
-    "q18_large_volume_customers": _Q18_SQL,
-    "window_topn_orders_per_customer": _WINDOW_TOPN_SQL,
-    "window_running_revenue": _WINDOW_RUNNING_SQL,
-    "window_order_gaps": _WINDOW_GAPS_SQL,
-    "rollup_returnflag_status": _ROLLUP_SQL,
-    "cube_priority_status": _CUBE_SQL,
-    "pivot_returnflag_by_status": _PIVOT_SQL,
-    "topk_orders": _TOPK_SQL,
-    "set_intersect_segments": _INTERSECT_SQL,
-    "set_except_segments": _EXCEPT_SQL,
-    "union_high_value_parties": _UNION_SQL,
-    "distinct_segments": _DISTINCT_SQL,
-    "string_functions_parts": _STRING_SQL,
-    "date_functions_orders": _DATE_SQL,
-    "math_functions_lineitem": _MATH_SQL,
-    "case_when_price_bands": _CASE_SQL,
-    "json_event_props": _JSON_SQL,
-    "ordered_array_agg_orders": _ORDERED_AGG_SQL,
-}
+QUERIES = (
+    (q1_pricing_summary, _Q1_SQL),
+    (agg_nation_stats, _AGG_NATION_SQL),
+    (having_big_customers, _HAVING_SQL),
+    (q3_shipping_priority, _Q3_SQL),
+    (q5_local_supplier_volume, _Q5_SQL),
+    (revenue_by_region, _REVENUE_REGION_SQL),
+    (semi_join_high_discount_orders, _SEMI_SQL),
+    (anti_join_customers_without_orders, _ANTI_SQL),
+    (outer_join_nation_order_counts, _OUTER_SQL),
+    (q18_large_volume_customers, _Q18_SQL),
+    (window_topn_orders_per_customer, _WINDOW_TOPN_SQL),
+    (window_running_revenue, _WINDOW_RUNNING_SQL),
+    (window_order_gaps, _WINDOW_GAPS_SQL),
+    (rollup_returnflag_status, _ROLLUP_SQL),
+    (cube_priority_status, _CUBE_SQL),
+    (pivot_returnflag_by_status, _PIVOT_SQL),
+    (topk_orders, _TOPK_SQL),
+    (set_intersect_segments, _INTERSECT_SQL),
+    (set_except_segments, _EXCEPT_SQL),
+    (union_high_value_parties, _UNION_SQL),
+    (distinct_segments, _DISTINCT_SQL),
+    (string_functions_parts, _STRING_SQL),
+    (date_functions_orders, _DATE_SQL),
+    (math_functions_lineitem, _MATH_SQL),
+    (case_when_price_bands, _CASE_SQL),
+    (json_event_props, _JSON_SQL),
+    (ordered_array_agg_orders, _ORDERED_AGG_SQL),
+)

@@ -373,17 +373,10 @@ ORDER BY event_type
 """
 
 
-QUERIES = {
-    "scd2_user_state_intervals": scd2_user_state_intervals,
-    "state_dwell_time_shares": state_dwell_time_shares,
-    "scd2_state_snapshots": scd2_state_snapshots,
-    "pit_state_at_purchase": pit_state_at_purchase,
-    "snapshot_diff_orders": snapshot_diff_orders,
-}
-ORACLES = {
-    "scd2_user_state_intervals": _SCD2_SQL,
-    "state_dwell_time_shares": _DWELL_SQL,
-    "scd2_state_snapshots": _SNAPSHOT_SQL,
-    "pit_state_at_purchase": _PIT_SQL,
-    "snapshot_diff_orders": _SNAPSHOT_DIFF_SQL,
-}
+QUERIES = (
+    (scd2_user_state_intervals, _SCD2_SQL),
+    (state_dwell_time_shares, _DWELL_SQL),
+    (scd2_state_snapshots, _SNAPSHOT_SQL),
+    (pit_state_at_purchase, _PIT_SQL),
+    (snapshot_diff_orders, _SNAPSHOT_DIFF_SQL),
+)

@@ -593,19 +593,11 @@ ORDER BY nation
 """
 
 
-QUERIES = {
-    "aqp_stratified_estimate": aqp_stratified_estimate,
-    "salted_join_revenue": salted_join_revenue,
-    "heavy_hitter_users": heavy_hitter_users,
-    "countmin_heavy_hitters": countmin_heavy_hitters,
-    "selfjoin_size_estimate": selfjoin_size_estimate,
-    "bloom_filter_fpr_audit": bloom_filter_fpr_audit,
-}
-ORACLES = {
-    "aqp_stratified_estimate": _aqp_oracle(),
-    "salted_join_revenue": _SALTED_SQL,
-    "heavy_hitter_users": _HEAVY_SQL,
-    "countmin_heavy_hitters": _CMS_SQL,
-    "selfjoin_size_estimate": _F2_SQL,
-    "bloom_filter_fpr_audit": _BLOOM_SQL,
-}
+QUERIES = (
+    (aqp_stratified_estimate, _aqp_oracle()),
+    (salted_join_revenue, _SALTED_SQL),
+    (heavy_hitter_users, _HEAVY_SQL),
+    (countmin_heavy_hitters, _CMS_SQL),
+    (selfjoin_size_estimate, _F2_SQL),
+    (bloom_filter_fpr_audit, _BLOOM_SQL),
+)

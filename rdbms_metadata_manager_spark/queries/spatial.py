@@ -133,5 +133,4 @@ ORDER BY kind, n DESC, pid
 """
 
 
-QUERIES = {"spatial_neighbor_stats": spatial_neighbor_stats}
-ORACLES = {"spatial_neighbor_stats": _spatial_sql()}
+QUERIES = ((spatial_neighbor_stats, _spatial_sql()),)

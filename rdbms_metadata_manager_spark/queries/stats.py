@@ -1423,30 +1423,16 @@ FROM sums
 """
 
 
-QUERIES = {
-    "kendall_tau_daily": kendall_tau_daily,
-    "brown_forsythe_priority": brown_forsythe_priority,
-    "permutation_test_ab": permutation_test_ab,
-    "bayesian_bootstrap_revenue_ci": bayesian_bootstrap_revenue_ci,
-    "anova_f_order_priority": anova_f_order_priority,
-    "daily_cross_correlation": daily_cross_correlation,
-    "conformal_forecast_intervals": conformal_forecast_intervals,
-    "bh_fdr_nation_drift": bh_fdr_nation_drift,
-    "cramers_v_nation_segment": cramers_v_nation_segment,
-    "ab_power_mde_report": ab_power_mde_report,
-    "cmh_return_rate_strata": cmh_return_rate_strata,
-}
-
-ORACLES = {
-    "kendall_tau_daily": _KENDALL_SQL,
-    "brown_forsythe_priority": _bf_oracle(),
-    "permutation_test_ab": _PERM_SQL,
-    "bayesian_bootstrap_revenue_ci": _BOOT_SQL,
-    "anova_f_order_priority": _anova_oracle(),
-    "daily_cross_correlation": _XCORR_SQL,
-    "conformal_forecast_intervals": _CONFORMAL_SQL,
-    "bh_fdr_nation_drift": _bh_oracle(),
-    "cramers_v_nation_segment": _CRAMER_SQL,
-    "ab_power_mde_report": _power_oracle(),
-    "cmh_return_rate_strata": _CMH_SQL,
-}
+QUERIES = (
+    (kendall_tau_daily, _KENDALL_SQL),
+    (brown_forsythe_priority, _bf_oracle()),
+    (permutation_test_ab, _PERM_SQL),
+    (bayesian_bootstrap_revenue_ci, _BOOT_SQL),
+    (anova_f_order_priority, _anova_oracle()),
+    (daily_cross_correlation, _XCORR_SQL),
+    (conformal_forecast_intervals, _CONFORMAL_SQL),
+    (bh_fdr_nation_drift, _bh_oracle()),
+    (cramers_v_nation_segment, _CRAMER_SQL),
+    (ab_power_mde_report, _power_oracle()),
+    (cmh_return_rate_strata, _CMH_SQL),
+)

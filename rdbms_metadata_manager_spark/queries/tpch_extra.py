@@ -346,22 +346,12 @@ ORDER BY s.day
 """
 
 
-QUERIES = {
-    "open_orders_backlog": open_orders_backlog,
-    "q14_promo_revenue_ratio": q14_promo_revenue_ratio,
-    "q17_small_quantity_revenue": q17_small_quantity_revenue,
-    "q19_disjunctive_revenue": q19_disjunctive_revenue,
-    "q16_supplier_variety": q16_supplier_variety,
-    "funnel_click_to_purchase": funnel_click_to_purchase,
-    "approx_distinct_stats": approx_distinct_stats,
-}
-
-ORACLES = {
-    "open_orders_backlog": _BACKLOG_SQL,
-    "q14_promo_revenue_ratio": _Q14_SQL,
-    "q17_small_quantity_revenue": _Q17_SQL,
-    "q19_disjunctive_revenue": _Q19_SQL,
-    "q16_supplier_variety": _Q16_SQL,
-    "funnel_click_to_purchase": _FUNNEL_SQL,
-    "approx_distinct_stats": _APPROX_SQL,
-}
+QUERIES = (
+    (open_orders_backlog, _BACKLOG_SQL),
+    (q14_promo_revenue_ratio, _Q14_SQL),
+    (q17_small_quantity_revenue, _Q17_SQL),
+    (q19_disjunctive_revenue, _Q19_SQL),
+    (q16_supplier_variety, _Q16_SQL),
+    (funnel_click_to_purchase, _FUNNEL_SQL),
+    (approx_distinct_stats, _APPROX_SQL),
+)

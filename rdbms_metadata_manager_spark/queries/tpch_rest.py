@@ -699,36 +699,19 @@ ORDER BY cntrycode
 """
 
 
-QUERIES = {
-    "q2_min_acctbal_supplier": q2_min_acctbal_supplier,
-    "q4_priority_late_ship": q4_priority_late_ship,
-    "q6_forecast_revenue": q6_forecast_revenue,
-    "q7_volume_shipping": q7_volume_shipping,
-    "q8_market_share": q8_market_share,
-    "q9_product_type_profit": q9_product_type_profit,
-    "q10_returned_items": q10_returned_items,
-    "q11_part_value_concentration": q11_part_value_concentration,
-    "q12_shipping_delay_buckets": q12_shipping_delay_buckets,
-    "q13_customer_distribution": q13_customer_distribution,
-    "q15_top_supplier": q15_top_supplier,
-    "q20_heavy_red_suppliers": q20_heavy_red_suppliers,
-    "q21_waiting_suppliers": q21_waiting_suppliers,
-    "q22_dormant_customers": q22_dormant_customers,
-}
-
-ORACLES = {
-    "q2_min_acctbal_supplier": _Q2_SQL,
-    "q4_priority_late_ship": _Q4_SQL,
-    "q6_forecast_revenue": _Q6_SQL,
-    "q7_volume_shipping": _Q7_SQL,
-    "q8_market_share": _Q8_SQL,
-    "q9_product_type_profit": _Q9_SQL,
-    "q10_returned_items": _Q10_SQL,
-    "q11_part_value_concentration": _Q11_SQL,
-    "q12_shipping_delay_buckets": _Q12_SQL,
-    "q13_customer_distribution": _Q13_SQL,
-    "q15_top_supplier": _Q15_SQL,
-    "q20_heavy_red_suppliers": _Q20_SQL,
-    "q21_waiting_suppliers": _Q21_SQL,
-    "q22_dormant_customers": _Q22_SQL,
-}
+QUERIES = (
+    (q2_min_acctbal_supplier, _Q2_SQL),
+    (q4_priority_late_ship, _Q4_SQL),
+    (q6_forecast_revenue, _Q6_SQL),
+    (q7_volume_shipping, _Q7_SQL),
+    (q8_market_share, _Q8_SQL),
+    (q9_product_type_profit, _Q9_SQL),
+    (q10_returned_items, _Q10_SQL),
+    (q11_part_value_concentration, _Q11_SQL),
+    (q12_shipping_delay_buckets, _Q12_SQL),
+    (q13_customer_distribution, _Q13_SQL),
+    (q15_top_supplier, _Q15_SQL),
+    (q20_heavy_red_suppliers, _Q20_SQL),
+    (q21_waiting_suppliers, _Q21_SQL),
+    (q22_dormant_customers, _Q22_SQL),
+)

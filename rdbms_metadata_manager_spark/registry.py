@@ -1,11 +1,12 @@
 """Central query/oracle registry consumed by __spark_entry__.py.
 
 Every implemented operator from SURVEY.md §2 has an entry here:
-name → (spark callable, DuckDB oracle SQL). Modules register
-themselves via their QUERIES/ORACLES dicts; names must be globally
-unique. Queries whose semantics aren't SQL-expressible (streaming
-state, approximate ops) appear in QUERIES without an ORACLES entry —
-the driver then records a rows-only check.
+name → (spark callable, DuckDB oracle SQL). A module registers its
+queries by declaring ``QUERIES = ((fn, ORACLE_SQL), ...)``; the query
+is named ``fn.__name__``, and the registry finds every such module in
+the package itself. Names must be globally unique, and every query
+carries an oracle: a duplicate name or a missing oracle raises
+``ValueError``.
 
 Execution contract (ADVICE r7 #4): registered callables are normally
 LAZY — calling ``fn(spark, sf_dir)`` builds a plan and runs nothing.
@@ -22,89 +23,55 @@ see ``memo.clear_memos`` for the cache side of the same contract).
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import importlib
+import pkgutil
+from collections.abc import Callable, Iterable
+from types import ModuleType
 
 from pyspark.sql import DataFrame, SparkSession
 
 
-def _modules():
-    from .queries import (
-        advanced,
-        audit,
-        cogroup,
-        cohort,
-        distshift,
-        features,
-        forecast,
-        formats,
-        graph,
-        inference,
-        metadata,
-        mining,
-        modern,
-        nonparam,
-        profiling,
-        quality,
-        relational,
-        scd,
-        skew,
-        spatial,
-        stats,
-        tpch_extra,
-        tpch_rest,
-    )
+def _modules() -> list[ModuleType]:
+    """Every package module that declares ``QUERIES``, in package order.
 
-    mods = [relational, advanced, tpch_extra, tpch_rest, skew, metadata, modern, profiling, graph, cohort, scd, features, forecast, formats, quality, mining, spatial, cogroup, inference, audit, stats, nonparam, distshift]
-    # No try/except here: every dependency these modules use is part
-    # of the environment contract (pyarrow/pandas/numpy), and the
-    # PRIORITY window below hard-requires their query names — a
-    # swallowed ImportError would only resurface as an opaque
-    # "PRIORITY names not registered" assertion pointing at the wrong
-    # module.
-    from .llm import (
-        bpe,
-        calibration,
-        clustering,
-        curation,
-        dedup,
-        drift,
-        entity,
-        fingerprint,
-        gram,
-        hygiene,
-        ivf,
-        kmeans,
-        multimodal,
-        pii,
-        pipeline,
-        pq,
-        projection,
-        quantize,
-        ranking,
-        sampling,
-        semdedup,
-        shared_runs,
-        similarity,
-        text,
-        udfs,
-    )
-    from .sources import pyds_sink
-    from .streaming import (
-        events_batch,
-        minhash_ingest,
-        sketch_state,
-        state_inspect,
-        stream_dedup,
-    )
+    No import error is swallowed: every dependency these modules use is
+    part of the environment contract (pyarrow/pandas/numpy), and a
+    skipped module would only resurface as an opaque "PRIORITY names
+    not registered" error pointing at the wrong module.
+    """
+    import rdbms_metadata_manager_spark as pkg
 
-    mods += [
-        dedup, similarity, text, multimodal, ranking, udfs, ivf, pipeline,
-        clustering, kmeans, sampling, hygiene, pii, quantize, entity,
-        fingerprint, curation, semdedup, gram, bpe, shared_runs, projection,
-        pq, calibration, drift,
-    ]
-    mods += [events_batch, state_inspect, stream_dedup, sketch_state, minhash_ingest, pyds_sink]
+    def reraise(name: str) -> None:
+        raise ImportError(f"cannot import package {name}")
+
+    mods = []
+    for info in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + ".", onerror=reraise):
+        m = importlib.import_module(info.name)
+        if hasattr(m, "QUERIES"):
+            mods.append(m)
     return mods
+
+
+def _collect(modules: Iterable[ModuleType]) -> dict[str, tuple[Callable, str]]:
+    """name → (spark callable, oracle SQL) over each module's ``QUERIES``.
+
+    A query is named by its function; a name declared twice, or a
+    record whose oracle is not a non-empty SQL string, raises.
+    """
+    out: dict[str, tuple[Callable, str]] = {}
+    owner: dict[str, str] = {}
+    for m in modules:
+        for fn, sql in m.QUERIES:
+            name = fn.__name__
+            if not isinstance(sql, str) or not sql.strip():
+                raise ValueError(f"{m.__name__}.{name}: oracle must be a non-empty SQL string")
+            if name in out:
+                raise ValueError(
+                    f"duplicate query name {name!r} in {owner[name]} and {m.__name__}"
+                )
+            out[name] = (fn, sql)
+            owner[name] = m.__name__
+    return out
 
 
 # The external correctness driver checks at most the FIRST 50 registered
@@ -112,7 +79,7 @@ def _modules():
 # highest-value coverage: the reference-parity metadata pipeline first,
 # then every LLM-data-pipeline operator family, streaming, and one
 # exemplar per SURVEY.md §2.2 category.  Everything not listed keeps its
-# module-order position after these.
+# package-order position after these.
 PRIORITY: tuple[str, ...] = (
     # §2.1 reference parity (the entire point of the reference) —
     # pinned first every round
@@ -198,26 +165,20 @@ PRIORITY: tuple[str, ...] = (
 )
 
 
-def _ordered(names_to_vals: dict[str, object]) -> dict[str, object]:
-    """Priority names first (in PRIORITY order), then the rest in module order."""
-    out = {n: names_to_vals[n] for n in PRIORITY if n in names_to_vals}
-    out.update((n, v) for n, v in names_to_vals.items() if n not in out)
+def _registry() -> dict[str, tuple[Callable, str]]:
+    """Priority names first (in PRIORITY order), then the rest in package order."""
+    records = _collect(_modules())
+    missing = [n for n in PRIORITY if n not in records]
+    if missing:
+        raise ValueError(f"PRIORITY names not registered: {missing}")
+    out = {n: records[n] for n in PRIORITY}
+    out.update(records)
     return out
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out: dict[str, Callable] = {}
-    for m in _modules():
-        for name, fn in m.QUERIES.items():
-            assert name not in out, f"duplicate query name {name}"
-            out[name] = fn
-    missing = [n for n in PRIORITY if n not in out]
-    assert not missing, f"PRIORITY names not registered: {missing}"
-    return _ordered(out)  # type: ignore[return-value]
+    return {name: fn for name, (fn, _) in _registry().items()}
 
 
 def all_oracles() -> dict[str, str]:
-    out: dict[str, str] = {}
-    for m in _modules():
-        out.update(getattr(m, "ORACLES", {}))
-    return _ordered(out)  # type: ignore[return-value]
+    return {name: sql for name, (_, sql) in _registry().items()}

@@ -61,12 +61,25 @@ def driver_memory() -> str:
     return explicit
 
 
+def spark_cpus() -> int:
+    """Local core count: ``$SPARK_GRAFT_CPUS``, default 32. A value
+    that is not a positive integer raises, naming the variable."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    try:
+        cpus = int(raw)
+    except ValueError:
+        cpus = 0
+    if cpus < 1:
+        raise ValueError(f"SPARK_GRAFT_CPUS={raw!r} is not a positive integer core count")
+    return cpus
+
+
 def get_spark(app_name: str = "rdbms-metadata-manager-spark") -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = spark_cpus()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", cpus)
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

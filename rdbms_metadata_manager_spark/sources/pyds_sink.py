@@ -153,10 +153,6 @@ ORDER BY o_orderstatus
 """
 
 
-QUERIES = {"pyds_sink_roundtrip": pyds_sink_roundtrip}
-ORACLES = {"pyds_sink_roundtrip": _SINK_ROUNDTRIP_SQL}
-
-
 # ---------------------------------------------------------------------------
 # Streaming flavor: a DataSourceStreamWriter with per-batch commits.
 # Completes the Python DataSource matrix: batch read (catalog_fixture),
@@ -275,5 +271,7 @@ ORDER BY kind
 """
 
 
-QUERIES["pyds_stream_sink_roundtrip"] = pyds_stream_sink_roundtrip
-ORACLES["pyds_stream_sink_roundtrip"] = _STREAM_SINK_SQL
+QUERIES = (
+    (pyds_sink_roundtrip, _SINK_ROUNDTRIP_SQL),
+    (pyds_stream_sink_roundtrip, _STREAM_SINK_SQL),
+)

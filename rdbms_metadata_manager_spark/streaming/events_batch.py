@@ -513,22 +513,12 @@ ORDER BY delay_s
 """
 
 
-QUERIES = {
-    "watermark_lateness_audit": watermark_lateness_audit,
-    "events_tumbling_hourly": events_tumbling_hourly,
-    "session_pattern_abandonment": session_pattern_abandonment,
-    "events_session_stats": events_session_stats,
-    "events_sliding_10min": events_sliding_10min,
-    "session_bounce_stats": session_bounce_stats,
-    "max_concurrent_sessions": max_concurrent_sessions,
-}
-
-ORACLES = {
-    "watermark_lateness_audit": _wm_audit_sql(),
-    "events_tumbling_hourly": _TUMBLING_SQL,
-    "session_pattern_abandonment": _PATTERN_SQL,
-    "events_session_stats": _SESSION_SQL,
-    "events_sliding_10min": _SLIDING_SQL,
-    "session_bounce_stats": _BOUNCE_SQL,
-    "max_concurrent_sessions": _CONCURRENCY_SQL,
-}
+QUERIES = (
+    (watermark_lateness_audit, _wm_audit_sql()),
+    (events_tumbling_hourly, _TUMBLING_SQL),
+    (session_pattern_abandonment, _PATTERN_SQL),
+    (events_session_stats, _SESSION_SQL),
+    (events_sliding_10min, _SLIDING_SQL),
+    (session_bounce_stats, _BOUNCE_SQL),
+    (max_concurrent_sessions, _CONCURRENCY_SQL),
+)

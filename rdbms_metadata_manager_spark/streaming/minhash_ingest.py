@@ -334,5 +334,4 @@ def _render_oracle() -> str:
     )
 
 
-QUERIES = {"stream_dedup_minhash_bands": stream_dedup_minhash_bands}
-ORACLES = {"stream_dedup_minhash_bands": _render_oracle()}
+QUERIES = ((stream_dedup_minhash_bands, _render_oracle()),)

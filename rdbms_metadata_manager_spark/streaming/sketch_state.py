@@ -452,13 +452,8 @@ ORDER BY flag
 """
 
 
-QUERIES = {
-    "streaming_hll_distinct": streaming_hll_distinct,
-    "streaming_cms_heavy_hitters": streaming_cms_heavy_hitters,
-    "streaming_quantile_state": streaming_quantile_state,
-}
-ORACLES = {
-    "streaming_hll_distinct": _STREAM_HLL_SQL,
-    "streaming_cms_heavy_hitters": _stream_cms_sql(),
-    "streaming_quantile_state": _STREAM_QUANTILE_SQL,
-}
+QUERIES = (
+    (streaming_hll_distinct, _STREAM_HLL_SQL),
+    (streaming_cms_heavy_hitters, _stream_cms_sql()),
+    (streaming_quantile_state, _STREAM_QUANTILE_SQL),
+)

@@ -157,5 +157,4 @@ ORDER BY event_type
 """
 
 
-QUERIES = {"streaming_state_rollup": streaming_state_rollup}
-ORACLES = {"streaming_state_rollup": _STATE_ROLLUP_SQL}
+QUERIES = ((streaming_state_rollup, _STATE_ROLLUP_SQL),)

@@ -109,5 +109,4 @@ ORDER BY event_type
 """
 
 
-QUERIES = {"stream_dedup_exact_replay": stream_dedup_exact_replay}
-ORACLES = {"stream_dedup_exact_replay": _STREAM_DEDUP_SQL}
+QUERIES = ((stream_dedup_exact_replay, _STREAM_DEDUP_SQL),)

@@ -24,7 +24,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from rdbms_metadata_manager_spark.registry import all_queries  # noqa: E402
-from rdbms_metadata_manager_spark.session import get_spark  # noqa: E402
+from rdbms_metadata_manager_spark.session import get_spark, spark_cpus  # noqa: E402
 
 
 def materialize(df) -> None:
@@ -56,7 +56,7 @@ def main() -> None:
     sc = spark.sparkContext
     queries = all_queries()
     # Warm the worker pool like bench.py does.
-    warm = spark.range(0, 64).repartition(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    warm = spark.range(0, 64).repartition(spark_cpus())
     materialize(warm.mapInPandas(lambda it: it, "id long"))
 
     report = {}

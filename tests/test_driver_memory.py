@@ -1,4 +1,5 @@
-"""The driver heap the session asks for fits the machine it runs on."""
+"""The session's driver heap and core count fit the machine it runs on
+(and a malformed setting names its variable)."""
 
 from __future__ import annotations
 
@@ -41,3 +42,17 @@ def test_explicit_heap_passes_through_unless_larger_than_ram(meminfo, monkeypatc
 
 def test_session_uses_the_computed_heap(spark):
     assert spark.conf.get("spark.driver.memory") == session.driver_memory()
+
+
+def test_spark_cpus_default_and_explicit(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert session.spark_cpus() == 32
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "2")  # what perfbench pins
+    assert session.spark_cpus() == 2
+
+
+@pytest.mark.parametrize("bad", ["abc", "0", "-4", ""])
+def test_spark_cpus_rejects_non_positive_values_naming_the_variable(monkeypatch, bad):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", bad)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+        session.spark_cpus()

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import pytest
 
+from rdbms_metadata_manager_spark.registry import all_queries
+
 
 @pytest.fixture(scope="module")
 def empty_dir(spark, sf_dir, tmp_path_factory):
@@ -165,10 +167,9 @@ def empty_dir(spark, sf_dir, tmp_path_factory):
     ],
 )
 def test_empty_input_yields_empty_output(spark, empty_dir, mod_name, query):
-    import importlib
-
-    mod = importlib.import_module(f"rdbms_metadata_manager_spark.{mod_name}")
-    df = mod.QUERIES[query](spark, empty_dir)
+    fn = all_queries()[query]
+    assert fn.__module__ == f"rdbms_metadata_manager_spark.{mod_name}"
+    df = fn(spark, empty_dir)
     assert df.count() == 0
     assert len(df.columns) > 0  # schema survives
 
@@ -282,10 +283,9 @@ def test_time_to_convert_on_empty_corpus_is_one_zero_row(spark, empty_dir):
     ],
 )
 def test_round5_empty_input_yields_empty_output(spark, empty_dir, mod_name, query):
-    import importlib
-
-    mod = importlib.import_module(f"rdbms_metadata_manager_spark.{mod_name}")
-    df = mod.QUERIES[query](spark, empty_dir)
+    fn = all_queries()[query]
+    assert fn.__module__ == f"rdbms_metadata_manager_spark.{mod_name}"
+    df = fn(spark, empty_dir)
     assert df.count() == 0
     assert len(df.columns) > 0
 

@@ -19,12 +19,6 @@ def test_query_matches_oracle(name, spark, sf_dir):
     assert_matches_oracle(df, _ORACLES[name], sf_dir)
 
 
-@pytest.mark.parametrize("name", sorted(set(_QUERIES) - set(_ORACLES)))
-def test_rows_only_queries_run(name, spark, sf_dir):
-    df = _QUERIES[name](spark, sf_dir)
-    assert df.count() >= 0
-
-
 def test_recursive_replay_deep_ragged_sequences_match_python_fold(spark):
     """The chunked recursion (modern._CHUNK steps per level) must
     replay a 100-step sequence (multiple levels, ragged tail) and a

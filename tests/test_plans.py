@@ -1292,7 +1292,8 @@ def test_round9_ops_have_no_unpartitioned_windows(spark, sf_dir):
     from rdbms_metadata_manager_spark.llm.drift import QUERIES as DRIFT_Q
     from rdbms_metadata_manager_spark.queries.distshift import QUERIES as DS_Q
 
-    for name, fn in {**DS_Q, **DRIFT_Q}.items():
+    for fn, _ in DS_Q + DRIFT_Q:
+        name = fn.__name__
         plan = physical_plan(fn(spark, sf_dir))
         for m in re.finditer(r"windowspecdefinition\(([^)]*)\)", plan):
             head = m.group(1).split(",")[0]

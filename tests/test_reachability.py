@@ -3,7 +3,7 @@
 A static name-closure over the sources, no Spark session. The
 production roots are every package module's top-level statements
 other than imports and ``__all__`` (this covers each module's
-``QUERIES``/``ORACLES`` registration and ``__main__``'s entry point),
+``QUERIES`` registration and ``__main__``'s entry point),
 plus ``bench.py``, ``__spark_entry__.py``, the non-test
 ``perfbench/*.py`` files and ``scripts/*.py``. From the roots, every
 identifier, attribute name and identifier-like string constant (the

@@ -6,24 +6,66 @@ correctness window."""
 
 from __future__ import annotations
 
+import types
+
+import pytest
+
+from rdbms_metadata_manager_spark import registry
 from rdbms_metadata_manager_spark.registry import PRIORITY, all_oracles, all_queries
 
 
 def test_priority_names_all_registered_and_first():
     q = all_queries()
     names = list(q)
+    # the driver checks the first 50 names; PRIORITY alone must fill
+    # that window so it never depends on module discovery order
+    assert len(PRIORITY) >= 50
     assert names[: len(PRIORITY)] == list(PRIORITY)
     assert len(names) == len(set(names))
 
 
+def _stand_in(mod_name: str, *records) -> types.ModuleType:
+    m = types.ModuleType(mod_name)
+    m.QUERIES = records
+    return m
+
+
+def _query(name: str):
+    def fn(spark, sf_dir):
+        return None
+
+    fn.__name__ = name
+    return fn
+
+
+def test_duplicate_query_name_raises_naming_both_modules():
+    a = _stand_in("pkg.alpha", (_query("q_dup"), "SELECT 1 AS x"))
+    b = _stand_in(
+        "pkg.beta", (_query("q_other"), "SELECT 2 AS x"), (_query("q_dup"), "SELECT 3 AS x")
+    )
+    with pytest.raises(ValueError, match="q_dup") as err:
+        registry._collect([a, b])
+    assert "pkg.alpha" in str(err.value) and "pkg.beta" in str(err.value)
+
+
+@pytest.mark.parametrize("oracle", [None, "", "   ", 42])
+def test_query_without_sql_oracle_raises(oracle):
+    m = _stand_in("pkg.gamma", (_query("q_bad"), oracle))
+    with pytest.raises(ValueError, match="pkg.gamma.q_bad"):
+        registry._collect([m])
+
+
+def test_unregistered_priority_name_raises(monkeypatch):
+    monkeypatch.setattr(registry, "PRIORITY", PRIORITY + ("no_such_query",))
+    with pytest.raises(ValueError, match="no_such_query"):
+        all_queries()
+
+
 def test_oracles_follow_same_order_and_every_query_has_one():
     q, o = all_queries(), all_oracles()
-    assert set(o) <= set(q)
-    assert list(o)[: len(PRIORITY)] == [n for n in PRIORITY if n in o]
-    # every query is oracle-backed (approx_distinct_stats included
-    # since its exact+flags redesign); a new rows-only query is a
-    # deliberate decision — update this pin when making it
-    assert set(q) == set(o), set(q) ^ set(o)
+    # the registry rejects a query without an oracle, so the two
+    # maps cover the same names in the same order
+    assert list(q) == list(o)
 
 
 def test_window_covers_reference_parity_and_llm_families():

@@ -14,6 +14,8 @@ from fractions import Fraction
 import duckdb
 import pytest
 
+from rdbms_metadata_manager_spark.registry import all_oracles, all_queries
+
 from conftest import SF_DIR, assert_matches_oracle
 
 
@@ -55,23 +57,17 @@ _NONPARAM2 = [
 
 @pytest.mark.parametrize("name", _NONPARAM)
 def test_nonparam_matches_oracle(spark, sf_dir, name):
-    from rdbms_metadata_manager_spark.queries import nonparam as N
-
-    assert_matches_oracle(N.QUERIES[name](spark, sf_dir), N.ORACLES[name], sf_dir)
+    assert_matches_oracle(all_queries()[name](spark, sf_dir), all_oracles()[name], sf_dir)
 
 
 @pytest.mark.parametrize("name", _CALIB)
 def test_calibration_matches_oracle(spark, sf_dir, name):
-    from rdbms_metadata_manager_spark.llm import calibration as C
-
-    assert_matches_oracle(C.QUERIES[name](spark, sf_dir), C.ORACLES[name], sf_dir)
+    assert_matches_oracle(all_queries()[name](spark, sf_dir), all_oracles()[name], sf_dir)
 
 
 @pytest.mark.parametrize("name", _NONPARAM2)
 def test_nonparam2_matches_oracle(spark, sf_dir, name):
-    from rdbms_metadata_manager_spark.queries import nonparam as N
-
-    assert_matches_oracle(N.QUERIES[name](spark, sf_dir), N.ORACLES[name], sf_dir)
+    assert_matches_oracle(all_queries()[name](spark, sf_dir), all_oracles()[name], sf_dir)
 
 
 @pytest.mark.parametrize(
@@ -82,10 +78,9 @@ def test_nonparam2_matches_oracle(spark, sf_dir, name):
     ],
 )
 def test_layout_sketch_matches_oracle(spark, sf_dir, mod_path, name):
-    import importlib
-
-    mod = importlib.import_module(mod_path)
-    assert_matches_oracle(mod.QUERIES[name](spark, sf_dir), mod.ORACLES[name], sf_dir)
+    fn = all_queries()[name]
+    assert fn.__module__ == mod_path
+    assert_matches_oracle(fn(spark, sf_dir), all_oracles()[name], sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -691,21 +686,17 @@ def test_kmins_exact_recompute(spark, sf_dir):
 
 
 def test_ndcg_matches_oracle(spark, sf_dir):
-    from rdbms_metadata_manager_spark.llm import ranking as R
-
     assert_matches_oracle(
-        R.QUERIES["ndcg_at_10_eval"](spark, sf_dir),
-        R.ORACLES["ndcg_at_10_eval"],
+        all_queries()["ndcg_at_10_eval"](spark, sf_dir),
+        all_oracles()["ndcg_at_10_eval"],
         sf_dir,
     )
 
 
 def test_burrows_matches_oracle(spark, sf_dir):
-    from rdbms_metadata_manager_spark.llm import text as T
-
     assert_matches_oracle(
-        T.QUERIES["burrows_delta_sources"](spark, sf_dir),
-        T.ORACLES["burrows_delta_sources"],
+        all_queries()["burrows_delta_sources"](spark, sf_dir),
+        all_oracles()["burrows_delta_sources"],
         sf_dir,
     )
 
@@ -787,27 +778,25 @@ def test_global_agg_stats_on_empty_input(spark, tmp_path):
             .limit(0)
             .write.parquet(f"{d}/{t}.parquet")
         )
-    from rdbms_metadata_manager_spark.llm import calibration as C
-    from rdbms_metadata_manager_spark.queries import nonparam as N
-
     cases = {
-        "friedman_daily_event_types": (N, "n_days", "chi2_pm"),
-        "jonckheere_terpstra_priority": (N, "n_orders", "jt_z"),
-        "cochran_armitage_trend": (N, "n_orders", "ca_z"),
-        "durbin_watson_daily": (N, "n_days", "dw_stat"),
-        "welch_t_ab": (N, "n_ctrl", "t_stat"),
-        "mood_median_test": (N, "n_orders", "chi2_micro"),
-        "hodges_lehmann_shift": (N, "n_pairs", "hl_shift_cents"),
-        "granger_value_leads_volume": (N, "n_days_used", "f_granger"),
-        "kpss_level_daily": (N, "n_days", "kpss_micro"),
-        "seasonal_mann_kendall": (N, "n_days", "z_stat"),
-        "ansari_bradley_dispersion": (N, "n_ctrl", "ab_z"),
-        "partial_corr_volume_value": (N, "n_days", "partial_r_xy_given_day"),
-        "brier_score_decomposition": (C, "n_docs", "brier_micro"),
-        "average_precision_scorer": (C, "n_docs", "ap_micro"),
+        "friedman_daily_event_types": ("n_days", "chi2_pm"),
+        "jonckheere_terpstra_priority": ("n_orders", "jt_z"),
+        "cochran_armitage_trend": ("n_orders", "ca_z"),
+        "durbin_watson_daily": ("n_days", "dw_stat"),
+        "welch_t_ab": ("n_ctrl", "t_stat"),
+        "mood_median_test": ("n_orders", "chi2_micro"),
+        "hodges_lehmann_shift": ("n_pairs", "hl_shift_cents"),
+        "granger_value_leads_volume": ("n_days_used", "f_granger"),
+        "kpss_level_daily": ("n_days", "kpss_micro"),
+        "seasonal_mann_kendall": ("n_days", "z_stat"),
+        "ansari_bradley_dispersion": ("n_ctrl", "ab_z"),
+        "partial_corr_volume_value": ("n_days", "partial_r_xy_given_day"),
+        "brier_score_decomposition": ("n_docs", "brier_micro"),
+        "average_precision_scorer": ("n_docs", "ap_micro"),
     }
-    for name, (mod, count_col, stat_col) in cases.items():
-        rows = mod.QUERIES[name](spark, d).collect()
+    queries = all_queries()
+    for name, (count_col, stat_col) in cases.items():
+        rows = queries[name](spark, d).collect()
         assert len(rows) == 1, name
         assert (rows[0][count_col] or 0) == 0, name
         assert rows[0][stat_col] is None, name

@@ -10,6 +10,8 @@ import math
 import duckdb
 import pytest
 
+from rdbms_metadata_manager_spark.registry import all_oracles, all_queries
+
 from conftest import assert_matches_oracle
 
 
@@ -33,11 +35,7 @@ def _duck(sf_dir: str, sql: str):
     ],
 )
 def test_distshift_matches_oracle(spark, sf_dir, name):
-    from rdbms_metadata_manager_spark.queries import distshift
-
-    assert_matches_oracle(
-        distshift.QUERIES[name](spark, sf_dir), distshift.ORACLES[name], sf_dir
-    )
+    assert_matches_oracle(all_queries()[name](spark, sf_dir), all_oracles()[name], sf_dir)
 
 
 @pytest.mark.parametrize(
@@ -49,11 +47,7 @@ def test_distshift_matches_oracle(spark, sf_dir, name):
     ],
 )
 def test_drift_matches_oracle(spark, sf_dir, name):
-    from rdbms_metadata_manager_spark.llm import drift
-
-    assert_matches_oracle(
-        drift.QUERIES[name](spark, sf_dir), drift.ORACLES[name], sf_dir
-    )
+    assert_matches_oracle(all_queries()[name](spark, sf_dir), all_oracles()[name], sf_dir)
 
 
 def _orders_weekend_split(sf_dir):
