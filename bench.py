@@ -1,10 +1,13 @@
 #!/usr/bin/env python
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Benchmark harness: `python bench.py [NAME ...]` times the named
+queries (default: HEADLINE) at $SPARK_GRAFT_SF_DIR (default
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Prints ONE JSON line:
+Prints ONE JSON line (`compact_line`) and writes BENCH_FULL.json:
   {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <dir>}
+   "queries": {name: sec, ...}, "sf": <dir>, "cpus": ...,
+   "driver_memory": ..., "ledger": {name: record, ...}}  (`time_queries`)
+A query's plan: `python -m rdbms_metadata_manager_spark query NAME --explain`.
 
 Each query materializes through the `noop` write format so the full
 plan executes (a bare count() would let Catalyst prune projection
@@ -20,8 +23,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.procstat import cpu_counters, steal_fraction  # noqa: E402
 from rdbms_metadata_manager_spark.registry import all_queries  # noqa: E402
-from rdbms_metadata_manager_spark.session import get_spark, spark_cpus  # noqa: E402
+from rdbms_metadata_manager_spark.session import driver_memory, get_spark, spark_cpus  # noqa: E402
 
 # Representative headline set: one per operator family, weighted
 # toward the scan/join/shuffle-heavy shapes that dominate at scale.
@@ -262,107 +266,155 @@ def materialize(df) -> None:
     df.write.mode("overwrite").format("noop").save()
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("bench")
-    queries = all_queries()
-
-    # Warm the JVM once so timings measure the queries, not session
-    # bootstrap: parquet reader, codegen, and the broadcast-join
-    # machinery (thread pools + torrent broadcast init).
+def warm(spark, sf_dir: str) -> None:
+    """Session bootstrap, so timings measure the queries: parquet
+    reader, codegen, the broadcast-join machinery, and the Python
+    worker pool (the first mapInPandas pays ~4s for 32 workers)."""
     import pandas as pd
     from pyspark.sql import functions as F
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(100)
     tiny = spark.createDataFrame(pd.DataFrame({"k": [1], "v": ["x"]}))
     materialize(li.join(F.broadcast(tiny), li["l_linenumber"] == tiny["k"], "left"))
-    # Spawn the Python worker pool once (first mapInPandas pays ~4s
-    # for 32 workers; they're reused by every later Python-path query).
-    warm = spark.range(0, 64).repartition(spark_cpus())
-    materialize(warm.mapInPandas(lambda it: it, "id long"))
+    pool = spark.range(0, 64).repartition(spark_cpus())
+    materialize(pool.mapInPandas(lambda it: it, "id long"))
 
-    # Untimed warmup pass (BENCH_NOTES r8): every headline query runs
-    # ONCE before any timed sample. One-time costs — shared memos
-    # (triangle triples, PQ/IVF codebooks, CC labels, quality scores),
-    # Janino/JIT compilation of each query's codegen stages — all land
-    # here, so no timed sample ever carries them. The r7 driver
-    # artifact recorded 2-3x quiet-window numbers for ktruss / scan /
-    # ivfpq / gopher precisely because a first-run memo build plus a
-    # co-tenant swell can poison 3 consecutive samples, and 3 agreeing
-    # inflated samples satisfied the old convergence rule.
-    for name in HEADLINE:
-        materialize(queries[name](spark, sf_dir))
 
-    # Steady-state minimum per query: this box runs other tenants
-    # (load spikes of 4-14 observed) — sample until a run lands within
-    # 10% of the current min (converged). Post-warmup, fast queries
-    # converge at 2 samples; heavy kernels (min > 2 s) need ≥4 samples
-    # and get up to 12 looks, because under a sustained swell a PAIR
-    # of inflated samples agreeing is not convergence — the extra
-    # patience buys a quiet-window minimum.
-    timings: dict[str, float] = {}
-    for name in HEADLINE:
-        fn = queries[name]
-        samples: list[float] = []
-        for _ in range(12):
+def job_counts(sc, group: str, after: int = -1) -> tuple[int, int, int]:
+    """(jobs, stages, tasks) Spark ran under job group ``group``,
+    counting only the jobs whose id is above ``after``."""
+    st = sc.statusTracker()
+    jobs = [job for job in st.getJobIdsForGroup(group) if job > after]
+    stages = tasks = 0
+    for job in jobs:
+        info = st.getJobInfo(job)
+        for sid in info.stageIds if info else ():
+            stages += 1
+            stage = st.getStageInfo(sid)
+            tasks += stage.numTasks if stage else 0
+    return len(jobs), stages, tasks
+
+
+def time_queries(spark, sf_dir: str, names: list[str]) -> dict[str, dict]:
+    """The ledger: one record per query, every job of query X in job
+    group ``bench:X``.
+
+    First an untimed cold pass runs every query once (``cold_s``), so
+    one-time costs — shared memos, JIT/codegen — land there and no
+    timed sample carries them (BENCH_NOTES r8). All cold runs come
+    before the first timed sample: a cold run just before its own
+    samples read 1.24x slower (median min ratio over 12 queries, 3
+    alternating pairs at local[4] on sf0.1), most of it in the fast
+    queries.
+
+    Then the steady-state minimum per query: the host has other
+    tenants, so it samples until a run lands within 10% of the running
+    min; fast queries converge at 2 samples, heavy ones (min > 2 s)
+    need ≥4 and get up to 12 looks, since a PAIR of samples inflated
+    by one swell is not convergence. A sample is build plus
+    materialize; ``build_s`` is the fastest sample's build.
+    ``jobs``/``stages``/``tasks`` count the last sample; ``steal`` is
+    the host's CPU steal over the query's samples."""
+    queries = all_queries()
+    sc = spark.sparkContext
+    ledger: dict[str, dict] = {}
+    try:
+        for name in names:
+            sc.setLocalProperty("spark.jobGroup.id", f"bench:{name}")
             start = time.perf_counter()
-            materialize(fn(spark, sf_dir))
-            samples.append(time.perf_counter() - start)
-            # Converged = the newest sample is CLOSE TO but not still
-            # MATERIALLY BELOW the running min: a monotonically
-            # improving kernel keeps sampling (the r5 bench stopped at
-            # 2-3 samples mid-warmup and recorded 1.2-1.5x inflated
-            # "minimums" for 14 queries — BENCH_NOTES r6).
-            prev_min = min(samples[:-1]) if len(samples) >= 2 else None
-            converged = (
-                prev_min is not None
-                and samples[-1] <= prev_min * 1.10
-                and samples[-1] >= prev_min * 0.95
+            materialize(queries[name](spark, sf_dir))
+            ledger[name] = {"cold_s": round(time.perf_counter() - start, 3)}
+        for name in names:
+            group = f"bench:{name}"
+            sc.setLocalProperty("spark.jobGroup.id", group)
+            samples: list[float] = []
+            builds: list[float] = []
+            cpu0 = cpu_counters()
+            for _ in range(12):
+                last_job = max(sc.statusTracker().getJobIdsForGroup(group), default=-1)
+                start = time.perf_counter()
+                df = queries[name](spark, sf_dir)
+                builds.append(time.perf_counter() - start)
+                materialize(df)
+                samples.append(time.perf_counter() - start)
+                # Converged = the newest sample is CLOSE TO but not still
+                # MATERIALLY BELOW the running min: a monotonically
+                # improving kernel keeps sampling (the r5 bench stopped at
+                # 2-3 samples mid-warmup and recorded 1.2-1.5x inflated
+                # "minimums" for 14 queries — BENCH_NOTES r6).
+                prev_min = min(samples[:-1]) if len(samples) >= 2 else None
+                converged = (
+                    prev_min is not None
+                    and samples[-1] <= prev_min * 1.10
+                    and samples[-1] >= prev_min * 0.95
+                )
+                if converged and (min(samples) <= 2.0 or len(samples) >= 4):
+                    break
+                if min(samples) <= 2.0 and len(samples) >= 5:
+                    break
+            steal = steal_fraction(cpu0, cpu_counters())
+            jobs, stages, tasks = job_counts(sc, group, after=last_job)
+            ledger[name].update(
+                samples=[round(t, 3) for t in samples],
+                build_s=round(builds[samples.index(min(samples))], 3),
+                jobs=jobs,
+                stages=stages,
+                tasks=tasks,
+                steal=round(steal, 4),
             )
-            if converged and (min(samples) <= 2.0 or len(samples) >= 4):
-                break
-            if min(samples) <= 2.0 and len(samples) >= 5:
-                break
-        timings[name] = round(min(samples), 3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return ledger
 
-    total = round(sum(timings.values()), 3)
 
-    # The external driver snapshots only the LAST 2000 bytes of stdout
-    # (measured: every BENCH_r*.json has len(tail)==2000; r3's 86-query
-    # line overflowed it and `parsed` came back null). Two outputs:
-    # the full per-query JSON goes to BENCH_FULL.json next to this
-    # script, and stdout gets ONE compact line guaranteed to fit the
-    # tail buffer — summary fields plus per-query timings added
-    # slowest-first until the 1900-byte budget is reached (the slow
-    # queries are the ones a round-over-round comparison needs).
-    full = {
-        "metric": "headline_query_sec_total_steady_state_min",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "sf": sf_dir,
-    }
-    here = os.path.dirname(os.path.abspath(__file__))
-    with open(os.path.join(here, "BENCH_FULL.json"), "w") as f:
-        json.dump(full, f, indent=1, sort_keys=True)
-        f.write("\n")
-
+def compact_line(full: dict, budget: int = 1900) -> str:
+    """The stdout line: the driver keeps only the LAST 2000 bytes of
+    stdout (r3's 86-query line overflowed it and parsed as null), so
+    it carries the summary plus per-query timings, slowest first
+    (what a round-over-round comparison needs), up to ``budget``."""
+    timings = full["queries"]
     compact = {
         "metric": full["metric"],
-        "value": total,
+        "value": full["value"],
         "unit": "sec",
-        "sf": sf_dir,
+        "sf": full["sf"],
         "n_queries": len(timings),
         "queries_full": "BENCH_FULL.json",
         "queries": {},
     }
-    budget = 1900
     for name in sorted(timings, key=timings.get, reverse=True):
         compact["queries"][name] = timings[name]
         if len(json.dumps(compact, separators=(",", ":"))) > budget:
             del compact["queries"][name]
             break
-    print(json.dumps(compact, separators=(",", ":")))
+    return json.dumps(compact, separators=(",", ":"))
+
+
+def main() -> None:
+    names, known = sys.argv[1:] or HEADLINE, all_queries()
+    unknown = [name for name in names if name not in known]
+    if unknown:
+        sys.exit(f"bench.py: unknown queries: {', '.join(unknown)}")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    spark = get_spark("bench")
+    warm(spark, sf_dir)
+    ledger = time_queries(spark, sf_dir, names)
+    timings = {name: min(rec["samples"]) for name, rec in ledger.items()}
+    full = {
+        "metric": "headline_query_sec_total_steady_state_min",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "queries": timings,
+        "sf": sf_dir,
+        "cpus": spark_cpus(),
+        "driver_memory": driver_memory(),
+        "ledger": ledger,
+    }
+    here = os.path.dirname(os.path.abspath(__file__))
+    with open(os.path.join(here, "BENCH_FULL.json"), "w") as f:
+        json.dump(full, f, indent=1, sort_keys=True)
+        f.write("\n")
+    print(compact_line(full))
 
 
 if __name__ == "__main__":

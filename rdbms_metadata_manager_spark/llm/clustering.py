@@ -215,8 +215,11 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     a pair gets its component's minimum doc_id as cluster keeper.
 
     Materialized once per (session, corpus), like the pair list it
-    rides: connected_components is an ITERATIVE kernel (O(log n)
-    star-contraction rounds, several jobs), and five downstream
+    rides: connected_components is an ITERATIVE kernel (min-label
+    propagation: one round per hop of the longest shortest path in a
+    component, several jobs per round, and a RuntimeError past
+    MAX_ITERATIONS rounds; `dedup_clusters_star` is the
+    diameter-independent variant), and five downstream
     queries (keep_best, survivorship, size histogram, safe split,
     threshold composition) would otherwise re-run the whole fixpoint
     per call (r7 tide audit: the re-derivation was most of

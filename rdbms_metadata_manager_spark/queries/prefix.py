@@ -38,31 +38,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# B — the range-partition count. Scale-adaptive (r10, guide §2.2 /
-# brief: no constants tuned to one posture): defaults to the session's
-# scheduler parallelism — 8 ranges on an 8-core bench run, 32 on the
-# 32-core one, executor-count-proportional on a cluster — overridable
-# via SPARK_GRAFT_PREFIX_RANGES. Correctness is B-independent by the
-# kernel's construction (global = local + offset holds for ANY monotone
-# split; the offsets relation stays B rows), so B only shapes the plan.
-def _prefix_ranges(df: DataFrame) -> int:
-    import os
-
-    env = os.environ.get("SPARK_GRAFT_PREFIX_RANGES")
-    if env:
-        try:
-            ranges = int(env)
-        except ValueError:
-            raise ValueError(
-                f"SPARK_GRAFT_PREFIX_RANGES must be an integer, got {env!r}"
-            ) from None
-        return max(1, ranges)
-    return max(1, df.sparkSession.sparkContext.defaultParallelism)
-
-
-PREFIX_RANGES = None  # sentinel: resolve per call from the session
-
-
 def one_group(col: Column) -> Column:
     """Non-foldable constant-0 grouping key: ``pmod(hash(col), 1)`` is
     0 for every row (hash never returns NULL), so a window partitioned
@@ -83,7 +58,7 @@ def ranged_prefix(
     order_cols: list[Column],
     sum_cols: list[str] = (),
     rank_col: str | None = None,
-    buckets: int | None = PREFIX_RANGES,
+    buckets: int | None = None,
     freeze_input: bool = True,
 ) -> DataFrame:
     """``df`` plus exact global running sums (``cum_<c>`` for each of
@@ -94,6 +69,10 @@ def ranged_prefix(
     ``order_cols`` must be a TOTAL order (include a unique tiebreak):
     rows equal on all order columns could straddle a range boundary
     and receive arbitrary relative ranks.
+
+    ``buckets`` is B. It defaults to the session's scheduler
+    parallelism, so B scales with the cores or executors. The result
+    does not depend on B; B only shapes the plan.
     """
     # Pre-exchange checkpoint (freeze_input): repartitionByRange plans
     # a RANGE partitioner, and Spark sizes its boundaries with a
@@ -108,7 +87,7 @@ def ranged_prefix(
     # The post-exchange checkpoint below is unchanged — it is what
     # keeps the _pid assignment consistent across the two consumers.
     if buckets is None:
-        buckets = _prefix_ranges(df)
+        buckets = max(1, df.sparkSession.sparkContext.defaultParallelism)
     if freeze_input:
         df = df.localCheckpoint(eager=False)
     part = (

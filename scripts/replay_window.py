@@ -18,7 +18,8 @@ Usage:
     python scripts/replay_window.py [--sf-dir /root/testdata/sf0.01] [--n 50]
                                     [--only name1,name2]
 
-Exit code 0 = all green; 1 = any failure (summary on stdout).
+Exit code 0 = all green; 1 = any failure (summary on stdout); 2 = bad
+arguments, such as an unknown --only name (before any Spark session starts).
 """
 
 from __future__ import annotations
@@ -74,7 +75,10 @@ def main() -> int:
     oracles = entrymod.oracle_sql()
     names = list(qs)[: args.n]
     if args.only:
-        names = [n for n in args.only.split(",") if n in qs]
+        names = args.only.split(",")
+        unknown = [n for n in names if n not in qs]
+        if unknown:
+            ap.error(f"--only names unknown queries: {', '.join(unknown)}")
 
     spark = _pristine_session()
     failures: list[str] = []

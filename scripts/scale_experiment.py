@@ -34,6 +34,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+import bench
 from rdbms_metadata_manager_spark.queries.base import load
 from rdbms_metadata_manager_spark.session import get_spark
 
@@ -393,8 +394,7 @@ def main() -> None:
     from rdbms_metadata_manager_spark.registry import all_queries
 
     qs = all_queries()
-    # warm the pools
-    qs["text_token_stats"](spark, BASE).write.mode("overwrite").format("noop").save()
+    bench.warm(spark, BASE)
 
     dirs = {1: BASE}
     for k in ks:

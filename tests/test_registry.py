@@ -245,3 +245,28 @@ def test_replay_artifact_matches_registry():
         "replay artifact out of sync with the registry — regenerate "
         f"scripts/replay_window.py --n <N> --json-out {os.path.basename(paths[-1])}"
     )
+
+
+def test_replay_window_only_rejects_unknown_names_before_spark(monkeypatch, capsys):
+    import importlib.util
+    import os
+    import sys
+
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts", "replay_window.py"
+    )
+    spec = importlib.util.spec_from_file_location("replay_window", path)
+    replay = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(replay)
+
+    def no_session():
+        raise AssertionError("a Spark session started before the names were checked")
+
+    monkeypatch.setattr(replay, "_pristine_session", no_session)
+    monkeypatch.setattr(
+        sys, "argv", ["replay_window.py", "--only", "q1_pricing_summary,q1_pricng,nope"]
+    )
+    with pytest.raises(SystemExit) as exc:
+        replay.main()
+    assert exc.value.code == 2
+    assert capsys.readouterr().err.strip().endswith("unknown queries: q1_pricng, nope")

@@ -7,8 +7,6 @@ from __future__ import annotations
 
 import shutil
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from conftest import assert_matches_oracle
@@ -165,15 +163,6 @@ def test_ranged_prefix_matches_global_window(spark):
             ).collect()
         }
         assert got == want, f"buckets={buckets}"
-
-
-def test_non_integer_prefix_ranges_env_names_the_variable(spark, monkeypatch):
-    from rdbms_metadata_manager_spark.queries.prefix import ranged_prefix
-
-    df = spark.createDataFrame([(1, 2)], "id long, v long")
-    monkeypatch.setenv("SPARK_GRAFT_PREFIX_RANGES", "eight")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_PREFIX_RANGES.*'eight'"):
-        ranged_prefix(df, [F.col("id")], sum_cols=["v"])
 
 
 def test_code_prose_detector_discriminates_on_crafted_corpus(spark, tmp_path):

@@ -1,10 +1,10 @@
 """Round-8 second-session operators: the nonparametric/trend batch
 (queries/nonparam.py) and the forecast-calibration trio
-(llm/calibration.py) — oracle parity for all ten, plus independent
-pure-Python recomputations: brute-force Jonckheere–Terpstra over raw
-pairs, tie-corrected Friedman from scratch, numpy-free Welch/DW/CA
-algebra, exact-Fraction sequential PAVA vs the minimax formulation,
-and a literal rank-walk average precision."""
+(llm/calibration.py): independent pure-Python recomputations —
+brute-force Jonckheere–Terpstra over raw pairs, tie-corrected
+Friedman from scratch, numpy-free Welch/DW/CA algebra, exact-Fraction
+sequential PAVA vs the minimax formulation, and a literal rank-walk
+average precision. Their oracle parity is test_oracle_parity's."""
 
 from __future__ import annotations
 
@@ -26,48 +26,6 @@ def _con(sf_dir):
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     return con
-
-
-# ---------------------------------------------------------------------------
-# oracle parity (the driver's gate) for all ten
-# ---------------------------------------------------------------------------
-
-_NONPARAM = [
-    "friedman_daily_event_types",
-    "jonckheere_terpstra_priority",
-    "cochran_armitage_trend",
-    "durbin_watson_daily",
-    "welch_t_ab",
-    "mood_median_test",
-    "hodges_lehmann_shift",
-]
-_CALIB = [
-    "brier_score_decomposition",
-    "isotonic_calibration_pava",
-    "average_precision_scorer",
-]
-_NONPARAM2 = [
-    "granger_value_leads_volume",
-    "kpss_level_daily",
-    "seasonal_mann_kendall",
-    "ansari_bradley_dispersion",
-    "partial_corr_volume_value",
-]
-
-
-@pytest.mark.parametrize("name", _NONPARAM)
-def test_nonparam_matches_oracle(spark, sf_dir, name):
-    assert_matches_oracle(all_queries()[name](spark, sf_dir), all_oracles()[name], sf_dir)
-
-
-@pytest.mark.parametrize("name", _CALIB)
-def test_calibration_matches_oracle(spark, sf_dir, name):
-    assert_matches_oracle(all_queries()[name](spark, sf_dir), all_oracles()[name], sf_dir)
-
-
-@pytest.mark.parametrize("name", _NONPARAM2)
-def test_nonparam2_matches_oracle(spark, sf_dir, name):
-    assert_matches_oracle(all_queries()[name](spark, sf_dir), all_oracles()[name], sf_dir)
 
 
 @pytest.mark.parametrize(

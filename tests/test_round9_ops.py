@@ -1,7 +1,8 @@
-"""Round-9 operators: oracle parity, independent pure-Python
-recomputes (brute force, no SQL), and degenerate-input behaviour for
-the distribution-shift battery (queries/distshift.py) and the
-corpus-drift faces (llm/drift.py)."""
+"""Round-9 operators: independent pure-Python recomputes (brute
+force, no SQL) and degenerate-input behaviour for the
+distribution-shift battery (queries/distshift.py) and the
+corpus-drift faces (llm/drift.py). Their oracle parity is
+test_oracle_parity's."""
 
 from __future__ import annotations
 
@@ -9,10 +10,6 @@ import math
 
 import duckdb
 import pytest
-
-from rdbms_metadata_manager_spark.registry import all_oracles, all_queries
-
-from conftest import assert_matches_oracle
 
 
 def _duck(sf_dir: str, sql: str):
@@ -22,32 +19,6 @@ def _duck(sf_dir: str, sql: str):
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
     return con.execute(sql).fetchall()
-
-
-@pytest.mark.parametrize(
-    "name",
-    [
-        "cramer_von_mises_weekend",
-        "bhattacharyya_weekend_overlap",
-        "ljung_box_daily_events",
-        "page_trend_weekly_events",
-        "grubbs_outlier_daily_revenue",
-    ],
-)
-def test_distshift_matches_oracle(spark, sf_dir, name):
-    assert_matches_oracle(all_queries()[name](spark, sf_dir), all_oracles()[name], sf_dir)
-
-
-@pytest.mark.parametrize(
-    "name",
-    [
-        "wasserstein_source_length_drift",
-        "rbo_scorer_rankings",
-        "vocab_gini_concentration",
-    ],
-)
-def test_drift_matches_oracle(spark, sf_dir, name):
-    assert_matches_oracle(all_queries()[name](spark, sf_dir), all_oracles()[name], sf_dir)
 
 
 def _orders_weekend_split(sf_dir):

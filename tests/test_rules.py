@@ -217,6 +217,39 @@ def test_fixtures_without_arrow(spark):
         spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", prev)
 
 
+@pytest.mark.parametrize("arrow", ["false", "true"])
+def test_local_df_is_a_local_table_scan_that_keeps_doubles(spark, arrow):
+    """A local relation plans a LocalTableScan, not a Python-RDD scan,
+    also with Arrow off (the driver's session), and keeps NaN, -0.0
+    and NULL inside an ``array<double>`` as given (the centroid memo
+    rebuilds' shape)."""
+    import math
+
+    from pyspark.sql.types import StructType
+
+    prev = spark.conf.get("spark.sql.execution.arrow.pyspark.enabled", "false")
+    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", arrow)
+    try:
+        cols = fixtures._local_df(
+            spark, fixtures.ECOMMERCE_COLUMNS, fixtures.COLUMNS_META_SCHEMA
+        )
+        assert cols._jdf.queryExecution().executedPlan().nodeName() == "LocalTableScan"
+        vecs = fixtures._local_df(
+            spark,
+            [(1, [float("nan"), -0.0, None, 1.5]), (2, None)],
+            StructType.fromDDL("cid int, centroid array<double>"),
+        )
+        assert vecs._jdf.queryExecution().executedPlan().nodeName() == "LocalTableScan"
+        got = {r.cid: r.centroid for r in vecs.collect()}
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", prev)
+    nan, neg_zero, null, x = got[1]
+    assert math.isnan(nan)
+    assert neg_zero == 0.0 and math.copysign(1.0, neg_zero) == -1.0
+    assert null is None and x == 1.5
+    assert got[2] is None
+
+
 def test_empty_fk_columns_array_audits_unchanged(spark, ecommerce):
     """An FK row with no constrained columns covers nothing. Under ANSI
     mode ``constrained_columns[0]`` on it would raise
