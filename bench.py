@@ -42,6 +42,8 @@ HEADLINE = [
     "json_event_props",
     "events_session_stats",
     "dedup_exact",
+    # These two are whole-query session memos: after the cold pass each
+    # timed sample reads the memo, so `cold_s` carries the kernel's cost.
     "dedup_ngram_jaccard",
     "dedup_minhash_lsh",
     "similarity_topk_bruteforce",

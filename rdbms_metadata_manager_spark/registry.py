@@ -13,7 +13,10 @@ LAZY — calling ``fn(spark, sf_dir)`` builds a plan and runs nothing.
 A small documented set of driver-guided kernels is EAGER by design:
 constructing their DataFrame runs Spark jobs and bakes collected
 scalars into the returned plan (``theil_sen_daily_trend``'s histogram
-refinement, the k-means/PQ/BPE training memos, and anything riding a
+refinement, the k-means/PQ/BPE training memos, the audit queries
+``schema_issues``, ``schema_issues_quirks`` and ``schema_issue_summary``
+— ``rules.detect_schema_flaws`` executes the audit and returns its
+collected issues — and anything riding a
 ``localCheckpoint(eager=True)`` memo). Consequences for tooling:
 (a) plan-only inspection of those queries pays real computation, and
 (b) the returned plan snapshots the corpus at construction time — if

@@ -24,7 +24,14 @@ so the whole audit is one scan:
 
 Catalog metadata is small even for huge warehouses (10^5 tables x
 10^2 columns ~ 10^7 rows): the index and FK sides are broadcast and
-the columns side streams. Nothing shuffles but the final sort.
+the columns side streams. Nothing shuffles. The plan executes once,
+inside ``detect_schema_flaws``: its rows are collected as one Arrow
+table, sorted on the driver (the rows come to the driver anyway, so a
+cluster sort's sampling job and shuffle would do no useful work) and
+handed back as a local relation that both sinks read. The driver
+holds at most 5 issues per catalog column row — no more than the
+psql, mysql-CLI and fixture readers already hold there, and the CSV
+sink already runs in one task.
 
 Semantic traps preserved (SURVEY.md §2.3): composite-FK
 first-column-only via ``constrained_columns[0]`` behind a
@@ -173,20 +180,14 @@ def _issue_case(rule: Rule) -> str:
     )
 
 
-def detect_schema_flaws(
+def _issues_plan(
     columns_meta: DataFrame,
     indexes_meta: DataFrame,
     foreign_keys_meta: DataFrame,
-    rules: list[Rule] | None = None,
+    rules: list[Rule],
 ) -> DataFrame:
-    """Every rule's issues, canonically ordered, as one SQL statement.
-
-    Replaces the reference's driver loop + list accumulator
-    (app.py:26-107). Output order: (table, column, rule_id) — the
-    reference's order is nondeterministic reflection order
-    (SURVEY.md §2.3(6)), so we define the canonical sort here.
-    """
-    cases = ", ".join(_issue_case(r) for r in (rules or RULES))
+    """Every rule's issues, unordered, as one SQL statement."""
+    cases = ", ".join(_issue_case(r) for r in rules)
     # one statement is one analysis (about half the plan-build time of
     # a statement plus chained DataFrame calls); braces in rule text are
     # doubled so the formatter passes them through
@@ -194,8 +195,33 @@ def detect_schema_flaws(
 SELECT table_name AS `table`, column_name AS `column`,
        inline(filter(array({cases.replace("{", "{{").replace("}", "}}")}), i -> i IS NOT NULL))
 FROM ({_FLAGGED_COLUMNS})
-ORDER BY `table`, `column`, rule_id
 """
     return columns_meta.sparkSession.sql(
         sql, columns=columns_meta, indexes=indexes_meta, fks=foreign_keys_meta
     )
+
+
+def detect_schema_flaws(
+    columns_meta: DataFrame,
+    indexes_meta: DataFrame,
+    foreign_keys_meta: DataFrame,
+    rules: list[Rule] | None = None,
+) -> DataFrame:
+    """Every rule's issues, canonically ordered, as a local relation.
+
+    Replaces the reference's driver loop + list accumulator
+    (app.py:26-107): the rules plan runs here, once, and its rows come
+    back as the reference's ``issues`` list, which every reader of the
+    result (console report, CSV) then scans without running the plan
+    again. Output order: (table, column, rule_id) — the reference's
+    order is nondeterministic reflection order (SURVEY.md §2.3(6)), so
+    we define the canonical sort here. Arrow sorts strings by their
+    UTF-8 bytes, which is Spark's default (UTF8_BINARY) order, and puts
+    NULLs first as Spark's ascending ``ORDER BY`` does.
+    """
+    plan = _issues_plan(columns_meta, indexes_meta, foreign_keys_meta, rules or RULES)
+    table = plan.toArrow().sort_by(
+        [("table", "ascending"), ("column", "ascending"), ("rule_id", "ascending")],
+        null_placement="at_start",
+    )
+    return plan.sparkSession.createDataFrame(table, plan.schema)

@@ -2,7 +2,10 @@
 
 The reference pretty-prints row-by-row and writes one CSV file with
 header ``Table,Column,Issue Type,Issue,Recommendation``
-(app.py:111). Here:
+(app.py:111). Both read the same ``issues`` list, as the reference's
+sinks do (app.py:110-133): ``rules.detect_schema_flaws`` has already
+executed the audit and returns its rows as a local relation, so
+neither sink runs the rules plan again. Here:
 
 - console sink formats on the driver from a bounded ``collect()``
   (an issue report is human-scale by definition; we still cap it at

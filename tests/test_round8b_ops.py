@@ -643,22 +643,6 @@ def test_kmins_exact_recompute(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_ndcg_matches_oracle(spark, sf_dir):
-    assert_matches_oracle(
-        all_queries()["ndcg_at_10_eval"](spark, sf_dir),
-        all_oracles()["ndcg_at_10_eval"],
-        sf_dir,
-    )
-
-
-def test_burrows_matches_oracle(spark, sf_dir):
-    assert_matches_oracle(
-        all_queries()["burrows_delta_sources"](spark, sf_dir),
-        all_oracles()["burrows_delta_sources"],
-        sf_dir,
-    )
-
-
 def test_ndcg_consistent_with_retrieval_metrics(spark, sf_dir):
     """Same queries, same rank cut: the nDCG face's hits column must
     equal the metrics face's hits, and nDCG must respect its bounds —

@@ -8,10 +8,19 @@ SURVEY.md §2.3.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from rdbms_metadata_manager_spark.catalog import fixtures
+from rdbms_metadata_manager_spark.catalog.fixtures import _local_df
+from rdbms_metadata_manager_spark.catalog.schemas import (
+    COLUMNS_META_SCHEMA,
+    FOREIGN_KEYS_META_SCHEMA,
+    INDEXES_META_SCHEMA,
+)
 from rdbms_metadata_manager_spark.rules import detect_schema_flaws
+from rdbms_metadata_manager_spark.rules.engine import RULES, _issues_plan
 
 
 @pytest.fixture(scope="module")
@@ -254,8 +263,7 @@ def test_empty_fk_columns_array_audits_unchanged(spark, ecommerce):
     """An FK row with no constrained columns covers nothing. Under ANSI
     mode ``constrained_columns[0]`` on it would raise
     INVALID_ARRAY_INDEX, so the engine must guard the lookup."""
-    from rdbms_metadata_manager_spark.catalog.fixtures import ECOMMERCE_FOREIGN_KEYS, _local_df
-    from rdbms_metadata_manager_spark.catalog.schemas import FOREIGN_KEYS_META_SCHEMA
+    from rdbms_metadata_manager_spark.catalog.fixtures import ECOMMERCE_FOREIGN_KEYS
 
     cols, idx, _ = ecommerce
     fks = _local_df(
@@ -270,18 +278,73 @@ def test_empty_fk_columns_array_audits_unchanged(spark, ecommerce):
 def test_rules_plan_is_one_projection(ecommerce):
     """All rules run as one projection over the columns: no union of
     per-rule plans, and the only joins are the index and FK existence
-    probes (Rule 4's lookup is a map literal, not a joined relation)."""
-    issues = detect_schema_flaws(*ecommerce)
+    probes (Rule 4's lookup is a map literal, not a joined relation).
+    Nothing sorts or shuffles: the canonical order is applied on the
+    driver."""
+    issues = _issues_plan(*ecommerce, RULES)
     issues.collect()
     plan = issues._jdf.queryExecution().executedPlan().toString()
     assert "Union" not in plan
     joins = [line for line in plan.splitlines() if "Join" in line]
     assert joins and all("ExistenceJoin" in line for line in joins), plan
+    assert not re.search(r"\b(Sort|Exchange)\b", plan), plan
 
 
-def test_report_and_csv_run_at_most_10_jobs(spark, ecommerce, tmp_path, capsys):
-    """The CLI's two materializations of one audit (console report,
-    then CSV) stay within 10 Spark jobs on the fixture."""
+def test_issues_are_a_local_relation(ecommerce):
+    """The rules plan runs inside ``detect_schema_flaws``; what it
+    returns is the collected issues, so reading them runs no plan."""
+    issues = detect_schema_flaws(*ecommerce)
+    assert issues._jdf.queryExecution().executedPlan().nodeName() == "LocalTableScan"
+
+
+def _bare_catalog(spark, column_rows):
+    """The three catalog faces for ``column_rows``, with no index and
+    no foreign key."""
+    return (
+        _local_df(spark, column_rows, COLUMNS_META_SCHEMA),
+        _local_df(spark, [], INDEXES_META_SCHEMA),
+        _local_df(spark, [], FOREIGN_KEYS_META_SCHEMA),
+    )
+
+
+def test_driver_order_matches_spark_order_by(spark):
+    """The driver-side sort gives exactly Spark's
+    ``ORDER BY table, column, rule_id`` (UTF8_BINARY collation) over
+    names that mix case, punctuation and non-ASCII letters."""
+    names = ["Z", "a", "É", "é", "ß", "_x", "日本", "Ω", "A b"]
+    rows = []
+    for t in names:
+        # each name fires Rule 1; "price" fires Rules 3 and 5, so one
+        # (table, column) carries two rule ids
+        for i, (c, dtype, length) in enumerate(
+            [(n, "VARCHAR", 255) for n in names] + [("price", "FLOAT", None)]
+        ):
+            rows.append(("db", t, c, i + 1, dtype, length, True, None, False))
+    faces = _bare_catalog(spark, rows)
+    got = [tuple(r) for r in detect_schema_flaws(*faces).collect()]
+    want = [
+        tuple(r)
+        for r in _issues_plan(*faces, RULES).orderBy("table", "column", "rule_id").collect()
+    ]
+    assert len(got) == len(names) * (len(names) + 2)
+    assert got == want
+
+
+def test_empty_catalog_reports_no_issues(spark, capsys):
+    """No column rows: no issues, the no-issues line, and the issue
+    schema all the same."""
+    from rdbms_metadata_manager_spark.sinks import print_report
+
+    issues = detect_schema_flaws(*_bare_catalog(spark, []))
+    assert issues.columns == ["table", "column", "issue_type", "issue", "recommendation", "rule_id"]
+    assert print_report(issues, "empty_db") == 0
+    assert capsys.readouterr().out == 'No issues detected in schema "empty_db".\n'
+
+
+def test_report_and_csv_run_at_most_4_jobs(spark, ecommerce, tmp_path, capsys):
+    """The audit executes once: with ``detect_schema_flaws`` counted,
+    the console report and the CSV stay within 4 Spark jobs on the
+    fixture."""
     from rdbms_metadata_manager_spark.sinks import print_report, write_csv
 
     sc = spark.sparkContext
@@ -295,7 +358,7 @@ def test_report_and_csv_run_at_most_10_jobs(spark, ecommerce, tmp_path, capsys):
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 10
+    assert 0 < len(jobs) <= 4
     assert "Table: Users" in capsys.readouterr().out
 
 
