@@ -15,10 +15,16 @@ Everything a face needs to know lives in this module: which SQL it
 runs per dialect, the raw row schema it returns, and the
 post-processing that turns raw rows into the contract (type-name
 normalization for ``columns``, the ordered-array collapse for
-``foreign_keys``, each one SQL expression or statement). A transport
-(``jdbc_source``, ``pg_live``, ``mysql_live``) supplies only its
-wire, as a ``fetch(sql, raw_schema) -> DataFrame`` callable; the
-rules engine never sees a dialect. For PostgreSQL the three face
+``foreign_keys``, each one SQL expression or statement). The columns
+face also answers membership: each dialect's columns SQL computes
+``is_indexed`` and ``is_fk_first`` per column with two ``EXISTS``
+next to ``is_primary_key``, so the source database's own catalog
+indexes do that work and the rules read the columns face alone. The
+index and FK faces keep their contracts for every other reader.
+
+A transport (``jdbc_source``, ``pg_live``, ``mysql_live``) supplies
+only its wire, as a ``fetch(sql, raw_schema) -> DataFrame`` callable;
+the rules engine never sees a dialect. For PostgreSQL the three face
 queries also come as one face-tagged statement, ``PG_CATALOG_QUERY``,
 so a live read is one round trip (``read_tagged_catalog``).
 """
@@ -67,6 +73,9 @@ _NORMALIZED_TYPE = (
 
 # --- MySQL ----------------------------------------------------------------
 
+# The two membership flags are the same probes as the index and FK
+# face queries below: any statistics row for the column, and the
+# column at ordinal 1 of a FOREIGN KEY constraint.
 _MYSQL_COLUMNS_QUERY = """
 SELECT c.table_schema      AS `database`,
        c.table_name,
@@ -76,7 +85,20 @@ SELECT c.table_schema      AS `database`,
        c.character_maximum_length AS char_max_length,
        (c.is_nullable = 'YES')    AS is_nullable,
        NULL                       AS is_unique,
-       (c.column_key = 'PRI')     AS is_primary_key
+       (c.column_key = 'PRI')     AS is_primary_key,
+       EXISTS (SELECT 1 FROM information_schema.statistics s
+               WHERE s.table_schema = c.table_schema AND s.table_name = c.table_name
+                 AND s.column_name = c.column_name) AS is_indexed,
+       EXISTS (SELECT 1
+               FROM information_schema.key_column_usage kcu
+               JOIN information_schema.table_constraints tc
+                 ON  tc.constraint_schema = kcu.constraint_schema
+                 AND tc.table_name = kcu.table_name
+                 AND tc.constraint_name = kcu.constraint_name
+               WHERE tc.constraint_type = 'FOREIGN KEY'
+                 AND kcu.table_schema = c.table_schema AND kcu.table_name = c.table_name
+                 AND kcu.column_name = c.column_name
+                 AND kcu.ordinal_position = 1) AS is_fk_first
 FROM information_schema.columns c
 JOIN information_schema.tables t
   ON  t.table_schema = c.table_schema
@@ -124,7 +146,13 @@ WHERE tc.constraint_type = 'FOREIGN KEY'
 # columns have no indexes to see, so every large-varchar view column
 # would fire a false Rule 1). The primary-key flag is an EXISTS over
 # the table's own pg_constraint rows, so a same-named constraint on
-# another table cannot match. One intended difference: the
+# another table cannot match. The two membership flags are per-column
+# facts of the same kind, answered by the server's own catalog
+# indexes: ``is_indexed`` probes pg_index exactly as
+# ``_PG_INDEXES_QUERY`` joins it (an expression key's 0 in ``indkey``
+# covers no column; INCLUDE columns count), and ``is_fk_first`` is
+# ``conkey[1]`` of a foreign key, the first column of
+# ``_PG_FK_QUERY``'s ordered array. One intended difference: the
 # information_schema views hide columns the connected role holds no
 # privilege on, while pg_catalog shows every column, as SQLAlchemy's
 # PostgreSQL reflection (the reference's reader) also does.
@@ -149,7 +177,13 @@ SELECT current_database() AS database,
        NULL::boolean AS is_unique,
        EXISTS (SELECT 1 FROM pg_constraint k
                WHERE k.conrelid = c.oid AND k.contype = 'p' AND a.attnum = ANY (k.conkey))
-         AS is_primary_key
+         AS is_primary_key,
+       EXISTS (SELECT 1 FROM pg_index ix
+               WHERE ix.indrelid = c.oid AND a.attnum = ANY (ix.indkey))
+         AS is_indexed,
+       EXISTS (SELECT 1 FROM pg_constraint f
+               WHERE f.conrelid = c.oid AND f.contype = 'f' AND f.conkey[1] = a.attnum)
+         AS is_fk_first
 FROM pg_attribute a
 JOIN pg_class c ON c.oid = a.attrelid
 JOIN pg_type t ON t.oid = a.atttypid

@@ -15,7 +15,12 @@ its rule semantics (reference app.py:41-105):
 Rows are module-level Python tuples, NOT parquet files: the same
 tuples build the Spark DataFrames here and the DuckDB ``VALUES``
 oracle in ``queries/metadata.py::_rules_oracle_sql``, so Spark and
-oracle always see identical input.
+oracle always see identical input. The ``*_COLUMNS`` tuples hold the 9
+reflected fields; ``columns_meta`` appends the two membership flags,
+derived here from the same database's ``*_INDEXES`` and
+``*_FOREIGN_KEYS`` tuples as the reference derives them per table
+(app.py:34-35). The oracle derives membership from those tuples on
+its own, so it checks this derivation independently.
 """
 
 from __future__ import annotations
@@ -147,19 +152,36 @@ def _local_df(spark: SparkSession, rows: list[tuple], schema) -> DataFrame:
     return spark.createDataFrame(table, schema)
 
 
+def flag_membership(columns, indexes, foreign_keys) -> list[tuple]:
+    """Each 9-field column row with ``is_indexed`` and ``is_fk_first``
+    appended: whether some index row names the column (app.py:34), and
+    whether it is ``constrained_columns[0]`` of some FK (app.py:35).
+    An FK with no constrained columns covers nothing. Rows may be
+    tuples or collected Spark rows of the ``catalog.schemas`` faces."""
+    indexed = {(db, t, c) for db, t, _name, c, _unique in indexes}
+    fk_first = {(db, t, cols[0]) for db, t, _name, cols, *_ in foreign_keys if cols}
+    return [(*row, row[:3] in indexed, row[:3] in fk_first) for row in columns]
+
+
+# database -> its (columns, indexes, foreign_keys) tuples
+DATABASES = {
+    "ecommerce_db": (ECOMMERCE_COLUMNS, ECOMMERCE_INDEXES, ECOMMERCE_FOREIGN_KEYS),
+    "quirks_db": (QUIRKS_COLUMNS, QUIRKS_INDEXES, QUIRKS_FOREIGN_KEYS),
+}
+
+
+def column_rows(database: str = "ecommerce_db") -> list[tuple]:
+    """The fixture database's ``columns_meta`` rows, flags included."""
+    return flag_membership(*DATABASES[database])
+
+
 def columns_meta(spark: SparkSession, database: str = "ecommerce_db") -> DataFrame:
-    rows = {"ecommerce_db": ECOMMERCE_COLUMNS, "quirks_db": QUIRKS_COLUMNS}[database]
-    return _local_df(spark, rows, COLUMNS_META_SCHEMA)
+    return _local_df(spark, column_rows(database), COLUMNS_META_SCHEMA)
 
 
 def indexes_meta(spark: SparkSession, database: str = "ecommerce_db") -> DataFrame:
-    rows = {"ecommerce_db": ECOMMERCE_INDEXES, "quirks_db": QUIRKS_INDEXES}[database]
-    return _local_df(spark, rows, INDEXES_META_SCHEMA)
+    return _local_df(spark, DATABASES[database][1], INDEXES_META_SCHEMA)
 
 
 def foreign_keys_meta(spark: SparkSession, database: str = "ecommerce_db") -> DataFrame:
-    rows = {
-        "ecommerce_db": ECOMMERCE_FOREIGN_KEYS,
-        "quirks_db": QUIRKS_FOREIGN_KEYS,
-    }[database]
-    return _local_df(spark, rows, FOREIGN_KEYS_META_SCHEMA)
+    return _local_df(spark, DATABASES[database][2], FOREIGN_KEYS_META_SCHEMA)

@@ -9,12 +9,16 @@ Where the reference does per-column Python interpretation
 (app.py:38), each rule here is SQL text over one ``columns_meta``
 row: a predicate and two message expressions. ``detect_schema_flaws``
 composes every rule into ONE projection over the columns fact table,
-so the whole audit is one scan:
+so the whole audit is one scan with no join, no exchange and no
+broadcast:
 
-- the per-table membership sets (app.py:34-35,44,55) become two
-  boolean columns, ``is_indexed`` and ``is_fk_first``, each an
-  ``EXISTS`` that Catalyst plans as a broadcast existence join — one
-  probe per column row, no ``distinct()``, no anti join;
+- the per-table membership sets (app.py:34-35,44,55) are two boolean
+  columns of ``columns_meta`` itself, ``is_indexed`` and
+  ``is_fk_first``. Every reader delivers them: the live readers'
+  catalog SQL answers them with two ``EXISTS`` next to
+  ``is_primary_key`` (``catalog/faces.py``), and the fixtures derive
+  them from their index and FK tuples as the reference does while it
+  reflects. The rules read no other relation;
 - Rule 4's dict lookup (app.py:84) becomes a ``map(...)`` literal
   indexed in the expression itself, so there is no lookup relation;
 - the list accumulator (app.py:26,107) becomes
@@ -23,8 +27,8 @@ so the whole audit is one scan:
   no union.
 
 Catalog metadata is small even for huge warehouses (10^5 tables x
-10^2 columns ~ 10^7 rows): the index and FK sides are broadcast and
-the columns side streams. Nothing shuffles. The plan executes once,
+10^2 columns ~ 10^7 rows), and the columns side streams; no index or
+FK face is broadcast at any catalog size. The plan executes once,
 inside ``detect_schema_flaws``: its rows are collected as one Arrow
 table, sorted on the driver (the rows come to the driver anyway, so a
 cluster sort's sampling job and shuffle would do no useful work) and
@@ -34,12 +38,12 @@ psql, mysql-CLI and fixture readers already hold there, and the CSV
 sink already runs in one task.
 
 Semantic traps preserved (SURVEY.md §2.3): composite-FK
-first-column-only via ``constrained_columns[0]`` behind a
-``size(...) > 0`` guard (under ANSI mode an empty array would raise
-INVALID_ARRAY_INDEX); ``unique=None`` falsy via ``is_unique IS NOT
-TRUE``; Rule 3 substring (not word) keyword matching; Rule 2
-``startswith("id")``; lowercased name matching but reflected-case
-type-name matching.
+first-column-only in ``is_fk_first`` (PostgreSQL ``conkey[1]``, MySQL
+``ordinal_position = 1``, the fixtures' ``constrained_columns[0]``,
+where an empty list covers nothing); ``unique=None`` falsy via
+``is_unique IS NOT TRUE``; Rule 3 substring (not word) keyword
+matching; Rule 2 ``startswith("id")``; lowercased name matching but
+reflected-case type-name matching.
 """
 
 from __future__ import annotations
@@ -74,8 +78,8 @@ _EXPECTED_TYPE = (
 
 @dataclass(frozen=True)
 class Rule:
-    """One rule as SQL text over a ``columns_meta`` row, which also
-    carries ``is_indexed`` (some index covers the column) and
+    """One rule as SQL text over a ``columns_meta`` row, including its
+    membership flags ``is_indexed`` (some index covers the column) and
     ``is_fk_first`` (the column is the first constrained column of
     some FK). ``issue`` and ``recommendation`` are string expressions;
     ``issue_type`` is the literal issue type."""
@@ -156,21 +160,6 @@ RULES: list[Rule] = [
     ),
 ]
 
-# The two membership flags: app.py:34 (any index covers the column)
-# and app.py:35 (first constrained column of an FK). ``{columns}``,
-# ``{indexes}`` and ``{fks}`` are filled by ``spark.sql``'s formatter.
-_FLAGGED_COLUMNS = """
-SELECT c.*,
-       EXISTS (SELECT 1 FROM {indexes} i
-               WHERE i.database = c.database AND i.table_name = c.table_name
-                 AND i.column_name = c.column_name) AS is_indexed,
-       EXISTS (SELECT 1 FROM {fks} f
-               WHERE size(f.constrained_columns) > 0
-                 AND f.database = c.database AND f.table_name = c.table_name
-                 AND f.constrained_columns[0] = c.column_name) AS is_fk_first
-FROM {columns} c
-"""
-
 
 def _issue_case(rule: Rule) -> str:
     return (
@@ -180,13 +169,9 @@ def _issue_case(rule: Rule) -> str:
     )
 
 
-def _issues_plan(
-    columns_meta: DataFrame,
-    indexes_meta: DataFrame,
-    foreign_keys_meta: DataFrame,
-    rules: list[Rule],
-) -> DataFrame:
-    """Every rule's issues, unordered, as one SQL statement."""
+def _issues_plan(columns_meta: DataFrame, rules: list[Rule]) -> DataFrame:
+    """Every rule's issues, unordered, as one SQL statement over the
+    columns face alone."""
     cases = ", ".join(_issue_case(r) for r in rules)
     # one statement is one analysis (about half the plan-build time of
     # a statement plus chained DataFrame calls); braces in rule text are
@@ -194,11 +179,9 @@ def _issues_plan(
     sql = f"""
 SELECT table_name AS `table`, column_name AS `column`,
        inline(filter(array({cases.replace("{", "{{").replace("}", "}}")}), i -> i IS NOT NULL))
-FROM ({_FLAGGED_COLUMNS})
+FROM {{columns}}
 """
-    return columns_meta.sparkSession.sql(
-        sql, columns=columns_meta, indexes=indexes_meta, fks=foreign_keys_meta
-    )
+    return columns_meta.sparkSession.sql(sql, columns=columns_meta)
 
 
 def detect_schema_flaws(
@@ -208,6 +191,12 @@ def detect_schema_flaws(
     rules: list[Rule] | None = None,
 ) -> DataFrame:
     """Every rule's issues, canonically ordered, as a local relation.
+
+    The rules read only ``columns_meta``: its ``is_indexed`` and
+    ``is_fk_first`` columns already carry the index and FK membership
+    the reader computed. ``indexes_meta`` and ``foreign_keys_meta``
+    stay in the signature so a caller passes a reader's whole catalog
+    as it comes; they are not read.
 
     Replaces the reference's driver loop + list accumulator
     (app.py:26-107): the rules plan runs here, once, and its rows come
@@ -219,7 +208,7 @@ def detect_schema_flaws(
     UTF-8 bytes, which is Spark's default (UTF8_BINARY) order, and puts
     NULLs first as Spark's ascending ``ORDER BY`` does.
     """
-    plan = _issues_plan(columns_meta, indexes_meta, foreign_keys_meta, rules or RULES)
+    plan = _issues_plan(columns_meta, rules or RULES)
     table = plan.toArrow().sort_by(
         [("table", "ascending"), ("column", "ascending"), ("rule_id", "ascending")],
         null_placement="at_start",

@@ -44,20 +44,18 @@ from pyspark.sql.types import StructType
 from ..catalog import fixtures, schemas
 
 _FACES = {
-    "columns": ("ECOMMERCE_COLUMNS", "QUIRKS_COLUMNS", schemas.COLUMNS_META_SCHEMA),
-    "indexes": ("ECOMMERCE_INDEXES", "QUIRKS_INDEXES", schemas.INDEXES_META_SCHEMA),
-    "foreign_keys": (
-        "ECOMMERCE_FOREIGN_KEYS",
-        "QUIRKS_FOREIGN_KEYS",
-        schemas.FOREIGN_KEYS_META_SCHEMA,
-    ),
+    "columns": schemas.COLUMNS_META_SCHEMA,
+    "indexes": schemas.INDEXES_META_SCHEMA,
+    "foreign_keys": schemas.FOREIGN_KEYS_META_SCHEMA,
 }
 
 
 def _rows(face: str, dataset: str) -> Sequence[tuple]:
-    ecom_attr, quirks_attr, _ = _FACES[face]
-    attr = ecom_attr if dataset == "ecommerce" else quirks_attr
-    return getattr(fixtures, attr)
+    database = f"{dataset}_db"
+    if face == "columns":
+        return fixtures.column_rows(database)
+    _, indexes, foreign_keys = fixtures.DATABASES[database]
+    return indexes if face == "indexes" else foreign_keys
 
 
 class _TablePartition(InputPartition):
@@ -91,7 +89,7 @@ class CatalogFixtureDataSource(DataSource):
         face = self.options.get("face", "columns")
         if face not in _FACES:
             raise ValueError(f"unknown face {face!r}; one of {sorted(_FACES)}")
-        return _FACES[face][2]
+        return _FACES[face]
 
     def reader(self, schema: StructType) -> DataSourceReader:
         face = self.options.get("face", "columns")

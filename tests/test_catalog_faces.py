@@ -47,8 +47,8 @@ def _raw_rows(query: str, database: str) -> tuple[list[tuple], object]:
     whose rows arrive out of ordinal order."""
     if "char_max_length" in query:
         return [
-            (database, "users", "id", 1, "int", None, False, None, True),
-            (database, "users", "email", 2, "character varying", 255, True, None, False),
+            (database, "users", "id", 1, "int", None, False, None, True, True, False),
+            (database, "users", "email", 2, "character varying", 255, True, None, False, True, False),
         ], COLUMNS_META_SCHEMA
     if "referred_table" in query:
         return [
@@ -93,9 +93,9 @@ def test_read_catalog_jdbc_picks_dialect_sql_and_returns_contracts(
         assert [(f.name, f.dataType.simpleString()) for f in df.schema] == [
             (f.name, f.dataType.simpleString()) for f in contract
         ]
-    assert {r.column_name: r.data_type for r in cols.collect()} == {
-        "id": "INTEGER",
-        "email": "VARCHAR",
+    assert {r.column_name: (r.data_type, r.is_indexed, r.is_fk_first) for r in cols.collect()} == {
+        "id": ("INTEGER", True, False),
+        "email": ("VARCHAR", True, False),
     }
     (fk,) = fks.collect()
     assert fk.constrained_columns == ["wh_id", "bin_id"]

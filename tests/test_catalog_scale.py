@@ -55,6 +55,8 @@ def _big_columns_meta(spark):
         F.element_at(nullables, idx).alias("is_nullable"),
         F.lit(None).cast("boolean").alias("is_unique"),
         F.element_at(pks, idx).alias("is_primary_key"),
+        F.lit(False).alias("is_indexed"),
+        F.lit(False).alias("is_fk_first"),
     )
 
 

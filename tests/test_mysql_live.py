@@ -222,6 +222,16 @@ def test_live_columns_contract(live_catalog):
 
 
 @requires_server
+def test_membership_flags_match_index_and_fk_faces(live_catalog):
+    """The server-computed ``is_indexed``/``is_fk_first`` equal the
+    flags derived from the same read's index and FK faces."""
+    cols, idx, fks = live_catalog
+    got = sorted(tuple(r) for r in cols.collect())
+    assert got == sorted(fixtures.flag_membership(
+        [r[:9] for r in got], idx.collect(), fks.collect()))
+
+
+@requires_server
 def test_live_indexes_and_composite_fk(live_catalog):
     _, idx, fks = live_catalog
     idx_rows = {(r.table_name, r.index_name, r.column_name): r for r in idx.collect()}
@@ -247,7 +257,9 @@ def test_live_rules_match_duckdb_oracle(spark, live_catalog):
     from rdbms_metadata_manager_spark.rules import detect_schema_flaws
 
     cols, idx, fks = live_catalog
-    col_t = [tuple(r) for r in cols.collect()]
+    # the oracle derives membership from the index and FK faces itself,
+    # so only the 9 reflected column fields go in
+    col_t = [tuple(r)[:9] for r in cols.collect()]
     idx_t = [tuple(r) for r in idx.collect()]
     fk_t = [tuple(r) for r in fks.collect()]
     got = [tuple(r) for r in detect_schema_flaws(cols, idx, fks).drop("rule_id").collect()]
@@ -445,11 +457,12 @@ def test_mysql_dialect_quirks_from_recorded_catalog(monkeypatch, spark):
 
     recorded = {
         "columns": _xml_resultset([
-            # database, table, column, ordinal, data_type, char_max, nullable, is_unique, is_pk
-            ["shop_db", "users", "id", "1", "int", None, "0", None, "1"],
-            ["shop_db", "users", "email", "2", "varchar", "255", "1", None, "0"],
-            ["shop_db", "users", "balance", "3", "double", None, "1", None, "0"],
-            ["shop_db", "users", "joined", "4", "datetime", None, "0", None, "0"],
+            # database, table, column, ordinal, data_type, char_max, nullable, is_unique,
+            # is_pk, is_indexed, is_fk_first
+            ["shop_db", "users", "id", "1", "int", None, "0", None, "1", "1", "0"],
+            ["shop_db", "users", "email", "2", "varchar", "255", "1", None, "0", "1", "0"],
+            ["shop_db", "users", "balance", "3", "double", None, "1", None, "0", "0", "0"],
+            ["shop_db", "users", "joined", "4", "datetime", None, "0", None, "0", "1", "0"],
         ]),
         "statistics": _xml_resultset([
             # database, table, index_name, column_name, is_unique
@@ -484,6 +497,12 @@ def test_mysql_dialect_quirks_from_recorded_catalog(monkeypatch, spark):
     # NULL char_max_length survives as None, not 0 or "NULL"
     assert got["id"].char_max_length is None
     assert got["email"].char_max_length == 255
+    # membership flags arrive as '0'/'1' too, and agree with the
+    # statistics rows below (the composite index covers both columns)
+    assert {c: (r.is_indexed, r.is_fk_first) for c, r in got.items()} == {
+        "id": (True, False), "email": (True, False),
+        "balance": (False, False), "joined": (True, False),
+    }
 
     ix = {(r.index_name, r.column_name): r.is_unique for r in idx.collect()}
     assert ix[("PRIMARY", "id")] is True

@@ -134,6 +134,11 @@ CREATE TABLE part_events (
 ) PARTITION BY RANGE (id);
 CREATE INDEX ix_part_note ON part_events(note);
 CREATE TABLE part_events_p0 PARTITION OF part_events FOR VALUES FROM (0) TO (100);
+-- an expression index covers no column (its indkey entry is 0), while
+-- an INCLUDE column is covered; the columns face's membership flags
+-- and the index face must agree on both
+CREATE INDEX ix_users_lower_name ON "Users" (lower(username));
+CREATE INDEX ix_orders_id_incl ON "Orders" (order_id) INCLUDE (order_date);
 """
 
 
@@ -293,6 +298,32 @@ def test_live_columns_contract(live_catalog):
     assert rows[("Reviews", "rating")].data_type == "SMALLINT"
     assert rows[("Users", "user_id")].is_primary_key
     assert rows[("Users", "user_id")].is_unique is None
+    flags = {k: (r.is_indexed, r.is_fk_first) for k, r in rows.items()}
+    assert flags[("Orders", "user_id")] == (True, True)
+    assert flags[("orders_teste", "user_id")] == (False, False)
+    # composite FK: only constrained_columns[0] is covered
+    assert flags[("shipments", "warehouse_id")] == (True, True)
+    assert flags[("shipments", "bin_id")] == (False, False)
+    # same-named fk_dup constraints: each covers its own table's column
+    assert flags[("dup_a", "ref_id")] == flags[("dup_b", "ref_id")] == (False, True)
+    # the expression index covers nothing; the INCLUDE column is covered
+    assert flags[("Users", "username")] == (False, False)
+    assert flags[("Orders", "order_date")] == (True, False)
+    # the partitioned parent's index and its partition's own index
+    assert flags[("part_events", "note")] == flags[("part_events_p0", "note")] == (True, False)
+
+
+def test_membership_flags_match_index_and_fk_faces(live_catalog):
+    """The server-computed ``is_indexed``/``is_fk_first`` equal the
+    flags derived in Python (as reference app.py:34-35 does) from the
+    same read's index and FK faces, over the composite FK, the
+    same-named constraints, the partitioned tables, the expression and
+    INCLUDE indexes, the view and the second schema."""
+    cols, idx, fks = live_catalog
+    got = sorted(tuple(r) for r in cols.collect())
+    want = sorted(fixtures.flag_membership([r[:9] for r in got], idx.collect(), fks.collect()))
+    assert got == want
+    assert any(r[9] for r in got) and any(r[10] for r in got)
 
 
 def test_live_indexes_and_composite_fk(live_catalog):
@@ -340,7 +371,9 @@ def test_live_rules_match_duckdb_oracle(spark, live_catalog):
     import duckdb
 
     cols, idx, fks = live_catalog
-    col_t = [tuple(r) for r in cols.collect()]
+    # the oracle derives membership from the index and FK faces itself,
+    # so only the 9 reflected column fields go in
+    col_t = [tuple(r)[:9] for r in cols.collect()]
     idx_t = [tuple(r) for r in idx.collect()]
     fk_t = [tuple(r) for r in fks.collect()]
 
@@ -404,14 +437,15 @@ def test_cli_main_runs_against_live_postgres(spark, pg_host, capsys, monkeypatch
 @pytest.mark.parametrize("database", ["ecommerce_db", "parity_db"])
 def test_columns_face_matches_information_schema(pg_host, database):
     """The pg_catalog columns face returns exactly the rows the
-    information_schema SQL returned, text for text."""
+    information_schema SQL returned, text for text, in the 9 reflected
+    fields (information_schema has no membership flags)."""
     from rdbms_metadata_manager_spark.catalog.faces import _PG_COLUMNS_QUERY
 
     if database == "parity_db":
         _psql(pg_host, "postgres", "DROP DATABASE IF EXISTS parity_db")
         _psql(pg_host, "postgres", "CREATE DATABASE parity_db")
         _psql(pg_host, "parity_db", PARITY_DDL)
-    got = sorted(pg_live.run_sql(_PG_COLUMNS_QUERY, database, pg_host))
+    got = sorted(r[:9] for r in pg_live.run_sql(_PG_COLUMNS_QUERY, database, pg_host))
     want = sorted(pg_live.run_sql(INFORMATION_SCHEMA_COLUMNS, database, pg_host))
     assert got == want
     if database == "parity_db":
@@ -456,3 +490,25 @@ def test_cli_reports_empty_schema_and_exports_nothing(spark, pg_host, capsys, mo
     assert 'No issues detected in schema "empty_db".' in out
     assert "Results exported" not in out
     assert not (tmp_path / "exports").exists()
+
+
+def test_live_audit_runs_at_most_2_jobs(spark, pg_host, tmp_path, capsys):
+    """On the live path the audit is one projection with no join too:
+    reading the catalog, the audit, the console report and the CSV stay
+    within 2 Spark jobs (the rules collect and the CSV write)."""
+    from rdbms_metadata_manager_spark.sinks import print_report, write_csv
+
+    sc = spark.sparkContext
+    group = "test-live-audit-jobs"
+    sc.setJobGroup(group, "read_catalog_live + audit + print_report + write_csv")
+    try:
+        cols, idx, fks = pg_live.read_catalog_live(spark, "ecommerce_db", pg_host)
+        issues = detect_schema_flaws(cols, idx, fks)
+        assert print_report(issues, "ecommerce_db") == 21
+        write_csv(issues, str(tmp_path / "issues.csv"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 2
+    assert "Table: Users" in capsys.readouterr().out

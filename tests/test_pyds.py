@@ -23,7 +23,7 @@ def test_pyds_one_partition_per_table(spark):
     assert {p.table_name for p in parts} == tables
     # the union of per-partition reads is exactly the fixture
     rows = [r for p in parts for r in reader.read(p)]
-    assert sorted(rows) == sorted(tuple(r) for r in fixtures.ECOMMERCE_COLUMNS)
+    assert sorted(rows) == sorted(fixtures.column_rows("ecommerce_db"))
 
 
 def test_pyds_foreign_keys_face_carries_arrays(spark):

@@ -50,6 +50,8 @@ _COLUMN_ROW = st.tuples(
     st.booleans(),
     st.one_of(st.none(), st.booleans()),
     st.booleans(),
+    st.booleans(),  # is_indexed
+    st.booleans(),  # is_fk_first
 )
 
 
@@ -85,15 +87,15 @@ def test_rule_invariants(run_rules, columns):
     by_key = {(r[1], r[2]): r for r in rows}
     for issue in issues:
         src = by_key[(issue["table"], issue["column"])]
-        _, _, name, _, dtype, length, nullable, unique, pk = src
+        _, _, name, _, dtype, length, nullable, unique, pk, indexed, fk_first = src
         rid = issue["rule_id"]
         if rid == 1:
             assert dtype in ("VARCHAR", "TEXT") and length and length >= 255
-            assert unique is not True
+            assert unique is not True and not indexed
         elif rid == 2:
             low = name.lower()
             assert low.endswith("id") or low.startswith("id")
-            assert not pk
+            assert not pk and not indexed and not fk_first
         elif rid == 3:
             assert any(k in name.lower() for k in MONETARY_KEYWORDS)
             assert dtype not in ("DECIMAL", "NUMERIC")
@@ -107,9 +109,26 @@ def test_rule_invariants(run_rules, columns):
 @given(st.lists(_COLUMN_ROW, min_size=1, max_size=25))
 def test_no_missed_rule5(run_rules, columns):
     """Completeness (not just soundness): every nullable critical
-    column MUST produce a Rule-5 issue when no indexes/FKs exist."""
+    column MUST produce a Rule-5 issue, whatever its membership
+    flags."""
     rows, issues = run_rules(columns)
     fired = {(i["table"], i["column"]) for i in issues if i["rule_id"] == 5}
     for r in rows:
         if r[2].lower() in NON_NULLABLE_COLUMNS and r[6]:
             assert (r[1], r[2]) in fired
+
+
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+@given(st.lists(_COLUMN_ROW, min_size=1, max_size=25))
+def test_membership_flags_gate_rules_1_and_2(run_rules, columns):
+    """Completeness for the two membership rules: a column fires Rule 1
+    or Rule 2 exactly when the rule's predicate holds under the
+    column's drawn ``is_indexed`` and ``is_fk_first``."""
+    rows, issues = run_rules(columns)
+    fired = {(i["table"], i["column"], i["rule_id"]) for i in issues}
+    for _, table, name, _, dtype, length, _, unique, pk, indexed, fk_first in rows:
+        low = name.lower()
+        r1 = dtype in ("VARCHAR", "TEXT") and (length or 0) >= 255 and unique is not True
+        r2 = (low.endswith("id") or low.startswith("id")) and not pk and not fk_first
+        assert ((table, name, 1) in fired) == (r1 and not indexed)
+        assert ((table, name, 2) in fired) == (r2 and not indexed)
