@@ -35,7 +35,7 @@ cluster sort's sampling job and shuffle would do no useful work) and
 handed back as a local relation that both sinks read. The driver
 holds at most 5 issues per catalog column row — no more than the
 psql, mysql-CLI and fixture readers already hold there, and the CSV
-sink already runs in one task.
+sink renders its file there too.
 
 Semantic traps preserved (SURVEY.md §2.3): composite-FK
 first-column-only in ``is_fk_first`` (PostgreSQL ``conkey[1]``, MySQL

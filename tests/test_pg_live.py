@@ -495,7 +495,8 @@ def test_cli_reports_empty_schema_and_exports_nothing(spark, pg_host, capsys, mo
 def test_live_audit_runs_at_most_2_jobs(spark, pg_host, tmp_path, capsys):
     """On the live path the audit is one projection with no join too:
     reading the catalog, the audit, the console report and the CSV stay
-    within 2 Spark jobs (the rules collect and the CSV write)."""
+    within 2 Spark jobs: the rules collect and the CSV sink's Arrow
+    fetch of the issues (the sink runs no write job)."""
     from rdbms_metadata_manager_spark.sinks import print_report, write_csv
 
     sc = spark.sparkContext

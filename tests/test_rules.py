@@ -359,8 +359,9 @@ def test_empty_catalog_reports_no_issues(spark, capsys):
 def test_report_and_csv_run_at_most_2_jobs(spark, ecommerce, tmp_path, capsys):
     """The audit executes once, with no join: with
     ``detect_schema_flaws`` counted, the console report and the CSV
-    stay within 2 Spark jobs on the fixture (the rules collect and the
-    CSV write)."""
+    stay within 2 Spark jobs on the fixture: the rules collect and the
+    CSV sink's Arrow fetch of the issues (the sink runs no write
+    job)."""
     from rdbms_metadata_manager_spark.sinks import print_report, write_csv
 
     sc = spark.sparkContext
