@@ -7,9 +7,10 @@ Env contract (identical to the reference README:18-31):
                  catalog source. The special scheme ``fixture://<name>``
                  runs offline on the built-in metadata fixtures
                  (ecommerce_db / quirks_db); ``psql://`` connects to a
-                 live PostgreSQL through the psql transport
-                 (catalog.pg_live) — integration-tested against a real
-                 server in tests/test_pg_live.py; ``mysql://`` and
+                 live PostgreSQL through libpq, loaded in-process
+                 (catalog.pg_live; the scheme keeps its name, no psql
+                 process is started) — integration-tested against a
+                 real server in tests/test_pg_live.py; ``mysql://`` and
                  ``mysql+pymysql://`` use the mysql-CLI transport
                  (catalog.mysql_live).
   EXPORT_TO_CSV  "YES" → also write exports/<db>_schema_issues.csv
@@ -108,10 +109,10 @@ def main() -> int:
             spark, database_name, socket=sock, host=u.hostname, user=user, password=password
         )
     elif db_url.startswith("psql://"):
-        # live PostgreSQL over the psql transport (no JDBC jar in this
-        # environment):
+        # live PostgreSQL through libpq in-process (no JDBC jar in this
+        # environment; the scheme is still called psql://):
         # psql://[user[:password]@]host[:port]/<db> or psql:///<db>?host=<socket-dir>.
-        # With no port, psql's own default (PGPORT, else 5432) applies.
+        # With no port, libpq's own default (PGPORT, else 5432) applies.
         from .catalog import pg_live
 
         u = urlparse(db_url)

@@ -3,7 +3,7 @@
 The three catalog faces (SQL, raw schemas, post-processing) live in
 ``catalog.faces``; this module supplies only the wire,
 ``spark.read.format("jdbc")``. The face SQL is integration-tested
-against a real PostgreSQL server through the psql transport in
+against a real PostgreSQL server through the libpq transport in
 ``catalog.pg_live`` (tests/test_pg_live.py); only the JDBC wire
 itself lacks a driver jar here.
 """

@@ -1,18 +1,23 @@
-"""Live-PostgreSQL catalog transport over a ``psql`` subprocess.
+"""Live-PostgreSQL catalog transport over libpq, loaded in-process.
 
 Integration face for the reference's primary mode — a live database
-connection (reference app.py:123-125, README.md:43-50). The catalog
-SQL and its post-processing are ``catalog.faces``'s, shared with the
-JDBC and MySQL transports; this module supplies only the wire. This
-container has PostgreSQL server binaries but no JDBC driver jar or
-Python DB-API client, so rows travel as ``COPY (…) TO STDOUT (FORMAT
-text)`` through ``psql`` (tab-delimited, backslash-escaped,
-unambiguous ``\\N`` NULL).
+connection (reference app.py:123-125, README.md:43-50), which the
+reference reads in-process through a libpq binding (SQLAlchemy over
+psycopg2). The catalog SQL and its post-processing are
+``catalog.faces``'s, shared with the JDBC and MySQL transports; this
+module supplies only the wire. There is no PostgreSQL JDBC driver jar
+or Python DB-API client here, but libpq — the client library ``psql``
+itself links — is, so ``run_sql`` calls it through ``ctypes``: one
+connection per call, rows as ``COPY (…) TO STDOUT (FORMAT text)``
+(tab-delimited, backslash-escaped, unambiguous ``\\N`` NULL). libpq
+also supplies the connection defaults (``PGPORT``, ``.pgpass``, TLS and
+every auth method), the same as ``psql``.
 
-``read_catalog_live`` reads all three faces through one ``psql``
-process: a ``psql`` call costs tens of milliseconds before the server
-does any work, more than reading a whole catalog's rows, so one
-face-tagged statement (``faces.PG_CATALOG_QUERY``) replaces three.
+No child process is started: launching ``psql`` cost more than
+connecting and reading a whole catalog's rows, and libpq's connect
+costs a few milliseconds, so a connection is not kept across calls.
+``read_catalog_live`` reads all three faces in one statement
+(``faces.PG_CATALOG_QUERY``, face-tagged), one connection per audit.
 
 Scale note: a catalog is small even for a huge warehouse (10^5 tables
 × 10^2 columns ≈ 10^7 rows ≈ 1 GB of text), so a single driver-side
@@ -25,8 +30,8 @@ transport-agnostic.
 
 from __future__ import annotations
 
-import os
-import subprocess
+import ctypes
+import functools
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -59,6 +64,62 @@ def _unescape(v: str) -> str:
     return "".join(out)
 
 
+# libpq's stable soname, the library psql links
+_LIBPQ = "libpq.so.5"
+_CONNECTION_OK = 0  # ConnStatusType
+_PGRES_COMMAND_OK, _PGRES_COPY_OUT = 1, 3  # ExecStatusType
+
+
+@functools.cache
+def _libpq() -> ctypes.CDLL:
+    """libpq with the signatures ``run_sql`` calls; loaded on first use."""
+    lib = ctypes.CDLL(_LIBPQ)
+    ptr, text = ctypes.c_void_p, ctypes.c_char_p
+    for name, restype, argtypes in [
+        ("PQconnectdbParams", ptr, [ctypes.POINTER(text), ctypes.POINTER(text), ctypes.c_int]),
+        ("PQstatus", ctypes.c_int, [ptr]),
+        ("PQerrorMessage", text, [ptr]),
+        ("PQfinish", None, [ptr]),
+        ("PQexec", ptr, [ptr, text]),
+        ("PQresultStatus", ctypes.c_int, [ptr]),
+        ("PQclear", None, [ptr]),
+        ("PQgetCopyData", ctypes.c_int, [ptr, ctypes.POINTER(ptr), ctypes.c_int]),
+        ("PQgetResult", ptr, [ptr]),
+        ("PQfreemem", None, [ptr]),
+    ]:
+        fn = getattr(lib, name)
+        fn.restype, fn.argtypes = restype, argtypes
+    return lib
+
+
+def _failure(message: bytes) -> RuntimeError:
+    return RuntimeError(message.decode("utf-8", "replace").strip())
+
+
+def _copy_out(lib, conn, stmt: str) -> bytes:
+    """Run one ``COPY … TO STDOUT`` on ``conn`` and return its bytes;
+    a failure at the start or in mid-stream raises with libpq's
+    message. Every buffer and result is freed."""
+    res = lib.PQexec(conn, stmt.encode("utf-8"))
+    started = lib.PQresultStatus(res) == _PGRES_COPY_OUT
+    lib.PQclear(res)
+    if not started:
+        raise _failure(lib.PQerrorMessage(conn))
+    chunks = []
+    buf = ctypes.c_void_p()
+    while (n := lib.PQgetCopyData(conn, ctypes.byref(buf), 0)) > 0:
+        chunks.append(ctypes.string_at(buf, n))
+        lib.PQfreemem(buf)
+    # -1: the COPY ended, -2: it failed; the final result says which
+    ok = n == -1
+    while res := lib.PQgetResult(conn):
+        ok = ok and lib.PQresultStatus(res) == _PGRES_COMMAND_OK
+        lib.PQclear(res)
+    if not ok:
+        raise _failure(lib.PQerrorMessage(conn))
+    return b"".join(chunks)
+
+
 def run_sql(
     sql: str,
     database: str,
@@ -69,21 +130,29 @@ def run_sql(
 ) -> list[list[str | None]]:
     """Run ``sql`` and return rows as lists of strings (None for SQL
     NULL). ``host`` may be a unix-socket directory or a hostname; with
-    no ``port``, psql's default applies (``PGPORT``, else 5432). The
-    password travels via the ``PGPASSWORD`` environment variable,
-    never argv (argv is world-readable in /proc).
+    no ``port`` or ``password``, libpq's defaults apply (``PGPORT``,
+    else 5432; ``PGPASSWORD``, ``.pgpass``). The client encoding is
+    UTF-8 whatever ``PGCLIENTENCODING`` says. One connection per call,
+    closed before returning; a connection or query failure raises
+    ``RuntimeError`` with libpq's message.
     Uses COPY *text* format: tab-delimited, backslash-escaped, with
     an unambiguous ``\\N`` NULL (a data value of those two characters
     arrives escaped as ``\\\\N``)."""
-    copy_stmt = f"COPY ({sql.rstrip().rstrip(';')}) TO STDOUT (FORMAT text)"
-    cmd = ["psql", "-h", host]
-    if port is not None:
-        cmd += ["-p", str(port)]
-    cmd += ["-U", user, "-d", database, "-X", "-q", "-v", "ON_ERROR_STOP=1", "-c", copy_stmt]
-    env = None
-    if password is not None:
-        env = dict(os.environ, PGPASSWORD=password)
-    out = subprocess.run(cmd, check=True, capture_output=True, text=True, env=env).stdout
+    params = {"host": host, "port": port, "user": user, "password": password,
+              "dbname": database, "client_encoding": "UTF8"}
+    params = {k.encode(): str(v).encode("utf-8") for k, v in params.items() if v is not None}
+    keywords = (ctypes.c_char_p * (len(params) + 1))(*params, None)
+    values = (ctypes.c_char_p * (len(params) + 1))(*params.values(), None)
+    lib = _libpq()
+    # expand_dbname=0: the database name is a name, never a conninfo string
+    conn = lib.PQconnectdbParams(keywords, values, 0)
+    try:
+        if lib.PQstatus(conn) != _CONNECTION_OK:
+            raise _failure(lib.PQerrorMessage(conn))
+        copy_stmt = f"COPY ({sql.rstrip().rstrip(';')}) TO STDOUT (FORMAT text)"
+        out = _copy_out(lib, conn, copy_stmt).decode("utf-8")
+    finally:
+        lib.PQfinish(conn)
     # split on '\n' ONLY: COPY text escapes \n/\r in data, so the row
     # terminator is exactly one newline — str.splitlines() would also
     # split on U+0085/U+2028/U+2029, which COPY text does NOT escape,

@@ -34,7 +34,7 @@ table, sorted on the driver (the rows come to the driver anyway, so a
 cluster sort's sampling job and shuffle would do no useful work) and
 handed back as a local relation that both sinks read. The driver
 holds at most 5 issues per catalog column row — no more than the
-psql, mysql-CLI and fixture readers already hold there, and the CSV
+libpq, mysql-CLI and fixture readers already hold there, and the CSV
 sink renders its file there too.
 
 Semantic traps preserved (SURVEY.md §2.3): composite-FK

@@ -10,7 +10,7 @@ fresh as the replay artifact (which it also regenerates):
 1. full pytest suite → passed / skipped counts
 2. full-registry pristine replay → REPLAY_FULL_r{N}.json (n_green/n_total)
 3. bench at sf0.1 → BENCH_FULL.json totals + the r7 tide-suspect rows
-4. environment probes (mysqld) → blocked/available
+4. environment probes (mysqld, libpq) → blocked/available
 
 Usage:
     python scripts/freeze_certify.py --round 9 [--skip-suite] [--skip-bench]
@@ -44,6 +44,17 @@ def _run(cmd: list[str], timeout: int) -> tuple[int, str]:
         stdout=subprocess.PIPE, stderr=subprocess.STDOUT,
     )
     return p.returncode, p.stdout
+
+
+def _libpq_loads() -> bool:
+    """Whether the live PostgreSQL reader's client library loads."""
+    from rdbms_metadata_manager_spark.catalog import pg_live
+
+    try:
+        pg_live._libpq()
+    except OSError:
+        return False
+    return True
 
 
 def main() -> int:
@@ -139,7 +150,7 @@ def main() -> int:
             report["bench"] = _stage_error(exc)
 
     # 4. environment probes
-    report["env"] = {"mysqld": bool(shutil.which("mysqld"))}
+    report["env"] = {"mysqld": bool(shutil.which("mysqld")), "libpq": _libpq_loads()}
 
     def _ok_stage(v: object) -> bool:
         return isinstance(v, dict) and not v.get("failed")
@@ -176,7 +187,8 @@ def main() -> int:
     else:
         md.append(f"- bench: {b if isinstance(b, str) else 'STAGE FAILED: ' + str(b.get('error'))}")
     env = report["env"]
-    md.append(f"- env blocks: mysqld={'available' if env['mysqld'] else 'ABSENT'}")
+    md.append("- env blocks: " + ", ".join(
+        f"{k}={'available' if env[k] else 'ABSENT'}" for k in ("mysqld", "libpq")))
     md.append("")
     md.append("```json")
     md.append(json.dumps(report, indent=1, sort_keys=True))

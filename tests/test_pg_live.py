@@ -4,8 +4,9 @@ The reference's main workflow is: connect to a live database, reflect
 its catalog, run the 5 rules (reference app.py:123-125). This test
 provisions a REAL PostgreSQL server (binaries ship in this container;
 initdb + pg_ctl in a temp dir, unix socket, trust auth), creates the
-ecommerce_db scenario with actual DDL, reads the catalog back through
-``catalog.pg_live`` (the face SQL of ``catalog.faces``), runs
+ecommerce_db scenario with actual DDL (through ``psql``), reads the
+catalog back through ``catalog.pg_live`` (libpq in-process, the face
+SQL of ``catalog.faces``), runs
 ``detect_schema_flaws``, and checks it two ways:
 
 1. engine-vs-oracle: the DuckDB rules oracle rendered from the SAME
@@ -16,6 +17,11 @@ ecommerce_db scenario with actual DDL, reads the catalog back through
    ``order_date TIMESTAMP`` mismatches the expected 'DATETIME' —
    SQLAlchemy reflection on pg gives the reference the same result).
 
+The transport's own contract is checked here too: SQL NULL against
+the literal ``\\N``, a failure that names its cause and leaves no
+backend behind, and a UTF-8 client encoding whatever
+``PGCLIENTENCODING`` says.
+
 Skips (cleanly) when server binaries or the postgres user are absent.
 """
 
@@ -23,6 +29,7 @@ from __future__ import annotations
 
 import os
 import pwd
+import re
 import shutil
 import subprocess
 import tempfile
@@ -363,6 +370,51 @@ def test_transport_distinguishes_null_from_backslash_n(pg_host):
         pg_host,
     )
     assert rows == [[None, "\\N", "a\tb", "x\ny", ""]]
+
+
+def _other_backends(host: str) -> int:
+    """Client connections to the server, not counting the one asking."""
+    return int(pg_live.run_sql(
+        "SELECT count(*) FROM pg_stat_activity"
+        " WHERE backend_type = 'client backend' AND pid <> pg_backend_pid()",
+        "postgres", host,
+    )[0][0])
+
+
+@pytest.mark.parametrize("database,sql,cause", [
+    ("nosuchdb", "SELECT 1", 'database "nosuchdb" does not exist'),
+    ("ecommerce_db", "SELECT * FROM no_such_table", 'relation "no_such_table" does not exist'),
+    # fails after the COPY has started streaming rows: the final result
+    # carries the error
+    ("ecommerce_db", "SELECT 1 / (3 - x) FROM generate_series(1, 5) x", "division by zero"),
+])
+def test_failure_names_its_cause_and_leaks_no_connection(pg_host, database, sql, cause):
+    before = _other_backends(pg_host)
+    with pytest.raises(RuntimeError, match=re.escape(cause)):
+        pg_live.run_sql(sql, database, pg_host)
+    # a closed connection's backend exits just after the client leaves;
+    # a leaked one would stay
+    for _ in range(50):
+        if _other_backends(pg_host) == before:
+            break
+        time.sleep(0.05)
+    assert _other_backends(pg_host) == before
+
+
+def test_client_encoding_is_utf8_whatever_the_environment(pg_host, monkeypatch):
+    """Non-ASCII identifiers arrive intact with ``PGCLIENTENCODING``
+    set to an encoding that cannot hold them."""
+    _psql(pg_host, "postgres", "DROP DATABASE IF EXISTS enc_db")
+    _psql(pg_host, "postgres", "CREATE DATABASE enc_db ENCODING 'UTF8'"
+                               " LC_COLLATE 'C' LC_CTYPE 'C' TEMPLATE template0")
+    _psql(pg_host, "enc_db", 'CREATE TABLE "Café" ("prix_€" integer, "naïve" text)')
+    monkeypatch.setenv("PGCLIENTENCODING", "LATIN1")
+    rows = pg_live.run_sql(
+        "SELECT c.relname, a.attname FROM pg_attribute a JOIN pg_class c ON c.oid = a.attrelid"
+        " WHERE c.relname = 'Café' AND a.attnum > 0 ORDER BY a.attnum",
+        "enc_db", pg_host,
+    )
+    assert rows == [["Café", "prix_€"], ["Café", "naïve"]]
 
 
 def test_live_rules_match_duckdb_oracle(spark, live_catalog):
